@@ -6,6 +6,7 @@ import pytest
 
 sys.path.insert(0, "/root/repo")
 
+from weatherdatapipeline_spark.operators.text import release_scoped
 from weatherdatapipeline_spark.session import get_spark
 
 
@@ -19,3 +20,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(autouse=True)
+def _release_scoped_caches():
+    # direct operator calls enter persist_scoped's pool with no registry
+    # build to release it: every test leaves the scope empty
+    yield
+    release_scoped()

@@ -1,14 +1,11 @@
-"""Focused tests for the r14 multi-slot scoped cache
-(operators/text.py::persist_scoped).
+"""Focused tests for the per-build cache scope
+(operators/text.py::persist_scoped / release_scoped).
 
-Why these exist: the r14 optimization round changed persist_scoped from a
-single slot to a FIFO pool of ``_SCOPED_SLOTS`` live entries, because
-composite queries (minhash_recall_audit = ppjoin + minhash portable)
-register several substrates at BUILD time and the single slot evicted all
-but the last before execution. The eviction path keeps the sameSemantics
-guard from the r13 cache-release defect: unpersisting an old handle that
-is plan-identical to a live one would drop the shared CacheManager entry
-a plan-equal repeat (bench min-of-2) still reads through.
+A query build may persist several substrates before anything executes
+(minhash_recall_audit = ppjoin + minhash portable); all of them must stay
+live while the returned plan runs, and the next registered build must
+release them. Callers outside the registry own what they persist.
+The autouse fixture in conftest.py empties the pool after every test.
 """
 
 from __future__ import annotations
@@ -18,27 +15,9 @@ import pytest
 from weatherdatapipeline_spark.operators import text as T
 
 
-@pytest.fixture(autouse=True)
-def _clean_pool():
-    # isolate each test from caches left by other suites / tests
-    for df in T._live_scan_caches:
-        try:
-            df.unpersist(blocking=True)
-        except Exception:
-            pass
-    T._live_scan_caches.clear()
-    yield
-    for df in T._live_scan_caches:
-        try:
-            df.unpersist(blocking=True)
-        except Exception:
-            pass
-    T._live_scan_caches.clear()
-
-
 def test_pool_keeps_multiple_substrates_live(spark):
-    """Registering several distinct substrates must NOT evict the earlier
-    ones (the single-slot behavior this replaces) while under capacity."""
+    """Registering several distinct substrates keeps every one of them
+    live: nothing is evicted within a scope."""
     dfs = [
         T.persist_scoped(spark.range(100 + i).selectExpr("id", f"id * {i + 2} as v"))
         for i in range(3)
@@ -47,51 +26,6 @@ def test_pool_keeps_multiple_substrates_live(spark):
         df.count()  # materialize
     assert all(df.storageLevel.useMemory for df in dfs)
     assert len(T._live_scan_caches) == 3
-
-
-def test_pool_is_bounded(spark):
-    """The pool never holds more than _SCOPED_SLOTS live handles."""
-    n = T._SCOPED_SLOTS + 3
-    for i in range(n):
-        T.persist_scoped(spark.range(50 + i).selectExpr("id", f"id + {i} as w"))
-    assert len(T._live_scan_caches) == T._SCOPED_SLOTS
-    # the survivors are the newest _SCOPED_SLOTS registrations
-    assert T._live_scan_caches[-1].columns == ["id", "w"]
-
-
-def test_plan_identical_repeat_keeps_cache(spark):
-    """The r13 defect class: a plan-identical re-registration (bench
-    min-of-2 rebuilds the same query) must not lose the shared cache
-    entry when the OLD handle is evicted from the pool."""
-    build = lambda: spark.range(1000).selectExpr("id", "id * 7 as v7")  # noqa: E731
-    first = T.persist_scoped(build())
-    first.count()
-    # fill the pool with distinct plans so `first` gets evicted — but one
-    # of the newer registrations is plan-identical to it
-    second = T.persist_scoped(build())
-    for i in range(T._SCOPED_SLOTS):
-        T.persist_scoped(spark.range(10 + i).selectExpr(f"id + {i} as u"))
-    assert first not in T._live_scan_caches
-    assert second not in T._live_scan_caches
-    # the sameSemantics guard only protects while a plan-equal handle is
-    # LIVE; once both are evicted the entry is released (no leak) — so
-    # assert the guarded window: re-register and confirm the data is
-    # still served from cache rather than silently dropped mid-pool.
-    third = T.persist_scoped(build())
-    assert third.count() == 1000
-    assert third.storageLevel.useMemory
-
-
-def test_eviction_releases_distinct_plans(spark):
-    """Evicted handles with no live plan-equal twin are truly unpersisted
-    (the pool is a bound, not a leak)."""
-    old = T.persist_scoped(spark.range(77).selectExpr("id as only_here"))
-    old.count()
-    assert old.storageLevel.useMemory
-    for i in range(T._SCOPED_SLOTS + 1):
-        T.persist_scoped(spark.range(5 + i).selectExpr(f"id * {i + 2} as z"))
-    assert old not in T._live_scan_caches
-    assert not old.storageLevel.useMemory
 
 
 def test_release_scoped_empties_pool(spark):
@@ -103,30 +37,75 @@ def test_release_scoped_empties_pool(spark):
     assert not df.storageLevel.useMemory
 
 
-def test_fresh_scope_releases_only_at_top_level(spark):
-    """The registry wrapper must clear the pool once per top-level query
-    build and NOT when a query composes another registry entry."""
+def test_registered_build_releases_previous_build_only(spark, monkeypatch):
+    """A registered build starts by releasing the previous build's
+    substrates, and its own stay live after it returns (its plan runs
+    later)."""
     from weatherdatapipeline_spark import queries as Q
 
-    calls = []
+    monkeypatch.setattr(Q, "QUERIES", {})
+    monkeypatch.setattr(Q, "ORACLES", {})
+    built = {}
 
-    def inner(s, d):
-        calls.append(("inner", len(T._live_scan_caches)))
-        T.persist_scoped(s.range(7).selectExpr("id as i_inner"))
-        return s.range(1)
+    def scope_first(s, d):
+        built["first"] = T.persist_scoped(s.range(41).selectExpr("id as sc_first"), eager=True)
+        return built["first"]
 
-    def outer(s, d):
-        T.persist_scoped(s.range(9).selectExpr("id as i_outer"))
-        wrapped_inner(s, d)  # nested registry-style call
-        calls.append(("outer_after_inner", len(T._live_scan_caches)))
-        return s.range(1)
+    def scope_second(s, d):
+        a = T.persist_scoped(s.range(42).selectExpr("id as sc_a"), eager=True)
+        b = T.persist_scoped(s.range(43).selectExpr("id as sc_b"), eager=True)
+        built["second"] = (a, b)
+        return a.crossJoin(b)
 
-    wrapped_inner = Q._fresh_scope(inner)
-    wrapped_outer = Q._fresh_scope(outer)
+    Q.register(scope_first, "SELECT 1")
+    Q.register(scope_second, None)
+    assert Q.ORACLES == {"scope_first": "SELECT 1"}
+    with pytest.raises(ValueError, match="already registered"):
+        Q.register(scope_first, None)
 
-    # pre-populate the pool: a top-level call must clear it...
-    T.persist_scoped(spark.range(3).selectExpr("id as stale"))
-    wrapped_outer(spark, "unused")
-    # ...but the nested call must NOT have cleared the outer's substrate
-    assert calls[0] == ("inner", 1)  # outer's entry still live
-    assert calls[1] == ("outer_after_inner", 2)  # outer + inner entries
+    Q.QUERIES["scope_first"](spark, "unused")
+    assert built["first"].storageLevel.useMemory
+    out = Q.QUERIES["scope_second"](spark, "unused")
+    assert not built["first"].storageLevel.useMemory
+    assert all(df.storageLevel.useMemory for df in built["second"])
+    assert T._live_scan_caches == list(built["second"])
+    assert out.count() == 42 * 43
+
+
+def test_streaming_corpus_ingest_leaves_no_cache(spark, tmp_path):
+    """The ingest sink releases everything it persisted per micro-batch:
+    once the stream stops, no persisted RDD and no scoped cache is left."""
+    from weatherdatapipeline_spark.streaming.jobs import streaming_corpus_ingest
+
+    def persisted_rdds():
+        # localCheckpoint blocks (connected_components' lineage cuts) are
+        # freed by the ContextCleaner once their plan is collected; a
+        # persist() is held until someone unpersists it
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {k for k in rdds.keySet() if not rdds.get(k).rdd().isLocallyCheckpointed()}
+
+    before = persisted_rdds()
+    src = str(tmp_path / "src")
+    schema = "doc_id LONG, text STRING"
+    for batch in (
+        [(1, "the quick brown fox jumps over the lazy dog"), (2, "spark engines run jobs")],
+        [(3, "the quick brown fox jumps over the lazy dog"), (4, "zzz yyy xxx www vvv")],
+    ):
+        spark.createDataFrame(batch, schema).coalesce(1).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    q = streaming_corpus_ingest(
+        stream,
+        str(tmp_path / "corpus"),
+        str(tmp_path / "index"),
+        checkpoint=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination()
+    q.stop()
+    assert {r["doc_id"] for r in spark.read.parquet(str(tmp_path / "corpus")).collect()} == {
+        1,
+        2,
+        4,
+    }
+    assert T._live_scan_caches == []
+    assert persisted_rdds() - before == set()

@@ -199,14 +199,14 @@ def test_pq_adc_exact_on_codebook_points(spark, tmp_path):
     """Corpus vectors that ARE codebook entries quantize losslessly, so
     ADC distance equals exact distance and the exact top-10 is the ADC
     top-10: every row must carry exact_hit = 1 in rank order."""
-    from weatherdatapipeline_spark.queries import pq_adc_topk_query
+    from weatherdatapipeline_spark.queries import pq_adc_topk
 
     vecs = [(i, [float(i)] * 64, 0) for i in range(16)]
     vecs += [(16 + j, [float(1 + j)] * 64, 0) for j in range(4)]  # copies of 1..4
     spark.createDataFrame(
         vecs, "vec_id LONG, embedding ARRAY<DOUBLE>, label LONG"
     ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-    got = pq_adc_topk_query(spark, str(tmp_path)).collect()
+    got = pq_adc_topk(spark, str(tmp_path)).collect()
     assert [r["rank"] for r in got] == list(range(1, 11))
     # dist(0 -> value-v vector) = 64 v^2; ties (seed i, copy of i) break by id
     assert [r["vec_id"] for r in got] == [1, 16, 2, 17, 3, 18, 4, 19, 5, 6]

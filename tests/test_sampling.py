@@ -156,6 +156,39 @@ def test_cc_star_long_chain(spark):
     assert got == {n: 0 for n in range(401)}
 
 
+def _chains_and_cycles(rng, n_components):
+    """Random graph: disjoint chains and cycles of 2-7 nodes under a
+    random relabeling (so component minima sit anywhere along a chain),
+    edges emitted in random direction and order; plus the union-find
+    labels (node -> component min) as ground truth."""
+    ids = rng.sample(range(10_000), n_components * 7)
+    edges, truth, pos = [], {}, 0
+    for _ in range(n_components):
+        size = rng.randint(2, 7)
+        nodes = ids[pos : pos + size]
+        pos += size
+        links = list(zip(nodes, nodes[1:]))
+        if size > 2 and rng.random() < 0.5:
+            links.append((nodes[-1], nodes[0]))  # close the cycle
+        edges += [(a, b) if rng.random() < 0.5 else (b, a) for a, b in links]
+        truth.update({n: min(nodes) for n in nodes})
+    rng.shuffle(edges)
+    return edges, truth
+
+
+def test_cc_star_two_round_window_matches_min_label_random(spark):
+    """Property: star CC checks convergence only every second round; on
+    random chains-plus-cycles graphs its labels still equal min-label
+    propagation and union-find (a premature stop would leave some node
+    on a non-minimal label)."""
+    import random
+
+    edges, truth = _chains_and_cycles(random.Random(2024), 40)
+    star = _cc_star(spark, edges)
+    assert star == _cc(spark, edges)
+    assert star == truth
+
+
 def test_dedup_keep_canonical_planted(spark):
     docs = spark.createDataFrame(
         [(i, f"t{i}") for i in range(1, 8)], "doc_id BIGINT, text STRING"

@@ -84,9 +84,11 @@ def test_cosine_near_duplicates_finds_planted_pair(spark):
 
 
 def test_cosine_zero_vector_is_null_both_impls(spark):
-    """An all-zero vector must yield NULL cosine on BOTH paths — under
-    ANSI mode (Spark 4 default) an unguarded division would instead crash
-    the whole query on the first degenerate embedding."""
+    """An all-zero vector must yield NULL cosine on the HOF reference, the
+    Arrow scorer, and the anchor-matrix UDF (whose NaN elements sit inside
+    an array; a NaN ranks above every cosine under desc, a NULL last) —
+    under ANSI mode (Spark 4 default) an unguarded division would instead
+    crash the whole query on the first degenerate embedding."""
     from pyspark.sql import functions as F
 
     from weatherdatapipeline_spark.operators import similarity as S
@@ -96,15 +98,22 @@ def test_cosine_zero_vector_is_null_both_impls(spark):
         "vec_id long, embedding array<float>",
     )
     q = F.array(F.lit(1.0), F.lit(0.0), F.lit(0.0))
-    for impl in ("hof", "arrow"):
+    for impl, cos in (("hof", S.cosine_similarity_hof), ("arrow", S.cosine_similarity)):
         rows = {
             r["vec_id"]: r["c"]
-            for r in df.select(
-                "vec_id", S.cosine_similarity(F.col("embedding"), q, impl=impl).alias("c")
-            ).collect()
+            for r in df.select("vec_id", cos(F.col("embedding"), q).alias("c")).collect()
         }
         assert rows[0] is None, f"{impl}: zero vector should be NULL"
         assert abs(rows[1] - 1 / 3) < 1e-9
+
+    # anchors: a unit anchor and a zero-norm anchor
+    udf = S.cosine_to_anchors_udf([[1.0, 0.0, 0.0], [0.0, 0.0, 0.0]])
+    rows = {
+        r["vec_id"]: r["c"]
+        for r in df.select("vec_id", udf(F.col("embedding")).alias("c")).collect()
+    }
+    assert rows[0] == [None, None], "anchors: zero vector should be NULL"
+    assert abs(rows[1][0] - 1 / 3) < 1e-9 and rows[1][1] is None
 
 
 def test_assign_to_centroids_argmax_and_ties(spark):

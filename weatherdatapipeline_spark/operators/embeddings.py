@@ -19,93 +19,90 @@ and makes LSH hyperplane signs exact rather than norm-biased.
 
 from __future__ import annotations
 
+import numpy as _np
+import pandas as _pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf as _pandas_udf
+from pyspark.sql.types import (
+    ArrayType as _ArrayT,
+    DoubleType as _DoubleT,
+    IntegerType as _IntT,
+    StructField as _Field,
+    StructType as _StructT,
+)
 
 from .litfast import darray, darray2
 
 INT8_MAX = 127
 
-try:  # Arrow variants: measured at sf0.1 x256 (512k rows, 64 dims —
-    # SCALE.md "HOF vs Arrow") quantize/normalize are a tie with the HOF
-    # path (output-array construction dominates both), so the JVM path
-    # stays the default here; the variants remain for wider vectors,
-    # where Arrow's per-batch (not per-element) overhead wins. float64 op
-    # order is kept identical so both paths agree bitwise and the oracle
-    # hashes are unchanged either way.
-    import numpy as _np
-    import pandas as _pd
-    from pyspark.sql.functions import pandas_udf as _pandas_udf
-    from pyspark.sql.types import (
-        ArrayType as _ArrayT,
-        DoubleType as _DoubleT,
-        IntegerType as _IntT,
-        StructField as _Field,
-        StructType as _StructT,
-    )
+# Arrow variants: measured at sf0.1 x256 (512k rows, 64 dims —
+# SCALE.md "HOF vs Arrow") quantize/normalize are a tie with the HOF
+# path (output-array construction dominates both), so the JVM path
+# stays the default here; the variants remain for wider vectors,
+# where Arrow's per-batch (not per-element) overhead wins. float64 op
+# order is kept identical so both paths agree bitwise and the oracle
+# hashes are unchanged either way.
+#
+# Return types are DataType OBJECTS, not DDL strings: a DDL string is
+# parsed by the JVM at decoration time, which raises
+# SESSION_OR_CONTEXT_NOT_EXISTS when this module is imported before
+# the SparkSession exists (bench.py / check_oracle import order).
+@_pandas_udf(_ArrayT(_DoubleT()))
+def _l2_normalize_arrow(v: _pd.Series, eps: _pd.Series) -> _pd.Series:
+    A = _np.stack(v.to_numpy()).astype(_np.float64)
+    acc = _np.zeros(A.shape[0])
+    for i in range(A.shape[1]):  # sequential fold == HOF sum order
+        acc = acc + A[:, i] * A[:, i]
+    n = _np.maximum(_np.sqrt(acc), eps.to_numpy())
+    return _pd.Series(list(A / n[:, None]))
 
-    # return types as DataType OBJECTS, not DDL strings: a DDL string is
-    # parsed by the JVM at decoration time, which raises
-    # SESSION_OR_CONTEXT_NOT_EXISTS when this module is imported before
-    # the SparkSession exists (bench.py / check_oracle import order) and
-    # silently knocked HAVE_ARROW to False — every "arrow-default" path
-    # was quietly running the interpreted HOF fallback.
+
+@_pandas_udf(_StructT([_Field("scale", _DoubleT()), _Field("qvec", _ArrayT(_IntT()))]))
+def _quantize_arrow(v: _pd.Series) -> _pd.DataFrame:
+    A = _np.stack(v.to_numpy()).astype(_np.float64)
+    scale = _np.abs(A).max(axis=1) / INT8_MAX
+    safe = _np.maximum(scale, 1e-30)[:, None]
+    x = A / safe
+    # SQL ROUND is HALF_UP (away from zero); np.round is half-to-even
+    q = _np.sign(x) * _np.floor(_np.abs(x) + 0.5)
+    # NaN mirror of the JVM clamp: NaN compares greatest there, so
+    # greatest(NaN,-127)=NaN then least(NaN,127)=127; np.clip would
+    # PROPAGATE NaN and astype(int32) turns it into garbage
+    q = _np.where(_np.isnan(q), float(INT8_MAX), q)
+    q = _np.clip(q, -INT8_MAX, INT8_MAX).astype(_np.int32)
+    return _pd.DataFrame({"scale": scale, "qvec": list(q)})
+
+
+def _sq_dists_arrow_udf(centroids: list[list[float]]):
+    """Factory: pandas UDF computing squared L2 distance from a vector
+    column to EVERY literal centroid at once (one Arrow batch pass,
+    k*d multiply-adds vectorized over rows).
+
+    Accumulates per-dimension SEQUENTIALLY (``acc = acc + t*t`` over
+    dims 0..d-1) so the float64 op sequence is bit-identical to the
+    interpreted HOF left fold in ``_sq_dist_to_literal`` — the oracle
+    hash cannot tell the two paths apart (asserted in
+    tests/test_embeddings.py). Measured ~3x faster than the fold at
+    k=8, d=64 (the HOF lambda evaluates interpreted per element;
+    this path is one numpy op per dim per centroid)."""
+    C = [_np.asarray(c, dtype=_np.float64) for c in centroids]
+
     @_pandas_udf(_ArrayT(_DoubleT()))
-    def _l2_normalize_arrow(v: _pd.Series, eps: _pd.Series) -> _pd.Series:
-        A = _np.stack(v.to_numpy()).astype(_np.float64)
-        acc = _np.zeros(A.shape[0])
-        for i in range(A.shape[1]):  # sequential fold == HOF sum order
-            acc = acc + A[:, i] * A[:, i]
-        n = _np.maximum(_np.sqrt(acc), eps.to_numpy())
-        return _pd.Series(list(A / n[:, None]))
+    def dists(v: _pd.Series) -> _pd.Series:
+        X = _np.stack(v.to_numpy()).astype(_np.float64)
+        n, d = X.shape
+        out = _np.empty((n, len(C)), dtype=_np.float64)
+        for j, c in enumerate(C):
+            acc = _np.zeros(n, dtype=_np.float64)
+            for i in range(d):
+                t = X[:, i] - c[i]
+                acc = acc + t * t
+            out[:, j] = acc
+        return _pd.Series(list(out))
 
-    @_pandas_udf(_StructT([_Field("scale", _DoubleT()), _Field("qvec", _ArrayT(_IntT()))]))
-    def _quantize_arrow(v: _pd.Series) -> _pd.DataFrame:
-        A = _np.stack(v.to_numpy()).astype(_np.float64)
-        scale = _np.abs(A).max(axis=1) / INT8_MAX
-        safe = _np.maximum(scale, 1e-30)[:, None]
-        x = A / safe
-        # SQL ROUND is HALF_UP (away from zero); np.round is half-to-even
-        q = _np.sign(x) * _np.floor(_np.abs(x) + 0.5)
-        # NaN mirror of the JVM clamp: NaN compares greatest there, so
-        # greatest(NaN,-127)=NaN then least(NaN,127)=127; np.clip would
-        # PROPAGATE NaN and astype(int32) turns it into garbage
-        q = _np.where(_np.isnan(q), float(INT8_MAX), q)
-        q = _np.clip(q, -INT8_MAX, INT8_MAX).astype(_np.int32)
-        return _pd.DataFrame({"scale": scale, "qvec": list(q)})
+    return dists
 
-    def _sq_dists_arrow_udf(centroids: list[list[float]]):
-        """Factory: pandas UDF computing squared L2 distance from a vector
-        column to EVERY literal centroid at once (one Arrow batch pass,
-        k*d multiply-adds vectorized over rows).
-
-        Accumulates per-dimension SEQUENTIALLY (``acc = acc + t*t`` over
-        dims 0..d-1) so the float64 op sequence is bit-identical to the
-        interpreted HOF left fold in ``_sq_dist_to_literal`` — the oracle
-        hash cannot tell the two paths apart (asserted in
-        tests/test_embeddings.py). Measured ~3x faster than the fold at
-        k=8, d=64 (the HOF lambda evaluates interpreted per element;
-        this path is one numpy op per dim per centroid)."""
-        C = [_np.asarray(c, dtype=_np.float64) for c in centroids]
-
-        @_pandas_udf(_ArrayT(_DoubleT()))
-        def dists(v: _pd.Series) -> _pd.Series:
-            X = _np.stack(v.to_numpy()).astype(_np.float64)
-            n, d = X.shape
-            out = _np.empty((n, len(C)), dtype=_np.float64)
-            for j, c in enumerate(C):
-                acc = _np.zeros(n, dtype=_np.float64)
-                for i in range(d):
-                    t = X[:, i] - c[i]
-                    acc = acc + t * t
-                out[:, j] = acc
-            return _pd.Series(list(out))
-
-        return dists
-
-    HAVE_ARROW = True
-except Exception:  # pragma: no cover - numpy/pandas absent
-    HAVE_ARROW = False
 
 # benchmarked tie at 64 dims (SCALE.md) -> keep the no-Python JVM path;
 # pass impl="arrow" per-call for wide vectors
@@ -132,7 +129,7 @@ def l2_normalize(vec: Column, eps: float = 1e-12, impl: str | None = None) -> Co
     pandas UDF instead (wins as vectors get wider, SCALE.md)."""
     if isinstance(vec, str):
         vec = F.col(vec)
-    if (impl or VECTOR_IMPL) == "arrow" and HAVE_ARROW:
+    if (impl or VECTOR_IMPL) == "arrow":
         return _l2_normalize_arrow(vec, F.lit(float(eps)))
     n = F.greatest(l2_norm(vec), F.lit(float(eps)))
     return F.transform(vec, lambda x: x.cast("double") / n)
@@ -181,7 +178,7 @@ def quantize_int8(
     impl="arrow" per call for one vectorized pandas UDF emitting a
     (scale, qvec) struct (wins as vectors get wider, SCALE.md).
     """
-    if (impl or VECTOR_IMPL) == "arrow" and HAVE_ARROW:
+    if (impl or VECTOR_IMPL) == "arrow":
         s = _quantize_arrow(F.col(vec_col))
         return embeddings.select(
             F.col(id_col),
@@ -720,11 +717,8 @@ def _lloyd_state(
         # Arrow path: one vectorized batch pass over all k centroids;
         # bit-identical float64 op order to the HOF fold (see
         # _sq_dists_arrow_udf), so the choice of path never shows up in
-        # result hashes. Falls back to the pure-JVM fold without numpy.
-        if HAVE_ARROW:
-            dists = _sq_dists_arrow_udf(cents)(F.col(vec_col))
-        else:  # pragma: no cover - numpy/pandas absent
-            dists = F.array(*[_sq_dist_to_literal(vec_col, c) for c in cents])
+        # result hashes.
+        dists = _sq_dists_arrow_udf(cents)(F.col(vec_col))
         staged = embeddings.select(id_col, vec_col, dists.alias("_dists"))
         return staged.select(
             F.col(id_col),

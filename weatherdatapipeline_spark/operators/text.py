@@ -29,34 +29,22 @@ PUNCT_CLASS = r"[^.,;:!?]"
 
 
 _live_scan_caches: list = []
-_SCOPED_SLOTS = 6
 
 
 def persist_scoped(df, eager: bool = False):
-    """Bounded multi-slot scoped cache for an expensive exploded/hashed
-    table that feeds multiple plan branches of ONE operator call
-    (signatures + verify sets, per-doc counts + probe joins, df-cut +
-    self-join). A bare .persist() leaks — CacheManager holds the entry
-    until an explicit unpersist — so the pool is FIFO-bounded at
-    ``_SCOPED_SLOTS`` live entries; recompute from lineage remains
-    possible if an older returned DataFrame is re-executed.
+    """Persist an expensive exploded/hashed table that feeds several plan
+    branches of one query build (signatures + verify sets, per-doc counts
+    + probe joins, df-cut + self-join) and enter it in the build's cache
+    scope. A bare .persist() leaks — CacheManager holds the entry until
+    an explicit unpersist — so every entry lives until the next
+    ``release_scoped()``, which the query registry calls at the start of
+    each build (queries.py::register). A composite query such as
+    minhash_recall_audit registers several substrates before executing
+    anything; all of them stay live for its whole execution.
 
-    Multi-slot (r14, guide §1/§5): composite queries call several scoped
-    operators before executing anything — minhash_recall_audit builds
-    ppjoin (caches the hashed-shingle table + the set aggregate) AND the
-    minhash pipeline (caches the signature aggregate) and only then runs
-    the combined plan. A single slot meant each later call evicted the
-    earlier substrate at BUILD time, so at execution every branch of the
-    truth side recomputed its md5 shingle explode from scratch (~50 s of
-    task CPU re-spent per branch at sf0.1). Six slots keep every
-    substrate of the widest composite query live while still hard-
-    bounding what CacheManager can hold.
-
-    Eviction keeps the sameSemantics guard from the r13 cache-release
-    defect (VERDICT r13 "what's wrong" item 2): CacheManager is keyed on
-    the canonicalized plan, so unpersisting an old handle that is
-    plan-identical to a LIVE one would silently drop the shared entry a
-    plan-equal repeat (bench min-of-2) reads through — skip those.
+    A caller outside the registry (a streaming sink, a direct operator
+    call) owns what it persists: it either releases the scope itself or
+    persists and unpersists directly.
 
     Owned here (text) so dedup/sampling/text operators share one pool
     without an import cycle."""
@@ -72,26 +60,14 @@ def persist_scoped(df, eager: bool = False):
         # parallelism; every consumer then reads the finished cache.
         out.count()
     _live_scan_caches.append(out)
-    while len(_live_scan_caches) > _SCOPED_SLOTS:
-        old = _live_scan_caches.pop(0)
-        try:
-            if any(old.sameSemantics(live) for live in _live_scan_caches):
-                continue  # entry still owned by a newer plan-equal handle
-            old.unpersist(blocking=False)
-        except Exception:
-            pass  # e.g. its SparkSession was stopped between calls
     return out
 
 
 def release_scoped() -> None:
-    """Drop every live scoped cache. Called at each top-level query
-    build (queries.py wraps the registry) so one query's substrates
-    never occupy storage memory — or survive as implicit cross-run
-    state — while a DIFFERENT query executes. The r14 ladder measured
-    the residue: with six substrates lingering, unrelated statistical
-    queries ran 0.4-0.9 s slower. Within a query the pool still
-    deduplicates every shared branch; across queries each run computes
-    from the parquet inputs alone."""
+    """Drop every scoped cache. Called at the start of each registered
+    query build, so one query's substrates never occupy storage memory —
+    or survive as implicit cross-run state — while a DIFFERENT query
+    executes. Tolerates handles whose SparkSession was stopped."""
     while _live_scan_caches:
         old = _live_scan_caches.pop()
         try:

@@ -78,24 +78,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Read the testdata star schema; returns {name: DataFrame}.
-
-    Parquet scans get predicate pushdown + column pruning from Catalyst for
-    free; callers must still select/filter early so the pruning has
-    something to push.
-    """
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}

@@ -357,8 +357,12 @@ def streaming_corpus_ingest(
             index = minhash_band_index(
                 batch_df.limit(0), id_col, text_col
             )  # empty, right schema
+        # the sink owns the batch's band index: built and persisted here,
+        # released with `novel` once this batch is written, so no cache
+        # outlives its micro-batch
+        batch_index = minhash_band_index(batch_df, id_col, text_col).persist()
         novel, updated = dedup_incremental_neardup(
-            batch_df, index, id_col, text_col
+            batch_df, index, id_col, text_col, batch_index=batch_index
         )
         novel = novel.persist()
         try:
@@ -374,6 +378,7 @@ def streaming_corpus_ingest(
                 new_rows.write.mode("append").parquet(index_path)
         finally:
             novel.unpersist()
+            batch_index.unpersist()
 
     writer = doc_stream.writeStream.foreachBatch(sink)
     if checkpoint:
