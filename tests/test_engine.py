@@ -66,6 +66,15 @@ def test_predict_does_not_leak_cached_blocks(spark, engine):
     assert after <= before, f"leaked cached RDDs: {after - before}"
 
 
+def test_score_latest_plans_top_k(engine):
+    """The latest-N scan stays a top-K: one projection for the event-time
+    features above ``orderBy(...).limit(n)``, so Spark plans
+    TakeOrderedAndProject, not a range sort of the whole raw table."""
+    plan = engine._score_latest(100)._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan
+    assert "rangepartitioning" not in plan
+
+
 def test_predict_without_model_raises(spark, tmp_path_factory):
     eng = WeatherEngine(spark, str(tmp_path_factory.mktemp("cold")))
     eng.run_etl()

@@ -27,6 +27,25 @@ def test_time_series_splits_expanding():
     assert splits[-1][1] == 60  # covers the tail
 
 
+def test_time_series_splits_skip_empty_folds_like_row_filters():
+    """The folds train() skips without a Spark job are exactly those whose
+    ``_row`` range filters select no row of 1..n."""
+    for n in range(41):
+        rows = range(1, n + 1)
+        for n_splits in range(1, 6):
+            fold = n // (n_splits + 1)
+            raw = [
+                (te, min(te + fold, n))
+                for te in (fold * k + n % (n_splits + 1) for k in range(1, n_splits + 1))
+            ]
+            non_empty = [
+                (te, ve)
+                for te, ve in raw
+                if any(r <= te for r in rows) and any(te < r <= ve for r in rows)
+            ]
+            assert time_series_splits(n, n_splits) == non_empty, (n, n_splits)
+
+
 def test_metrics_known_values(spark):
     df = spark.createDataFrame(
         [(1.0, 2.0), (3.0, 3.0), (5.0, 1.0)], "y double, yhat double"
@@ -94,9 +113,53 @@ def test_predict_appends_columns_keeps_warmup_rows(trained):
     assert preds.count() == weather.count()  # inference keeps ALL rows (J1-free)
     n_null = preds.filter(F.col("pred_temperature").isNull()).count()
     assert n_null == 10 * 3  # per city: 3 lag-warm-up rows unscorable
+    assert preds.filter(F.col("pred_condition").isNull()).count() == n_null
     scored = preds.filter(F.col("pred_temperature").isNotNull())
     conditions = {r["pred_condition"] for r in scored.select("pred_condition").distinct().collect()}
     assert conditions <= {"Clear", "Clouds", "Rain", "Mist", "Thunderstorm"}
+
+
+def test_predict_one_row_per_input_row_with_duplicate_poll(trained):
+    """A repeated (city, timestamp) poll stays one output row per input row
+    (a left join of the keys back onto the predictions multiplied it)."""
+    models, weather = trained
+    last = weather.orderBy(F.desc("timestamp"), "city").limit(1)
+    dup = weather.unionByName(last)
+    preds = predict(models, dup)
+    assert preds.count() == dup.count() == weather.count() + 1
+    assert preds.filter(F.col("pred_temperature").isNull()).count() == 10 * 3
+
+
+def test_serve_onehots_match_train(trained):
+    """No train/serve skew: for the same rows, the one-hot columns inference
+    aligns to the model equal the ones training fitted on — including the
+    calendar ones (hour_*/dayofweek_*), which must not be filled with False
+    for lack of stored hour/dayofweek categories."""
+    from weatherdatapipeline_spark.operators.features import (
+        ONE_HOT_COLS,
+        align_features,
+        engineer_features,
+    )
+
+    models, weather = trained
+    assert set(models.categories) == set(ONE_HOT_COLS)
+    prefixes = tuple(f"{c}_" for c in ONE_HOT_COLS)
+    onehots = [c for c in models.feature_cols if c.startswith(prefixes)]
+    assert any(c.startswith("hour_") for c in onehots)
+    cfg = models.feature_config
+    train_side, train_cols = engineer_features(weather, inference=False, **cfg)
+    assert train_cols == models.feature_cols
+    serve_side, _ = engineer_features(
+        weather, inference=True, categories=models.categories, **cfg
+    )
+    serve_side = align_features(serve_side, models.feature_cols)
+    keys = ["city", "timestamp"]
+    t = {tuple(r[k] for k in keys): r for r in train_side.select(*keys, *onehots).collect()}
+    s = {tuple(r[k] for k in keys): r for r in serve_side.select(*keys, *onehots).collect()}
+    assert t and set(t) <= set(s)
+    assert sum(r[c] for r in t.values() for c in onehots if c.startswith("hour_")) > 0
+    for key, row in t.items():
+        assert row.asDict() == s[key].asDict(), key
 
 
 def test_logistic_regression_alternative(spark, tmp_path):
@@ -201,3 +264,71 @@ def test_get_stage_falls_back_to_latest(tmp_path, trained):
     reg.log("m", models, params={})
     # nothing in Production → latest version (predict.py:33-43 fallback)
     assert reg.get_stage("m", "Production").version == 1
+
+
+def _job_ids(spark) -> set:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+def _rows(preds) -> list:
+    return sorted(preds.collect(), key=lambda r: (r["city"], r["timestamp"]))
+
+
+def test_registry_memo(tmp_path, spark, trained):
+    """Each version is read from disk at most once per registry: ``log``
+    seeds the memo, ``delete`` drops it, a new registry reads from disk."""
+    import dataclasses
+
+    models, weather = trained
+    root = str(tmp_path / "memo")
+    reg = LocalRegistry(root)
+    reg.log("m", models, params={})
+    before = _job_ids(spark)
+    loaded = reg.load(spark, reg.latest("m"))
+    assert _job_ids(spark) - before == set()
+    assert loaded.regressor is models.regressor
+
+    # a fresh registry on the same root loads from disk (Spark jobs) and
+    # scores the same rows
+    fresh = LocalRegistry(root)
+    before = _job_ids(spark)
+    from_disk = fresh.load(spark, fresh.latest("m"))
+    assert _job_ids(spark) - before
+    assert from_disk.regressor is not models.regressor
+    assert _rows(predict(from_disk, weather)) == _rows(predict(models, weather))
+
+    # delete + re-log of v1: load serves the new models, not the memo
+    reg.delete("m")
+    relogged = dataclasses.replace(
+        models,
+        regressor=from_disk.regressor,
+        classifier=from_disk.classifier,
+        label_indexer=from_disk.label_indexer,
+    )
+    assert reg.log("m", relogged, params={}).version == 1
+    again = reg.load(spark, reg.latest("m"))
+    assert again.regressor is from_disk.regressor
+    assert again.classifier is from_disk.classifier
+
+
+def test_registry_entry_without_calendar_categories_loads(tmp_path, spark, trained):
+    """meta.json written when only city/country categories were stored
+    still loads and scores."""
+    import json
+    import os
+
+    models, weather = trained
+    reg = LocalRegistry(str(tmp_path / "old"))
+    mv = reg.log("m", models, params={})
+    meta = os.path.join(mv.path, "meta.json")
+    with open(meta) as f:
+        entry = json.load(f)
+    entry["categories"] = {k: entry["categories"][k] for k in ("city", "country")}
+    with open(meta, "w") as f:
+        json.dump(entry, f)
+    fresh = LocalRegistry(str(tmp_path / "old"))
+    loaded = fresh.load(spark, fresh.latest("m"))
+    assert set(loaded.categories) == {"city", "country"}
+    preds = predict(loaded, weather)
+    assert preds.count() == weather.count()
+    assert preds.filter(F.col("pred_temperature").isNotNull()).count() > 0

@@ -14,20 +14,30 @@ Mapping (SURVEY.md §3.2):
 - feature-schema artifact (training.py:105,:129) → feature_cols list in
   the registry entry; inference realigns with align_features
 
-Scale: training data flows through ONE VectorAssembler plan; CV folds are
-filters over a row_number column — no per-fold shuffles. RF fits are the
-dominant cost and parallelize in the JVM.
+Scale: categories are discovered once, in one job; training data flows
+through ONE VectorAssembler plan; CV folds are row_number range filters —
+no per-fold shuffles or emptiness probes. RF fits are the dominant cost and
+parallelize in the JVM. Inference is one scoring pass, no key join.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.features import engineer_features
+from ..operators.features import (
+    DEFAULT_LAGS,
+    DEFAULT_ROLLING,
+    ONE_HOT_COLS,
+    align_features,
+    discover_categories,
+    engineer_features,
+    with_calendar,
+)
 
 
 def with_time_order(df: DataFrame, tiebreaker: str | None = None) -> DataFrame:
@@ -43,13 +53,15 @@ def with_time_order(df: DataFrame, tiebreaker: str | None = None) -> DataFrame:
 def time_series_splits(n_rows: int, n_splits: int = 5) -> list[tuple[int, int]]:
     """sklearn TimeSeriesSplit fold boundaries: expanding train prefix
     [1, train_end], validation chunk (train_end, val_end]. Returns row
-    ranges (1-based, inclusive) as (train_end, val_end)."""
+    ranges (1-based, inclusive) as (train_end, val_end), leaving out the
+    folds whose train or validation range holds no row of 1..n_rows."""
     fold = n_rows // (n_splits + 1)
     out = []
     for k in range(1, n_splits + 1):
         train_end = fold * k + (n_rows % (n_splits + 1))
         val_end = min(train_end + fold, n_rows)
-        out.append((train_end, val_end))
+        if train_end >= 1 and val_end > train_end:
+            out.append((train_end, val_end))
     return out
 
 
@@ -76,10 +88,10 @@ FEATURE_FALLBACKS: list[tuple[dict, int]] = [
 ]
 
 
-def _assembler(feature_cols: list[str]):
+def _assembler(feature_cols: list[str], invalid: str = "error"):
     from pyspark.ml.feature import VectorAssembler
 
-    return VectorAssembler(inputCols=feature_cols, outputCol="features")
+    return VectorAssembler(inputCols=feature_cols, outputCol="features", handleInvalid=invalid)
 
 
 def regression_metrics(scored: DataFrame, label: str, pred: str) -> dict[str, float]:
@@ -92,28 +104,20 @@ def regression_metrics(scored: DataFrame, label: str, pred: str) -> dict[str, fl
 
 
 def classification_metrics(scored: DataFrame, label: str, pred: str) -> dict[str, float]:
-    """Accuracy + weighted F1 from one per-class confusion aggregate
+    """Accuracy + weighted F1 from one (label, prediction) confusion count
     (precision/recall per class, support-weighted — A10)."""
-    per_class = (
-        scored.groupBy(label)
-        .agg(
-            F.count(F.lit(1)).alias("support"),
-            F.sum((F.col(label) == F.col(pred)).cast("long")).alias("tp"),
-        )
-        .collect()
-    )
-    pred_counts = {
-        r[0]: r[1]
-        for r in scored.groupBy(pred).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    total = sum(r["support"] for r in per_class)
-    correct = sum(r["tp"] for r in per_class)
+    support, predicted, tp = Counter(), Counter(), Counter()
+    for y, yhat, n in scored.groupBy(label, pred).count().collect():
+        support[y] += n
+        predicted[yhat] += n
+        if y is not None and y == yhat:
+            tp[y] += n
+    total = sum(support.values())
+    correct = sum(tp.values())
     f1_sum = 0.0
-    for r in per_class:
-        tp, sup = r["tp"], r["support"]
-        predicted = pred_counts.get(r[0], 0)
-        prec = tp / predicted if predicted else 0.0
-        rec = tp / sup if sup else 0.0
+    for y, sup in support.items():
+        prec = tp[y] / predicted[y] if predicted[y] else 0.0
+        rec = tp[y] / sup
         f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
         f1_sum += f1 * sup
     return {
@@ -138,14 +142,14 @@ def train(
     from pyspark.ml.feature import StringIndexer
     from pyspark.ml.regression import RandomForestRegressor
 
-    from ..operators.features import DEFAULT_LAGS, DEFAULT_ROLLING, discover_categories
-
-    categories = discover_categories(weather, ["city", "country"])
+    categories = discover_categories(with_calendar(weather), ONE_HOT_COLS)
     feats = feature_cols = None
     feature_config: dict = {}
     n = 0
     for overrides, accept_floor in FEATURE_FALLBACKS:
-        feats, feature_cols = engineer_features(weather, inference=False, **overrides)
+        feats, feature_cols = engineer_features(
+            weather, inference=False, categories=categories, **overrides
+        )
         feats = with_time_order(feats).persist()
         n = feats.count()
         feature_config = {
@@ -186,8 +190,6 @@ def train(
     for train_end, val_end in time_series_splits(n, n_splits):
         tr = assembled.filter(F.col("_row") <= train_end)
         va = assembled.filter((F.col("_row") > train_end) & (F.col("_row") <= val_end))
-        if tr.isEmpty() or va.isEmpty():
-            continue
         m = {}
         scored_r = reg.fit(tr).transform(va)
         m.update(regression_metrics(scored_r, "target_temp_next", "prediction"))
@@ -218,16 +220,17 @@ def train(
 
 
 def predict(models: TrainedModels, weather: DataFrame) -> DataFrame:
-    """P-path: inference features (NaN rows kept) → transform-appended
-    prediction columns. The reference's positional concat J1 (main.py:132)
-    disappears: ``model.transform`` adds columns on the same rows.
+    """P-path: inference features (NaN rows kept) → prediction columns
+    appended in one scoring pass over the same rows. The reference's
+    positional concat J1 (main.py:132) disappears: ``model.transform`` adds
+    columns on the same rows, so the output has exactly one row per input
+    row, duplicate (city, timestamp) polls included.
 
-    Rows whose features contain NULLs (lag/rolling warm-up) are scored as
-    NULL predictions — kept, mirroring inference=True semantics."""
-    from ..operators.features import align_features
-
+    Rows whose features contain NULLs (lag/rolling warm-up) are assembled
+    with ``handleInvalid="keep"`` and their predictions masked to NULL —
+    kept, mirroring inference=True semantics."""
     cfg = models.feature_config or {}
-    feats, feature_cols = engineer_features(
+    feats, _ = engineer_features(
         weather,
         inference=True,
         categories=models.categories,
@@ -237,23 +240,20 @@ def predict(models: TrainedModels, weather: DataFrame) -> DataFrame:
         rolling_windows=cfg.get("rolling_windows"),
     )
     feats = align_features(feats, models.feature_cols)
-    cond = F.lit(True)
+    scorable = F.lit(True)
     for c in models.feature_cols:
-        cond = cond & F.col(c).isNotNull()
-    scorable = feats.filter(cond)
-    assembled = _assembler(models.feature_cols).transform(scorable)
+        scorable = scorable & F.col(c).isNotNull()
+    assembled = _assembler(models.feature_cols, "keep").transform(feats)
     scored = models.regressor.transform(assembled).withColumnRenamed(
         "prediction", "pred_temperature"
     )
-    scored = models.classifier.transform(scored).withColumnRenamed(
-        "prediction", "pred_label_idx"
+    scored = models.classifier.transform(scored)
+    labels = F.array(*[F.lit(x) for x in models.label_indexer.labels])
+    # masked after element_at: Spark 4.1's codegen returns an element for a NULL index
+    pred_condition = F.element_at(labels, F.col("prediction").cast("int") + 1)
+    return scored.select(
+        "city",
+        "timestamp",
+        F.when(scorable, F.col("pred_temperature")).alias("pred_temperature"),
+        F.when(scorable, pred_condition).alias("pred_condition"),
     )
-    labels = models.label_indexer.labels
-    label_arr = F.array(*[F.lit(x) for x in labels])
-    scored = scored.withColumn(
-        "pred_condition", F.element_at(label_arr, F.col("pred_label_idx").cast("int") + 1)
-    )
-    keep = ["city", "timestamp", "pred_temperature", "pred_condition"]
-    preds = scored.select(*keep)
-    # left join back so un-scorable warm-up rows surface with NULL preds
-    return feats.select("city", "timestamp").join(preds, ["city", "timestamp"], "left")

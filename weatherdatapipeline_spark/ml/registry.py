@@ -49,6 +49,9 @@ class LocalRegistry:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        # version dir -> (regressor, classifier, label_indexer), TrainedModels'
+        # leading fields: a version is read from disk at most once per registry
+        self._models: dict[str, tuple] = {}
 
     def _meta_path(self, name: str, version: int) -> str:
         return os.path.join(self.root, name, f"v{version}", "meta.json")
@@ -87,6 +90,7 @@ class LocalRegistry:
         models.regressor.write().overwrite().save(os.path.join(vdir, "regressor"))
         models.classifier.write().overwrite().save(os.path.join(vdir, "classifier"))
         models.label_indexer.write().overwrite().save(os.path.join(vdir, "label_indexer"))
+        self._models[vdir] = (models.regressor, models.classifier, models.label_indexer)
         mv = ModelVersion(
             name=name,
             version=version,
@@ -129,7 +133,9 @@ class LocalRegistry:
         return sorted(vs, key=lambda v: v.metrics[metric], reverse=not ascending)[0]
 
     def load(self, spark, mv: ModelVersion):
-        """Rehydrate a TrainedModels bundle from a registry entry."""
+        """Rehydrate a TrainedModels bundle from a registry entry. The Spark
+        ML models are read from disk only when neither ``log`` nor an
+        earlier ``load`` of this registry holds them."""
         from pyspark.ml.classification import (
             LogisticRegressionModel,
             RandomForestClassificationModel,
@@ -139,15 +145,19 @@ class LocalRegistry:
 
         from .pipeline import TrainedModels
 
-        clf_cls = (
-            LogisticRegressionModel
-            if mv.params.get("classifier_kind") == "lr"
-            else RandomForestClassificationModel
-        )
+        if mv.path not in self._models:
+            clf_cls = (
+                LogisticRegressionModel
+                if mv.params.get("classifier_kind") == "lr"
+                else RandomForestClassificationModel
+            )
+            self._models[mv.path] = (
+                RandomForestRegressionModel.load(os.path.join(mv.path, "regressor")),
+                clf_cls.load(os.path.join(mv.path, "classifier")),
+                StringIndexerModel.load(os.path.join(mv.path, "label_indexer")),
+            )
         return TrainedModels(
-            regressor=RandomForestRegressionModel.load(os.path.join(mv.path, "regressor")),
-            classifier=clf_cls.load(os.path.join(mv.path, "classifier")),
-            label_indexer=StringIndexerModel.load(os.path.join(mv.path, "label_indexer")),
+            *self._models[mv.path],
             feature_cols=list(mv.feature_cols),
             categories={k: list(v) for k, v in mv.categories.items()},
             metrics=dict(mv.metrics),
@@ -155,7 +165,9 @@ class LocalRegistry:
         )
 
     def delete(self, name: str) -> None:
-        shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+        base = os.path.join(self.root, name)
+        shutil.rmtree(base, ignore_errors=True)
+        self._models = {p: m for p, m in self._models.items() if os.path.dirname(p) != base}
 
 
 class MlflowRegistry:

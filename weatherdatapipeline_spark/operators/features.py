@@ -25,8 +25,12 @@ tests/test_features_pandas_oracle.py):
   inference mode keeps all rows (reference features.py:71-77 — P6)
 
 Unlike the reference, everything is ONE lazy logical plan over a single
-DataFrame — targets are columns, so the positional index alignments
-(J1/J4) disappear; row identity is carried by (city, timestamp).
+DataFrame, built in three projections: ``with_calendar`` (event time,
+hour, dayofweek), one ``withColumns`` holding every lag, rolling stat and
+target over the one window spec, and one holding every one-hot column —
+no chain of per-column projections for the analyzer to re-resolve.
+Targets are columns, so the positional index alignments (J1/J4)
+disappear; row identity is carried by (city, timestamp).
 
 Scale: the only shuffle is the hash partition on ``city`` for the windows;
 every lag/rolling/one-hot is computed inside that one exchange.
@@ -34,22 +38,12 @@ every lag/rolling/one-hot is computed inside that one exchange.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_LAGS = [1, 3]
 DEFAULT_ROLLING = [3]
 ONE_HOT_COLS = ["city", "country", "hour", "dayofweek"]
-DROP_COLS = [
-    "description",
-    "weather",
-    "timestamp",
-    "inserted_at",
-    "updated_at",
-    "batch_id",
-    "batch_info",
-    "is_current",
-]
 LAG_BASES = {
     "temp": "temperature",
     "humidity": "humidity",
@@ -58,26 +52,36 @@ LAG_BASES = {
 }
 
 
-def ensure_event_time(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
+def _event_time(df: DataFrame, ts_col: str) -> Column:
     """Unix seconds → TimestampType, bad values → NULL (F1: the
     ``pd.to_datetime(unit='s', errors='coerce')`` parity via try_cast)."""
-    field = dict(zip(df.columns, [f.dataType.simpleString() for f in df.schema.fields]))
-    if field.get(ts_col) == "timestamp":
-        return df
-    return df.withColumn(ts_col, F.timestamp_seconds(F.col(ts_col).try_cast("long")))
+    if df.schema[ts_col].dataType.simpleString() == "timestamp":
+        return F.col(ts_col)
+    return F.timestamp_seconds(F.col(ts_col).try_cast("long"))
+
+
+def ensure_event_time(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
+    """``df`` with ``ts_col`` coerced by ``_event_time``."""
+    return df.withColumn(ts_col, _event_time(df, ts_col))
+
+
+def with_calendar(df: DataFrame) -> DataFrame:
+    """Event-time coercion, ``hour`` and ``dayofweek`` (pandas Monday=0 →
+    Spark ``weekday``; F2/F3) in ONE projection. Over a latest-N
+    ``orderBy(...).limit(n)`` a second stacked projection would stop Spark
+    from planning the top-K as ``TakeOrderedAndProject``."""
+    ts = _event_time(df, "timestamp")
+    return df.withColumns({"timestamp": ts, "hour": F.hour(ts), "dayofweek": F.weekday(ts)})
 
 
 def discover_categories(df: DataFrame, cols: list[str]) -> dict[str, list]:
-    """Sorted distinct levels per column — what ``pd.get_dummies`` derives
-    implicitly. At training time this is a cheap distinct on low-cardinality
-    columns; the result is persisted as model metadata so inference NEVER
+    """Sorted distinct non-NULL levels per column — what ``pd.get_dummies``
+    derives implicitly — in one aggregate job for all columns. At training
+    time the result is persisted as model metadata so inference NEVER
     re-derives categories from live data (the reference instead patches
     drift after the fact in ``_align_features``, predict.py:65-88)."""
-    out: dict[str, list] = {}
-    for c in cols:
-        vals = [r[0] for r in df.select(c).distinct().collect() if r[0] is not None]
-        out[c] = sorted(vals)
-    return out
+    row = df.agg(*[F.collect_set(c).alias(c) for c in cols]).first()
+    return {c: sorted(row[c]) for c in cols}
 
 
 def engineer_features(
@@ -99,8 +103,11 @@ def engineer_features(
     # no rolling features (the adaptive-fallback ladder passes [])
     lags = DEFAULT_LAGS if lags is None else lags
     rolling_windows = DEFAULT_ROLLING if rolling_windows is None else rolling_windows
+    rolling_windows = [win for win in rolling_windows if win and win > 1]
 
-    df = ensure_event_time(df)
+    df = with_calendar(df)
+    if categories is None:
+        categories = discover_categories(df, ONE_HOT_COLS)
     # pandas' stable sort keeps original row order for duplicate (city,
     # timestamp) pairs; distributed ordering has no "original order", so a
     # caller-supplied tiebreaker column makes the window total and the
@@ -108,53 +115,35 @@ def engineer_features(
     order = [F.col("timestamp")] + ([F.col(tiebreaker_col)] if tiebreaker_col else [])
     w = Window.partitionBy("city").orderBy(*order)
 
-    # temporal features (F2/F3: pandas dayofweek is Monday=0 → weekday)
-    df = df.withColumn("hour", F.hour("timestamp")).withColumn(
-        "dayofweek", F.weekday("timestamp")
-    )
-
     # W1: per-city lags
-    for lag in lags:
-        for short, base in LAG_BASES.items():
-            df = df.withColumn(f"{short}_lag_{lag}", F.lag(base, lag).over(w))
-
+    derived = {
+        f"{short}_lag_{lag}": F.lag(base, lag).over(w)
+        for lag in lags
+        for short, base in LAG_BASES.items()
+    }
     # W3/W4: rolling with min_periods=w mask (pandas default yields NaN
     # until the window is full; count over the frame supplies the mask)
     for win in rolling_windows:
-        if win and win > 1:
-            frame = w.rowsBetween(-(win - 1), 0)
-            cnt_t = F.count("temperature").over(frame)
-            cnt_h = F.count("humidity").over(frame)
-            df = (
-                df.withColumn(
-                    f"temp_rollmean_{win}",
-                    F.when(cnt_t >= win, F.avg("temperature").over(frame)),
-                )
-                .withColumn(
-                    f"temp_rollstd_{win}",
-                    F.when(cnt_t >= win, F.stddev_samp("temperature").over(frame)),
-                )
-                .withColumn(
-                    f"humidity_rollmean_{win}",
-                    F.when(cnt_h >= win, F.avg("humidity").over(frame)),
-                )
-            )
-
+        frame = w.rowsBetween(-(win - 1), 0)
+        full_t = F.count("temperature").over(frame) >= win
+        full_h = F.count("humidity").over(frame) >= win
+        derived[f"temp_rollmean_{win}"] = F.when(full_t, F.avg("temperature").over(frame))
+        derived[f"temp_rollstd_{win}"] = F.when(full_t, F.stddev_samp("temperature").over(frame))
+        derived[f"humidity_rollmean_{win}"] = F.when(full_h, F.avg("humidity").over(frame))
     # W2: targets — lead for next-step temperature, current weather as class
-    df = df.withColumn("target_temp_next", F.lead("temperature", 1).over(w)).withColumn(
-        "target_condition", F.col("weather")
-    )
-
-    # F12: one-hot with drop_first semantics over fixed category lists
-    if categories is None:
-        categories = discover_categories(df, ONE_HOT_COLS)
-    onehot_cols: list[str] = []
-    for c in ONE_HOT_COLS:
-        levels = categories.get(c, [])
-        for level in levels[1:]:  # drop_first drops the sorted-first level
-            name = f"{c}_{level}"
-            df = df.withColumn(name, (F.col(c) == F.lit(level)).cast("boolean"))
-            onehot_cols.append(name)
+    derived["target_temp_next"] = F.lead("temperature", 1).over(w)
+    derived["target_condition"] = F.col("weather")
+    # F12: one-hot, drop_first semantics (sorted-first level dropped) over the
+    # fixed category lists, in a projection of its own ABOVE the windows: in
+    # theirs, Spark evaluates them below the window on top of with_calendar's
+    # projection, and that stack over a latest-N limit stops the top-K plan.
+    onehot = {
+        f"{c}_{level}": (F.col(c) == F.lit(level)).cast("boolean")
+        for c in ONE_HOT_COLS
+        for level in categories.get(c, [])[1:]
+    }
+    onehot_cols = list(onehot)
+    df = df.withColumns(derived).withColumns(onehot)
 
     numeric_features = [
         "temperature",
@@ -166,7 +155,6 @@ def engineer_features(
         *[
             f"{p}_{win}"
             for win in rolling_windows
-            if win and win > 1
             for p in ("temp_rollmean", "temp_rollstd", "humidity_rollmean")
         ],
     ]
@@ -180,8 +168,8 @@ def engineer_features(
         df = df.filter(cond)
 
     keep = ["city", "timestamp"] + feature_cols + ["target_temp_next", "target_condition"]
-    # one-hot replaced the raw categorical; drop the reference's drop-set
-    # plus the raw one-hot sources (pandas get_dummies removes them too)
+    # keys, features and targets only: the reference's drop-set and the raw
+    # one-hot sources go (pandas get_dummies removes the latter too)
     return df.select(*[c for c in keep if c in df.columns]), feature_cols
 
 
