@@ -75,6 +75,16 @@ def test_score_latest_plans_top_k(engine):
     assert "rangepartitioning" not in plan
 
 
+def test_predict_result_does_not_rescan_raw(engine):
+    """predict scores once: the returned frame reads the scored rows, so
+    collecting it re-runs neither the raw_weather scan nor the models."""
+    for preds in (engine.predict_temperature(limit=30), engine.predict_weather(limit=30)):
+        qe = preds._jdf.queryExecution()
+        assert "parquet" not in qe.optimizedPlan().toString()
+        assert "raw_weather" not in qe.executedPlan().toString()
+        assert preds.count() == 30
+
+
 def test_predict_without_model_raises(spark, tmp_path_factory):
     eng = WeatherEngine(spark, str(tmp_path_factory.mktemp("cold")))
     eng.run_etl()

@@ -12,7 +12,7 @@ from weatherdatapipeline_spark.ml.pipeline import (
     time_series_splits,
     train,
 )
-from weatherdatapipeline_spark.ml.registry import HAS_MLFLOW, LocalRegistry
+from weatherdatapipeline_spark.ml.registry import LocalRegistry
 from weatherdatapipeline_spark.sources.synthetic import synthetic_weather
 
 
@@ -175,42 +175,10 @@ def test_logistic_regression_alternative(spark, tmp_path):
     assert preds.filter(F.col("pred_condition").isNotNull()).count() > 0
 
 
-@pytest.fixture(
-    params=[
-        "local",
-        pytest.param(
-            "mlflow",
-            marks=pytest.mark.skipif(
-                not HAS_MLFLOW, reason="mlflow not installed in this environment"
-            ),
-        ),
-    ]
-)
-def make_reg(request, tmp_path):
-    """Fresh-registry factory parametrized over both backends; the MLflow
-    case runs only where mlflow is importable (registry needs a DB-backed
-    store, hence sqlite)."""
-    import itertools
-
-    counter = itertools.count()
-
-    def _make():
-        sub = tmp_path / f"reg{next(counter)}"
-        if request.param == "local":
-            return LocalRegistry(str(sub))
-        from weatherdatapipeline_spark.ml.registry import MlflowRegistry
-
-        return MlflowRegistry(
-            tracking_uri=f"sqlite:///{sub}.db", experiment=f"test-{sub.name}"
-        )
-
-    return _make
-
-
-def test_registry_backend_lifecycle(make_reg, spark, trained):
-    """The lifecycle contract holds for every registry backend."""
+def test_registry_backend_lifecycle(tmp_path, spark, trained):
+    """The log -> promote -> get_stage -> load -> predict contract."""
     models, weather = trained
-    reg = make_reg()
+    reg = LocalRegistry(str(tmp_path))
     v1 = reg.log("weather", models, params={"n_trees": 5})
     assert (v1.version, v1.stage) == (1, "Staging")
     reg.promote("weather", 1, "Production")
@@ -219,22 +187,6 @@ def test_registry_backend_lifecycle(make_reg, spark, trained):
     loaded = reg.load(spark, mv)
     preds = predict(loaded, weather)
     assert preds.filter(F.col("pred_temperature").isNotNull()).count() > 0
-
-
-@pytest.mark.skipif(HAS_MLFLOW, reason="mlflow installed — constructor works")
-def test_mlflow_registry_requires_mlflow():
-    from weatherdatapipeline_spark.ml.registry import MlflowRegistry
-
-    with pytest.raises(ImportError, match="mlflow is not installed"):
-        MlflowRegistry()
-
-
-def test_make_registry_auto_falls_back_local(tmp_path):
-    from weatherdatapipeline_spark.ml.registry import make_registry
-
-    reg = make_registry(str(tmp_path / "auto"))
-    if not HAS_MLFLOW:
-        assert isinstance(reg, LocalRegistry)
 
 
 def test_registry_lifecycle(tmp_path, spark, trained):

@@ -196,58 +196,26 @@ def test_knn_escalation_audit_matches_brute(spark):
     assert got == exp
 
 
-def test_knn_join_plan_identical_repeat_keeps_cache(spark):
-    """Caller-release contract (ADVICE r12/r13): a plan-identical repeat
-    must NOT evict the blocks the new result reads through CacheManager
-    plan-equality, a different-plan call MUST release the previous
-    handle, and release_knn_cache() clears the retained global."""
-    from weatherdatapipeline_spark.operators import spatial
-    from weatherdatapipeline_spark.operators.spatial import (
-        knn_join,
-        release_knn_cache,
-    )
+def test_registered_build_releases_previous_knn_result(spark, monkeypatch):
+    """knn_join's materialized result lives in the build's cache scope:
+    it stays cached after the build returns (its plan runs later), and
+    the next registered build releases it."""
+    from weatherdatapipeline_spark import queries as Q
+    from weatherdatapipeline_spark.operators.spatial import knn_join
 
-    release_knn_cache()
-    pts = corpus()
-    df = spark.createDataFrame(pts, "pid LONG, x LONG, y LONG")
-    r1 = knn_join(df, k=2, radii=(100,))
+    monkeypatch.setattr(Q, "QUERIES", {})
+    monkeypatch.setattr(Q, "ORACLES", {})
+    df = spark.createDataFrame(corpus(), "pid LONG, x LONG, y LONG")
+
+    def knn_build(s, d):
+        return knn_join(df, k=2, radii=(100,))
+
+    def other_build(s, d):
+        return s.range(3)
+
+    Q.register(knn_build, None)
+    Q.register(other_build, None)
+    r1 = Q.QUERIES["knn_build"](spark, "unused")
     assert r1.storageLevel.useMemory
-    # plan-identical repeat: same input frame, same k — the retained
-    # previous handle aliases the new result's cache blocks
-    r2 = knn_join(df, k=2, radii=(100,))
-    assert r1.storageLevel.useMemory, "repeat evicted the shared cache"
-    assert r2.storageLevel.useMemory
-    assert r2.sameSemantics(r1)
-    # different plan (k changes): previous handle must be released
-    r3 = knn_join(df, k=3, radii=(100,))
-    assert not r2.storageLevel.useMemory, "stale result cache retained"
-    assert r3.storageLevel.useMemory
-    assert spatial._PREV_KNN_RESULT is r3
-    assert spatial._PREV_KNN_SESSION is df.sparkSession
-    release_knn_cache()
-    assert spatial._PREV_KNN_RESULT is None
-    assert not r3.storageLevel.useMemory
-
-
-def test_knn_join_stale_session_handle_dropped(spark):
-    """A retained handle owned by a DIFFERENT SparkSession is dropped,
-    not unpersisted (unpersisting would talk to a dead JVM after a
-    session restart)."""
-    from weatherdatapipeline_spark.operators import spatial
-    from weatherdatapipeline_spark.operators.spatial import (
-        knn_join,
-        release_knn_cache,
-    )
-
-    release_knn_cache()
-    pts = corpus()
-    df = spark.createDataFrame(pts, "pid LONG, x LONG, y LONG")
-    r1 = knn_join(df, k=2, radii=(100,))
-    # simulate a handle left over from a torn-down session
-    spatial._PREV_KNN_SESSION = object()
-    r2 = knn_join(df, k=2, radii=(100,))
-    # the stale handle was dropped without unpersist: r1's blocks (shared
-    # with r2 via plan-equality) are still live
-    assert r2.storageLevel.useMemory
-    assert spatial._PREV_KNN_SESSION is df.sparkSession
-    release_knn_cache()
+    Q.QUERIES["other_build"](spark, "unused")
+    assert not r1.storageLevel.useMemory

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .ml.pipeline import predict as _predict
 from .ml.pipeline import train as _train
-from .ml.registry import make_registry
+from .ml.registry import LocalRegistry
 from .operators.stats import batch_statistics
 from .sources.catalog import TableCatalog
 from .sources.synthetic import synthetic_weather
@@ -41,13 +41,11 @@ class WeatherEngine:
         Defaults to the synthetic generator; production wires
         ``sources.rest.ingest`` here (same injection seam the tests use).
         ``registry``: any object with the LocalRegistry interface; defaults
-        to make_registry's auto pick — MlflowRegistry where mlflow is
-        installed (the reference always talks to MLflow), LocalRegistry
-        otherwise.
+        to a LocalRegistry under ``<root>/model_registry``.
         """
         self.spark = spark
         self.catalog = TableCatalog(spark, root)
-        self.registry = registry or make_registry(f"{root.rstrip('/')}/model_registry")
+        self.registry = registry or LocalRegistry(f"{root.rstrip('/')}/model_registry")
         self.source = source or (lambda s: synthetic_weather(s, n_batches=1))
 
     # --- E-path --------------------------------------------------------
@@ -95,30 +93,29 @@ class WeatherEngine:
         models = self.registry.load(self.spark, mv)
         return _predict(models, latest)
 
-    def predict_temperature(self, limit: int = 100) -> DataFrame:
-        """Reference main.py:124-150: latest rows scored, predictions sunk.
+    def _predict_and_sink(self, limit: int, pred_col: str, pred_type: str) -> DataFrame:
+        """Score the latest ``limit`` rows once, sink the rows that have a
+        ``pred_col`` prediction, and return (city, timestamp, pred_col).
 
-        The persist covers the sink write only and is released in
-        ``finally`` — a long-lived engine must not accumulate cached
-        blocks across predict calls (run_etl pairs persist/unpersist the
-        same way). The returned frame stays lazy and valid; re-collecting
-        it recomputes the scoring."""
-        preds = self._score_latest(limit).persist()
-        try:
-            scored = preds.filter(F.col("pred_temperature").isNotNull())
-            self.catalog.append_predictions(scored, pred_type="regression")
-            return preds.select("city", "timestamp", "pred_temperature")
-        finally:
-            preds.unpersist()
+        The scored rows come to the driver in one job (``limit`` bounds
+        them, and a predict endpoint returns them anyway) and become a
+        local relation: the sink and the returned frame both read it, so
+        neither re-runs the scan, the feature windows or the models. A
+        local relation holds no executor blocks, so a long-lived engine
+        accumulates no cache across predict calls."""
+        preds = self.spark.createDataFrame(self._score_latest(limit).toArrow())
+        self.catalog.append_predictions(
+            preds.filter(F.col(pred_col).isNotNull()), pred_type=pred_type
+        )
+        return preds.select("city", "timestamp", pred_col)
+
+    def predict_temperature(self, limit: int = 100) -> DataFrame:
+        """Reference main.py:124-150: latest rows scored, predictions sunk."""
+        return self._predict_and_sink(limit, "pred_temperature", "regression")
 
     def predict_weather(self, limit: int = 100) -> DataFrame:
-        preds = self._score_latest(limit).persist()
-        try:
-            scored = preds.filter(F.col("pred_condition").isNotNull())
-            self.catalog.append_predictions(scored, pred_type="classification")
-            return preds.select("city", "timestamp", "pred_condition")
-        finally:
-            preds.unpersist()
+        """Reference main.py:207: latest rows classified, predictions sunk."""
+        return self._predict_and_sink(limit, "pred_condition", "classification")
 
     def evaluate(self, limit: int = 500, persist: bool = False) -> dict:
         """A10 monitoring metrics of Production models on recent history

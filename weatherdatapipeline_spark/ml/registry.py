@@ -1,6 +1,6 @@
 """Model registry — the reference's MLflow version/stage lifecycle
 (reference ml/registry.py:23-46, training.py:109-135) on a local JSON +
-Spark-ML-save registry, with MLflow used instead when importable.
+Spark-ML-save registry.
 
 Semantics preserved:
 - every training run logs params + metrics + the feature-schema artifact
@@ -18,13 +18,6 @@ import json
 import os
 import shutil
 from dataclasses import asdict, dataclass, field
-
-try:  # pragma: no cover - exercised only where mlflow is installed
-    import mlflow  # noqa: F401
-
-    HAS_MLFLOW = True
-except ImportError:
-    HAS_MLFLOW = False
 
 
 @dataclass
@@ -168,171 +161,3 @@ class LocalRegistry:
         base = os.path.join(self.root, name)
         shutil.rmtree(base, ignore_errors=True)
         self._models = {p: m for p, m in self._models.items() if os.path.dirname(p) != base}
-
-
-class MlflowRegistry:
-    """MLflow-backed registry with the same interface as LocalRegistry —
-    a user of the reference's real MLflow lifecycle (reference
-    ml/training.py:99-135, ml/registry.py:23-46) gets `models:/<name>`
-    URIs, the MLflow UI, and run-linked params/metrics/artifacts.
-
-    Mapping (one MLflow run per `log`):
-    - params/metrics -> mlflow.log_params / log_metrics
-      (training.py:101-102)
-    - feature schema -> feature_columns.json run artifact via
-      mlflow.log_dict (training.py:105: the saved feature column list IS
-      the serving contract); categories.json likewise
-    - the three Spark ML models -> mlflow.spark.log_model under artifact
-      paths regressor/classifier/label_indexer; the regressor registers
-      the version under ``name`` (one registered version anchors the run;
-      siblings load from the same run's artifacts)
-    - Staging auto-promote of the fresh version (training.py:113-119)
-    - promote() -> transition_model_version_stage with
-      archive_existing_versions=True, matching LocalRegistry's demote-to-
-      Archived handoff (registry.py:31-46)
-    - get_stage() -> get_latest_versions(stage) with max-version fallback
-      (predict.py:27-43)
-
-    Only importable where mlflow is installed (not in this container);
-    tests/test_ml.py parametrizes the lifecycle over both backends and
-    skips this one when mlflow is absent.
-    """
-
-    def __init__(self, tracking_uri: str | None = None, experiment: str = "weatherdatapipeline"):
-        if not HAS_MLFLOW:
-            raise ImportError(
-                "mlflow is not installed — use LocalRegistry, or install mlflow"
-            )
-        import mlflow
-        from mlflow.tracking import MlflowClient
-
-        self._mlflow = mlflow
-        if tracking_uri:
-            mlflow.set_tracking_uri(tracking_uri)
-        mlflow.set_experiment(experiment)
-        self._client = MlflowClient()
-
-    # --- helpers -------------------------------------------------------
-
-    def _to_model_version(self, name: str, v) -> ModelVersion:
-        run = self._client.get_run(v.run_id)
-        try:
-            feats = self._mlflow.artifacts.load_dict(
-                f"runs:/{v.run_id}/feature_columns.json"
-            )["feature_columns"]
-        except Exception:
-            feats = []
-        try:
-            cats = self._mlflow.artifacts.load_dict(f"runs:/{v.run_id}/categories.json")
-        except Exception:
-            cats = {}
-        try:
-            fcfg = self._mlflow.artifacts.load_dict(
-                f"runs:/{v.run_id}/feature_config.json"
-            )
-        except Exception:
-            fcfg = {}
-        stage = v.current_stage if v.current_stage != "None" else None
-        return ModelVersion(
-            name=name,
-            version=int(v.version),
-            stage=stage,
-            metrics=dict(run.data.metrics),
-            params=dict(run.data.params),
-            feature_cols=list(feats),
-            categories=cats,
-            path=f"runs:/{v.run_id}",
-            feature_config=fcfg,
-        )
-
-    # --- interface (same shape as LocalRegistry) -----------------------
-
-    def versions(self, name: str) -> list[ModelVersion]:
-        vs = self._client.search_model_versions(f"name='{name}'")
-        return sorted(
-            (self._to_model_version(name, v) for v in vs), key=lambda m: m.version
-        )
-
-    def latest(self, name: str) -> ModelVersion | None:
-        vs = self.versions(name)
-        return vs[-1] if vs else None
-
-    def get_stage(self, name: str, stage: str) -> ModelVersion | None:
-        staged = self._client.get_latest_versions(name, stages=[stage]) or []
-        if staged:
-            v = sorted(staged, key=lambda m: int(m.version))[-1]
-            return self._to_model_version(name, v)
-        return self.latest(name)
-
-    def log(self, name: str, models, params: dict) -> ModelVersion:
-        mlflow = self._mlflow
-        with mlflow.start_run(run_name=name):
-            if params:
-                mlflow.log_params(params)
-            mlflow.log_metrics({k: float(v) for k, v in models.metrics.items()})
-            mlflow.log_dict(
-                {"feature_columns": list(models.feature_cols)}, "feature_columns.json"
-            )
-            mlflow.log_dict(
-                {k: list(v) for k, v in models.categories.items()}, "categories.json"
-            )
-            mlflow.log_dict(
-                getattr(models, "feature_config", {}) or {}, "feature_config.json"
-            )
-            mlflow.spark.log_model(models.classifier, artifact_path="classifier")
-            mlflow.spark.log_model(models.label_indexer, artifact_path="label_indexer")
-            mlflow.spark.log_model(
-                models.regressor,
-                artifact_path="regressor",
-                registered_model_name=name,
-            )
-        fresh = self._client.get_latest_versions(name, stages=["None"]) or []
-        v = sorted(fresh, key=lambda m: int(m.version))[-1]
-        self._client.transition_model_version_stage(
-            name, v.version, stage="Staging", archive_existing_versions=False
-        )
-        return self._to_model_version(name, self._client.get_model_version(name, v.version))
-
-    def promote(self, name: str, version: int, stage: str = "Production") -> ModelVersion:
-        self._client.transition_model_version_stage(
-            name, str(version), stage=stage, archive_existing_versions=True
-        )
-        return self._to_model_version(name, self._client.get_model_version(name, version))
-
-    def best_version(self, name: str, metric: str, ascending: bool = True) -> ModelVersion | None:
-        vs = [v for v in self.versions(name) if metric in v.metrics]
-        if not vs:
-            return None
-        return sorted(vs, key=lambda v: v.metrics[metric], reverse=not ascending)[0]
-
-    def load(self, spark, mv: ModelVersion):
-        from .pipeline import TrainedModels
-
-        mlflow = self._mlflow
-        return TrainedModels(
-            regressor=mlflow.spark.load_model(f"{mv.path}/regressor"),
-            classifier=mlflow.spark.load_model(f"{mv.path}/classifier"),
-            label_indexer=mlflow.spark.load_model(f"{mv.path}/label_indexer"),
-            feature_cols=list(mv.feature_cols),
-            categories={k: list(v) for k, v in mv.categories.items()},
-            metrics=dict(mv.metrics),
-            feature_config=dict(mv.feature_config),
-        )
-
-    def delete(self, name: str) -> None:
-        try:
-            self._client.delete_registered_model(name)
-        except Exception:
-            pass
-
-
-def make_registry(root: str, backend: str = "auto", **mlflow_kwargs):
-    """Registry factory: ``backend="mlflow"`` requires mlflow; ``"local"``
-    forces the filesystem registry; ``"auto"`` picks mlflow when it is
-    importable (the reference's behavior — it always talks to MLflow),
-    falling back to LocalRegistry otherwise."""
-    if backend == "local":
-        return LocalRegistry(root)
-    if backend == "mlflow":
-        return MlflowRegistry(**mlflow_kwargs)
-    return MlflowRegistry(**mlflow_kwargs) if HAS_MLFLOW else LocalRegistry(root)

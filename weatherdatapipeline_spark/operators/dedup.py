@@ -24,6 +24,7 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .iterate import fixpoint
 from .text import fingerprint_md5, persist_scoped as _persist_scoped, spread
 
 logger = logging.getLogger(__name__)
@@ -1106,24 +1107,15 @@ def connected_components(
     """Cluster near-duplicate pairs into components: (node, cluster_id)
     where cluster_id is the component's minimum node id.
 
-    Min-label propagation: each round every node takes the min label among
-    itself and its neighbors (one shuffle join + one hash aggregate), until
-    a fixpoint — rounds = graph diameter, and near-dup components are
-    shallow (a handful of rounds). Each round is localCheckpoint-ed: labels
-    are reused twice per round and feed the next, so without truncation the
-    lineage (and recomputation) doubles every round.
-
-    The convergence check rides INSIDE the round's aggregate: each node's
-    own-label row is tagged, so the agg emits (new_label, old_label) and
-    "any change?" is a filter-count over the already-checkpointed result —
-    no extra join job per round (that join was ~half the per-round cost).
+    Min-label propagation (``iterate.fixpoint``): each round every node
+    takes the min label among itself and its neighbors (one shuffle join
+    + one hash aggregate), so rounds ~ graph diameter; near-dup
+    components are shallow. Raises RuntimeError when ``max_iter`` rounds
+    end before the fixpoint, instead of returning partial labels.
     Input pairs are normalized (least/greatest + distinct) BEFORE the
     bidirectional union, so duplicate or reversed input pairs cost one
-    half-size distinct, not a double-size one. At extreme scale the same
-    loop upgrades to the large-star/small-star formulation (Kiveris et
-    al., "Connected Components in MapReduce and Beyond"), which contracts
-    long chains in O(log^2 n) rounds; the driver-side convergence check is
-    identical.
+    half-size distinct, not a double-size one. Long chains belong to
+    ``connected_components_star``.
     """
     a, b = F.col(a_col), F.col(b_col)
     # checkpoint BEFORE the bidirectional union: the union references the
@@ -1140,32 +1132,21 @@ def connected_components(
     edges = uniq.select(F.col("u").alias("src"), F.col("v").alias("dst")).union(
         uniq.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    labels = (
-        edges.select("src")
-        .distinct()
-        .select(F.col("src").alias("node"), F.col("src").alias("label"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        own = labels.select("node", "label", F.lit(1).alias("is_own"))
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
         nbr = edges.join(
             labels.withColumnRenamed("node", "dst"), "dst"
-        ).select(F.col("src").alias("node"), "label", F.lit(0).alias("is_own"))
-        new = (
-            own.union(nbr)
-            .groupBy("node")
-            .agg(
-                F.min("label").alias("label"),
-                F.max(F.when(F.col("is_own") == 1, F.col("label"))).alias("_old"),
-            )
-            # lazy: the changed-count below materializes it in ITS job —
-            # eager ran a separate materialization job per round (r14)
-            .localCheckpoint(eager=False)
+        ).select(F.col("src").alias("node"), "label")
+        return labels.union(nbr).groupBy("node").agg(F.min("label").alias("label"))
+
+    labels0 = edges.select("src").distinct().select(
+        F.col("src").alias("node"), F.col("src").alias("label")
+    )
+    labels, converged = fixpoint(labels0, step, max_iter)
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge within {max_iter} rounds"
         )
-        changed = new.filter(F.col("label") < F.col("_old")).limit(1).count()
-        labels = new.select("node", "label")
-        if changed == 0:
-            break
     return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
 
 
@@ -1192,23 +1173,22 @@ def connected_components_star(
 
     Both phases are a hash-aggregate plus an equi-join on the node id —
     the same shuffle shape as a min-label round, just fewer rounds.
-    Convergence is checked on a 1-row checksum aggregate of the edge set
-    (count + bit_xor of per-edge hashes — order-independent, overflow-
-    free) instead of a join-diff; each round localCheckpoints to
-    truncate lineage.
+    The edge set is checked every SECOND round (``iterate.fixpoint``
+    with ``check_every=2``): every non-fixpoint round strictly lowers
+    the Kiveris potential and so changes the set, hence a set unchanged
+    across two rounds is a fixpoint. Raises RuntimeError when
+    ``max_iter`` rounds end before it: an unconverged edge set is not a
+    star forest, so its labels would be wrong.
     At convergence edges form stars root<-node, which IS the label map.
     """
     a, b = F.col(a_col), F.col(b_col)
-    edges = (
+    edges0 = (
         pairs.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
-    # isolated "components" never enter pairs; callers join labels back
-    # (same contract as connected_components)
-    prev_sum = None
-    for _round in range(max_iter):
+
+    def step(edges: DataFrame, _r: int) -> DataFrame:
         # large-star: closed-neighborhood min over BOTH directions
         bi = edges.union(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1228,38 +1208,22 @@ def connected_components_star(
             F.greatest("u", "v").alias("c"), F.least("u", "v").alias("n")
         )
         smins = d.groupBy("c").agg(F.min("n").alias("m"))
-        edges = (
+        return (
             d.join(smins, "c")
             .select(F.col("n").alias("u"), F.col("m").alias("v"))
             .union(smins.select(F.col("c").alias("u"), F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
             .distinct()
-            # lazy: the checksum agg below materializes it in ITS job (r14)
-            .localCheckpoint(eager=False)
         )
-        # count + xor-of-hashes: order-independent, cannot overflow
-        # (ANSI mode makes sum(xxhash64) a long-overflow error).
-        # r15 (guide §5.2): check only every SECOND round — each checksum
-        # is a driver round-trip that materializes the round's checkpoint
-        # in its own job, and the per-round job/stage overhead dominated
-        # the converged tail of every CC consumer (dbscan profile: 146
-        # stages, none over 0.5 s). Equality of the canonical edge set
-        # across a 2-round window still implies a fixpoint: every
-        # non-fixpoint large/small-star round strictly decreases the
-        # Kiveris potential and therefore CHANGES the set, so an
-        # unchanged checksum over two rounds means both were no-ops. The
-        # final label map derives from the same converged fixpoint —
-        # results identical, ~half the driver syncs.
-        if _round % 2 == 1:
-            chk = edges.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64("u", "v")).alias("sh"),
-            ).first()
-            cur = (chk["n"], chk["sh"])
-            if cur == prev_sum:
-                break
-            prev_sum = cur
+
+    # isolated "components" never enter pairs; callers join labels back
+    # (same contract as connected_components)
+    edges, converged = fixpoint(edges0, step, max_iter, check_every=2)
+    if not converged:
+        raise RuntimeError(
+            f"connected_components_star did not converge within {max_iter} rounds"
+        )
     # converged edge set is a union of stars (node -> component min)
     roots = edges.select(F.col("v").alias("node")).distinct().select(
         "node", F.col("node").alias("cluster_id")

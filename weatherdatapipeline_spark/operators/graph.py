@@ -10,15 +10,18 @@ current rank vector plus one dst-keyed sum. Both shuffles key on the node
 id, so a pre-partitioned/bucketed edge table reuses its layout across all
 iterations. The rank vector is node-vocabulary-sized (|V| rows, not |E|),
 so AQE broadcasts it automatically when |V| is small; nothing here is ever
-all-pairs. Lineage is truncated nothing — at 5 fixed iterations the plan
-stays shallow; callers running to convergence should localCheckpoint every
-~10 rounds like dedup.connected_components does.
+all-pairs. PageRank's 5 fixed iterations keep the plan shallow without
+truncation. The loops that run to a fixpoint (BFS, min-plus SSSP, k-core)
+go through ``iterate.fixpoint``, which checkpoints every round and owns
+the convergence check.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .iterate import fixpoint
 
 
 def pagerank(
@@ -81,11 +84,10 @@ def pagerank(
     return ranks
 
 
-def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
-    """Global triangle census of an undirected simple graph given as
-    canonical edges (``a`` < ``b``, one row per edge): node/edge/wedge/
-    triangle counts plus the global clustering coefficient
-    (3*triangles / wedges).
+def _triangles(edges: DataFrame, a: str, b: str):
+    """Degree-oriented triangle enumeration shared by the triangle
+    operators: returns (e, deg, tri) with e the (a, b) edge projection,
+    deg (node, deg) and tri one (p, x, y) row per triangle.
 
     Scale design — degree orientation (Cohen 2009 / Suri-Vassilvitskii
     WWW'11 "Counting triangles and the curse of the last reducer"): each
@@ -94,10 +96,9 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     wedge self-join emits O(|E|^1.5) candidates total instead of
     sum(deg^2) — a hub with degree d contributes d*(d-1)/2 wedges under a
     naive orientation but only O(|E|) under this one. Each triangle has
-    exactly one node with two out-edges in this DAG, so the final
-    edge-join counts it exactly once. Three shuffles: degree agg, wedge
-    self-join on the pivot node, closing-edge equi-join.
-    """
+    exactly one node p with two out-edges in this DAG, so the closing-edge
+    join emits it exactly once. Three shuffles: degree agg, wedge
+    self-join on the pivot node, closing-edge equi-join."""
     e = edges.select(F.col(a).alias("a"), F.col(b).alias("b"))
     deg = (
         e.select(F.col("a").alias("node"))
@@ -129,7 +130,19 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     tri = wedges_dir.join(
         closing,
         (F.least("x", "y") == F.col("cx")) & (F.greatest("x", "y") == F.col("cy")),
-    ).count()
+    ).select("p", "x", "y")
+    return e, deg, tri
+
+
+def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
+    """Global triangle census of an undirected simple graph given as
+    canonical edges (``a`` < ``b``, one row per edge): node/edge/wedge/
+    triangle counts plus the global clustering coefficient
+    (3*triangles / wedges). Triangles come from ``_triangles``'s
+    degree-oriented enumeration, counted once each.
+    """
+    e, deg, tri = _triangles(edges, a, b)
+    n_tri = tri.count()
     summary = e.agg(F.count(F.lit(1)).alias("n_edges")).crossJoin(
         deg.agg(
             F.count(F.lit(1)).alias("n_nodes"),
@@ -142,9 +155,9 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
         "n_nodes",
         "n_edges",
         "n_wedges",
-        F.lit(tri).cast("bigint").alias("n_triangles"),
+        F.lit(n_tri).cast("bigint").alias("n_triangles"),
         F.round(
-            F.lit(3.0) * tri / F.when(F.col("n_wedges") > 0, F.col("n_wedges")),
+            F.lit(3.0) * n_tri / F.when(F.col("n_wedges") > 0, F.col("n_wedges")),
             6,
         ).alias("clustering"),
     )
@@ -158,44 +171,11 @@ def edge_triangle_support(
     k-truss peeling (Cohen 2008). Returns (a, b, support) for every edge
     participating in >= 1 triangle.
 
-    Same degree orientation as ``triangle_stats`` (Suri-Vassilvitskii):
-    each edge directed low-(deg, id) -> high, out-degrees O(sqrt(|E|)),
-    so the wedge self-join emits O(|E|^1.5) candidates — never the
-    sum(deg^2) a naive adjacency wedge join pays on hubs. Each triangle
-    is enumerated exactly once (its unique two-out-edge pivot), then
-    exploded to its 3 canonical edges and hash-counted: four shuffles
-    total (degree agg, wedge join, closing-edge join, support agg)."""
-    e = edges.select(F.col(a).alias("a"), F.col(b).alias("b"))
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    d = (
-        e.join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), "a")
-        .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), "b")
-        .select(
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
-                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-            )
-            .otherwise(F.struct(F.col("b").alias("u"), F.col("a").alias("v")))
-            .alias("e")
-        )
-        .select("e.u", "e.v")
-    )
-    w1 = d.select(F.col("u").alias("p"), F.col("v").alias("x"))
-    w2 = d.select(F.col("u").alias("p"), F.col("v").alias("y"))
-    wedges_dir = w1.join(w2, "p").filter(F.col("x") < F.col("y"))
-    closing = d.select(
-        F.least("u", "v").alias("cx"), F.greatest("u", "v").alias("cy")
-    )
-    tri = wedges_dir.join(
-        closing,
-        (F.least("x", "y") == F.col("cx")) & (F.greatest("x", "y") == F.col("cy")),
-    ).select("p", "x", "y")
+    Each triangle from ``_triangles`` (enumerated once, O(|E|^1.5) wedge
+    candidates) is exploded to its 3 canonical edges and hash-counted:
+    four shuffles total (degree agg, wedge join, closing-edge join,
+    support agg)."""
+    _, _, tri = _triangles(edges, a, b)
     sides = tri.select(
         F.explode(
             F.array(
@@ -219,6 +199,45 @@ def edge_triangle_support(
     ).select(F.col("ea").alias(a), F.col("eb").alias(b), "support")
 
 
+def _undirected(edges: DataFrame, a: str, b: str, *extra) -> DataFrame:
+    """(src, dst, *extra) with both directions of every edge, deduplicated."""
+    return (
+        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"), *extra)
+        .union(edges.select(F.col(b).alias("src"), F.col(a).alias("dst"), *extra))
+        .distinct()
+    )
+
+
+def _bfs(edges: DataFrame, start: DataFrame, max_hops: int, a: str, b: str) -> DataFrame:
+    """Level-synchronous BFS from ``start`` (key columns ending in ``n``):
+    returns ``start``'s columns plus ``dist``, the minimum hop count per
+    key, bounded at ``max_hops``.
+
+    Round r expands only the frontier (rows with dist == r-1): one
+    (n)-keyed equi-join against the symmetrized edges, a distinct, and an
+    anti-join against the visited set, so state is |keys| x |reached|
+    rows, never per-path. Level order makes first discovery the minimum
+    distance. A round that adds nothing is the fixpoint; reaching
+    ``max_hops`` first is the bounded-hop contract, not an error."""
+    und = _undirected(edges, a, b).withColumnRenamed("src", "n")
+    keys = start.columns
+
+    def step(visited: DataFrame, r: int) -> DataFrame:
+        nxt = (
+            visited.filter(F.col("dist") == r - 1)
+            .select(*keys)
+            .join(und, "n")
+            .select(*[c for c in keys if c != "n"], F.col("dst").alias("n"))
+            .distinct()
+            .join(visited.select(*keys), keys, "left_anti")
+            .withColumn("dist", F.lit(r))
+        )
+        return visited.unionByName(nxt)
+
+    visited, _ = fixpoint(start.distinct().withColumn("dist", F.lit(0)), step, max_hops)
+    return visited
+
+
 def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
@@ -227,44 +246,12 @@ def bfs_distances(
     b: str = "b",
     node: str = "node",
 ) -> DataFrame:
-    """Multi-source BFS over an undirected edge table: (node, dist) with
-    dist = minimum hop count from ANY seed, bounded at ``max_hops``.
-    Reference parity: the reference has no graph surface; this is the
-    k-hop reachability primitive a lineage/influence audit needs.
-
-    Scale design — frontier expansion, the textbook distributed BFS:
-    each level is ONE equi-join of the current frontier (|frontier| rows,
-    never |V|) against the symmetrized edge table, a distinct, and an
-    anti-join against the visited set. Level order guarantees first
-    discovery = minimum distance, so no per-path state is carried — the
-    visited set is (node, dist), |V| rows max, and AQE broadcasts the
-    frontier side of the join while it is small. localCheckpoint per
-    level truncates lineage so plan depth stays O(1) per level, not
-    O(level). Paths are never enumerated (a recursive-CTE UNION ALL walk
-    explodes combinatorially on dense graphs; this never does).
+    """Multi-source BFS over an undirected edge table: (n, dist) with
+    dist = minimum hop count from ANY seed, bounded at ``max_hops``
+    (``_bfs``). Paths are never enumerated (a recursive-CTE UNION ALL
+    walk explodes combinatorially on dense graphs; this never does).
     """
-    und = (
-        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .union(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .distinct()
-    )
-    frontier = seeds.select(F.col(node).alias("n")).distinct()
-    visited = frontier.withColumn("dist", F.lit(0)).localCheckpoint(eager=True)
-    frontier = visited.select("n")
-    for level in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(und, frontier["n"] == und["src"])
-            .select(F.col("dst").alias("n"))
-            .distinct()
-            .join(visited.select("n"), "n", "left_anti")
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("n")
-    return visited
+    return _bfs(edges, seeds.select(F.col(node).alias("n")), max_hops, a, b)
 
 
 def per_seed_bfs(
@@ -279,39 +266,9 @@ def per_seed_bfs(
     count from THAT seed, bounded at ``max_hops`` — the primitive under
     per-node centrality readouts (harmonic/closeness over a seed
     cohort), where ``bfs_distances``'s any-seed minimum would conflate
-    sources.
-
-    Same frontier shape as ``bfs_distances`` with the seed id carried as
-    a key column: each level is one (n)-keyed equi-join against the
-    symmetrized edges, a distinct, and a (seed, n) anti-join against the
-    visited set — state is |seeds| x |reached| rows, never per-path.
-    localCheckpoint per level keeps plan depth O(1) per level."""
-    und = (
-        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .union(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .distinct()
-    )
-    frontier = (
-        seeds.select(F.col(node).alias("seed"))
-        .distinct()
-        .select("seed", F.col("seed").alias("n"))
-    )
-    visited = frontier.withColumn("dist", F.lit(0)).localCheckpoint(eager=True)
-    frontier = visited.select("seed", "n")
-    for level in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(und, frontier["n"] == und["src"])
-            .select("seed", F.col("dst").alias("n"))
-            .distinct()
-            .join(visited.select("seed", "n"), ["seed", "n"], "left_anti")
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("seed", "n")
-    return visited
+    sources. Same loop (``_bfs``) with the seed id as a key column."""
+    start = seeds.select(F.col(node).alias("seed"), F.col(node).alias("n"))
+    return _bfs(edges, start, max_hops, a, b)
 
 
 def minplus_sssp(
@@ -324,62 +281,34 @@ def minplus_sssp(
     node: str = "node",
     converge: bool = False,
 ) -> DataFrame:
-    """Bounded-round Bellman-Ford: minimum WEIGHTED distance from any
-    seed, exact for all shortest paths of <= ``rounds`` edges (the
+    """Bounded-round Bellman-Ford: minimum WEIGHTED distance (n, d) from
+    any seed, exact for all shortest paths of <= ``rounds`` edges (the
     standard bounded-hop contract for iterative min-plus on a cluster —
     rounds is the latency knob, not a heuristic).
 
-    With ``converge=True``, ``rounds`` becomes a hard CAP and the loop
-    stops at the first relaxation that changes nothing — the result is
-    then the EXACT shortest-path table regardless of graph depth. The
-    fixpoint signature is (row count, Σd): a relaxation can only add
-    nodes (count up) or lower a distance (Σd down, integer weights →
-    exact sums), so an unchanged pair ⇒ identical table. Exhausting the
-    cap before the fixpoint raises rather than silently under-relaxing
-    (VERDICT r7 item 5).
-
-    Per round, one relaxation: dist' = min(dist, min over incoming
-    edges of dist[u] + w) — an equi-join of the CURRENT distance table
-    against the symmetrized edge list, a (node) min-aggregate, and a
-    min-merge with the previous table. localCheckpoint per round keeps
-    plan depth O(1). Weights should be integers for cross-engine
-    exactness (float min-plus ties differ in last-ulp across engines).
-    The oracle (queries.ORACLE_SSSP) UNROLLS the same rounds as CTE
-    stages — same joins, same integer arithmetic, same result.
+    Step: dist' = min(dist, min over incoming edges of dist[u] + w) — an
+    equi-join of the current table against the symmetrized edge list, a
+    (node) min-aggregate. With ``converge=True``, ``rounds`` is a hard
+    CAP: the result is then the exact shortest-path table regardless of
+    graph depth, and exhausting the cap before the fixpoint raises
+    rather than silently under-relaxing. Weights should be integers for
+    cross-engine exactness (float min-plus ties differ in last-ulp
+    across engines). The oracle (queries.ORACLE_SSSP) UNROLLS the same
+    rounds as CTE stages — same joins, same integer arithmetic.
     """
-    und = (
-        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"), F.col(w).alias("_w"))
-        .union(
-            edges.select(F.col(b).alias("src"), F.col(a).alias("dst"), F.col(w).alias("_w"))
+    und = _undirected(edges, a, b, F.col(w).alias("_w"))
+
+    def step(dist: DataFrame, _r: int) -> DataFrame:
+        relaxed = dist.join(und, dist["n"] == und["src"]).select(
+            F.col("dst").alias("n"), (F.col("d") + F.col("_w")).alias("d")
         )
-        .distinct()
+        return dist.unionByName(relaxed).groupBy("n").agg(F.min("d").alias("d"))
+
+    dist0 = seeds.select(F.col(node).alias("n")).distinct().withColumn(
+        "d", F.lit(0).cast("long")
     )
-    dist = (
-        seeds.select(F.col(node).alias("n")).distinct().withColumn("d", F.lit(0).cast("long"))
-    ).localCheckpoint(eager=True)
-
-    def _sig(df: DataFrame):
-        r = df.agg(F.count(F.lit(1)).alias("c"), F.sum("d").alias("s")).first()
-        return (r["c"], r["s"])
-
-    sig_prev = _sig(dist) if converge else None
-    for _ in range(rounds):
-        relaxed = (
-            dist.join(und, dist["n"] == und["src"])
-            .select(F.col("dst").alias("n"), (F.col("d") + F.col("_w")).alias("d"))
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("n")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
-        )
-        if converge:
-            sig = _sig(dist)
-            if sig == sig_prev:
-                return dist
-            sig_prev = sig
-    if converge:
+    dist, converged = fixpoint(dist0, step, rounds)
+    if converge and not converged:
         raise RuntimeError(
             f"minplus_sssp did not converge within {rounds} rounds"
         )
@@ -387,30 +316,18 @@ def minplus_sssp(
 
 
 def kcore(edges: DataFrame, k: int, max_rounds: int = 64, a: str = "a", b: str = "b") -> DataFrame:
-    """TRUE k-core by iterative peeling with an in-loop convergence
-    check: each round drops nodes of degree < k and restricts edges to
-    survivors; the loop stops at the first round that removes nothing.
+    """TRUE k-core by iterative peeling: each round drops nodes of degree
+    < k and restricts edges to survivors (one degree agg + two
+    semi-joins), until a round removes nothing.
 
     Reference parity: the reference has no graph surface; this is the
-    subgraph-density primitive a spam/bot cohort audit needs.
-
-    Convergence signature: peeling is MONOTONE — edges only ever leave
-    the set — so the edge COUNT alone is a complete fixpoint test
-    (equal count ⇒ identical edge set). One cheap count() per round
-    over the just-checkpointed edge list; no checksum needed (unlike
-    connected components, whose label column mutates in place at
-    constant row count). Raises RuntimeError when ``max_rounds`` is
-    exhausted before the fixpoint rather than silently returning a
-    superset of the core (the failure mode a fixed-round unroll hides —
-    VERDICT r7 item 5). Cost: O(rounds · |E|) — per round one degree
-    agg + two semi-joins; localCheckpoint truncates the iterative
-    lineage so plan depth stays O(1).
+    subgraph-density primitive a spam/bot cohort audit needs. Raises
+    RuntimeError when ``max_rounds`` is exhausted before the fixpoint
+    rather than silently returning a superset of the core (the failure
+    mode a fixed-round unroll hides).
     """
-    e = edges.select(F.col(a).alias("a"), F.col(b).alias("b")).localCheckpoint(
-        eager=True
-    )
-    n_prev = e.count()
-    for _ in range(max_rounds):
+
+    def step(e: DataFrame, _r: int) -> DataFrame:
         adj = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         keep = (
             adj.groupBy(F.col("a").alias("node"))
@@ -418,19 +335,19 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 64, a: str = "a", b: str =
             .filter(F.col("deg") >= k)
             .select("node")
         )
-        e = (
+        return (
             e.join(keep.select(F.col("node").alias("a")), "a", "left_semi")
             .join(keep.select(F.col("node").alias("b")), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-        n = e.count()
-        if n == n_prev:
-            return e
-        n_prev = n
-    raise RuntimeError(
-        f"kcore did not converge within {max_rounds} rounds (still peeling)"
-    )
+
+    e0 = edges.select(F.col(a).alias("a"), F.col(b).alias("b"))
+    core, converged = fixpoint(e0, step, max_rounds)
+    if not converged:
+        raise RuntimeError(
+            f"kcore did not converge within {max_rounds} rounds (still peeling)"
+        )
+    return core
 
 
 def local_clustering(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
@@ -439,46 +356,14 @@ def local_clustering(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     edges) — the node-level refinement of :func:`triangle_stats`'s global
     census (transitivity): which nodes sit in tight cliques vs open hubs.
 
-    Same degree-orientation scale design (Suri-Vassilvitskii WWW'11):
-    wedges pivot only on each node's O(sqrt(|E|)) out-neighborhood, the
-    closing-edge equi-join confirms triangles, and each confirmed
-    triangle credits ALL THREE corners via a 3-row explode (map-side,
-    no extra shuffle beyond the per-node count agg). Nodes with deg < 2
-    are emitted with lcc NULL (no wedge to close — undefined, not 0).
+    Each triangle from ``_triangles``'s degree-oriented enumeration
+    credits ALL THREE corners via a 3-row explode (map-side, no extra
+    shuffle beyond the per-node count agg). Nodes with deg < 2 are
+    emitted with lcc NULL (no wedge to close — undefined, not 0).
     Returns (node, deg, triangles, lcc)."""
-    e = edges.select(F.col(a).alias("a"), F.col(b).alias("b"))
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    d = (
-        e.join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), "a")
-        .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), "b")
-        .select(
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
-                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-            )
-            .otherwise(F.struct(F.col("b").alias("u"), F.col("a").alias("v")))
-            .alias("e")
-        )
-        .select("e.u", "e.v")
-    )
-    w1 = d.select(F.col("u").alias("p"), F.col("v").alias("x"))
-    w2 = d.select(F.col("u").alias("p"), F.col("v").alias("y"))
-    wedges_dir = w1.join(w2, "p").filter(F.col("x") < F.col("y"))
-    closing = d.select(
-        F.least("u", "v").alias("cx"), F.greatest("u", "v").alias("cy")
-    )
+    _, deg, tri = _triangles(edges, a, b)
     corners = (
-        wedges_dir.join(
-            closing,
-            (F.least("x", "y") == F.col("cx")) & (F.greatest("x", "y") == F.col("cy")),
-        )
-        .select(F.explode(F.array("p", "x", "y")).alias("node"))
+        tri.select(F.explode(F.array("p", "x", "y")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )

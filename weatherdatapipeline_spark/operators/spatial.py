@@ -25,26 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# previous knn_join result cache — released once the NEXT call has
-# materialized (caller-release contract, ADVICE r12); see knn_join's
-# tail. Keyed on the owning SparkSession (ADVICE r13) so a handle from
-# a torn-down session is dropped, never unpersisted against a dead JVM.
-_PREV_KNN_RESULT: DataFrame | None = None
-_PREV_KNN_SESSION = None
-
-
-def release_knn_cache() -> None:
-    """Explicitly release the retained previous ``knn_join`` result cache
-    (ADVICE r13: the hidden module global needed a public release hook).
-    Safe to call at any time, including after session teardown."""
-    global _PREV_KNN_RESULT, _PREV_KNN_SESSION
-    if _PREV_KNN_RESULT is not None:
-        try:
-            _PREV_KNN_RESULT.unpersist(blocking=False)
-        except Exception:
-            pass
-    _PREV_KNN_RESULT = None
-    _PREV_KNN_SESSION = None
+from .text import persist_scoped
 
 
 def radius_join(
@@ -279,42 +260,14 @@ def knn_join(
             F.col("_d2").alias("dist2"),
         )
     )
-    # materialize the (output-bounded, n*k-row) final frame, then release
-    # every escalation level's cache (ADVICE r11: the per-level persists
-    # previously lived for the whole session, accumulating executor
-    # storage on repeated calls). The level caches are populated and
-    # consumed inside this one job; afterwards only the final result —
-    # whose size the caller asked for — stays cached, and its kept
-    # lineage still makes an executor loss a recompute, not a failure.
-    result = result.persist()
-    result.count()
+    # materialize the (output-bounded, n*k-row) final frame in the
+    # build's cache scope, then release every escalation level's cache:
+    # the level caches are populated and consumed inside this one job.
+    # The result's kept lineage makes an executor loss a recompute, not
+    # a failure; the next registered build releases it.
+    result = persist_scoped(result, eager=True)
     for _h in _level_handles:
         _h.unpersist(blocking=False)
-    # caller-release contract (ADVICE r12): the n*k-row result cache of
-    # the PREVIOUS knn_join call is released once the next call has
-    # materialized, so repeated calls hold at most one result in
-    # executor storage. Guard: a PLAN-IDENTICAL repeat (same points,
-    # same k — e.g. bench min-of-2 timing) shares the SAME cache blocks
-    # through Spark's CacheManager plan-equality lookup; unpersisting
-    # the old handle there would drop the blocks the new result reads
-    # (measured: repeated geo_knn went 3 s cached -> 10 s recompute),
-    # so release only when the plans actually differ.
-    global _PREV_KNN_RESULT, _PREV_KNN_SESSION
-    session = points.sparkSession
-    if _PREV_KNN_RESULT is not None:
-        if _PREV_KNN_SESSION is not session:
-            # stale handle from a different / torn-down SparkSession:
-            # just drop the reference (ADVICE r13) — unpersisting it
-            # would talk to a dead JVM, and its blocks died with it
-            _PREV_KNN_RESULT = None
-        else:
-            try:
-                if not result.sameSemantics(_PREV_KNN_RESULT):
-                    _PREV_KNN_RESULT.unpersist(blocking=False)
-            except Exception:
-                pass
-    _PREV_KNN_RESULT = result
-    _PREV_KNN_SESSION = session
     return result
 
 

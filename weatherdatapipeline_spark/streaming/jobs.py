@@ -1014,7 +1014,7 @@ def token_quota_gate_stateful(
     from this sandbox — plan construction and schema are tested
     unconditionally, the live run is a skip-marked test that activates
     wherever protobuf is installed (same contract as the PIL image
-    path and the MLflow registry backend).
+    path).
     """
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
