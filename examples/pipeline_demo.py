@@ -9,17 +9,18 @@ Run: python examples/pipeline_demo.py [workdir]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from weatherdatapipeline_spark.operators.features import engineer_features
-from weatherdatapipeline_spark.operators.stats import batch_statistics, condition_histogram
+from weatherdatapipeline_spark.operators.stats import condition_histogram
 from weatherdatapipeline_spark.session import get_spark
-from weatherdatapipeline_spark.sources.catalog import TableCatalog
+from weatherdatapipeline_spark.sources.catalog import TableCatalog, load_batch
 from weatherdatapipeline_spark.sources.synthetic import synthetic_weather
 from weatherdatapipeline_spark.streaming.jobs import (
     run_available_now_to_memory,
@@ -37,11 +38,7 @@ def main() -> None:
     print(f"extracted {weather.count()} observations")
 
     # --- L-path: the four reference sinks + single-pass stats ---
-    cat.append_raw(weather)
-    cat.overwrite_current(weather)
-    cat.append_batch_partition(weather)
-    stats = batch_statistics(weather)
-    cat.append_stats(stats)
+    stats = load_batch(cat, weather)
     print("stats:", stats.collect()[0].asDict())
     print("conditions:", condition_histogram(weather).collect()[0]["weather_conditions"])
     print("catalog tables:", cat.list_tables())

@@ -10,9 +10,10 @@ Run: python examples/sketch_and_design_demo.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from weatherdatapipeline_spark.queries import (
     bottomk_quantile_sketch,

@@ -8,10 +8,11 @@ Run: python examples/training_corpus_demo.py [sf_dir] [workdir]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -279,6 +279,28 @@ def test_pq_adc_topk_matches_numpy(spark, sf_dir):
         assert abs(dist - want[vid]) < 1e-5
 
 
+def test_pq_adc_topk_null_code_and_stale_width(spark):
+    """A NULL code has no ADC distance: NULL, ranked after every scored
+    row (codegen's element_at would otherwise read a table entry for the
+    NULL index). A row with more or fewer codes than codebooks was
+    written under other codebooks and must fail the query, not score,
+    whether or not it also holds a NULL."""
+    from weatherdatapipeline_spark.operators.embeddings import pq_adc_topk
+
+    # m=2 subspaces of one dimension, k=2 entries each; query (0, 0):
+    # lookup tables [1, 4] and [9, 16]
+    cbs = [[[1.0], [2.0]], [[3.0], [4.0]]]
+    schema = "vec_id long, pq_codes array<long>"
+    ok = [(1, [0, 0]), (2, [1, 1]), (3, [1, None])]
+    top = pq_adc_topk(spark.createDataFrame(ok, schema), cbs, [0.0, 0.0])
+    assert [tuple(r) for r in top.collect()] == [(1, 10.0), (2, 20.0), (3, None)]
+    # [1, None, 0]: too wide AND holding a NULL -- the width check wins
+    for stale in ([0, 0, 1], [1], [1, None, 0], [None]):
+        codes = spark.createDataFrame(ok + [(4, stale)], schema)
+        with pytest.raises(Exception, match="pq_codes width"):
+            pq_adc_topk(codes, cbs, [0.0, 0.0]).collect()
+
+
 def test_quantize_tolerates_nonfinite_components(spark):
     """A single NaN/Inf component must not abort the job under ANSI mode
     (CAST_OVERFLOW); the clamp degrades it to +/-127. One corrupt vector

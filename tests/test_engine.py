@@ -85,6 +85,30 @@ def test_predict_result_does_not_rescan_raw(engine):
         assert preds.count() == 30
 
 
+def test_run_etl_one_batch_id_per_batch(spark, tmp_path):
+    """The raw log's batch_id equals the batch partition's value even when
+    the clock passes a second boundary between the two writes."""
+    import time
+
+    from weatherdatapipeline_spark.sources.catalog import TableCatalog
+
+    class SlowPartitionCatalog(TableCatalog):
+        def append_batch_partition(self, *args, **kwargs):
+            time.sleep(1.1)
+            return super().append_batch_partition(*args, **kwargs)
+
+    eng = WeatherEngine(spark, str(tmp_path), source=lambda s: synthetic_weather(s, n_batches=2))
+    eng.catalog = SlowPartitionCatalog(spark, str(tmp_path))
+    assert eng.run_etl()["records"] == 20
+
+    def ids(table):
+        return {r[0] for r in eng.table(table).select("batch_id").distinct().collect()}
+
+    raw_ids = ids("raw_weather")
+    assert len(raw_ids) == 1
+    assert ids("weather_batches") == raw_ids
+
+
 def test_predict_without_model_raises(spark, tmp_path_factory):
     eng = WeatherEngine(spark, str(tmp_path_factory.mktemp("cold")))
     eng.run_etl()

@@ -76,6 +76,43 @@ def test_train_produces_metrics(trained):
     assert models.metrics["mae"] >= 0
 
 
+def test_train_fold_metrics_equal_serial_fits(trained):
+    """The concurrently issued CV fits score exactly as serial fits of the
+    same folds, written out here one after the other."""
+    from pyspark.ml.classification import RandomForestClassifier
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.regression import RandomForestRegressor
+
+    from weatherdatapipeline_spark.ml.pipeline import with_time_order
+    from weatherdatapipeline_spark.operators.features import engineer_features
+
+    models, weather = trained
+    feats, cols = engineer_features(
+        weather, inference=False, categories=models.categories, **models.feature_config
+    )
+    feats = with_time_order(feats)
+    assembled = models.label_indexer.transform(
+        VectorAssembler(inputCols=cols, outputCol="features").transform(feats)
+    )
+    folds = []
+    for train_end, val_end in time_series_splits(feats.count(), 3):
+        tr = assembled.filter(F.col("_row") <= train_end)
+        va = assembled.filter((F.col("_row") > train_end) & (F.col("_row") <= val_end))
+        reg = RandomForestRegressor(
+            featuresCol="features", labelCol="target_temp_next", numTrees=5, seed=42
+        ).fit(tr)
+        clf = RandomForestClassifier(
+            featuresCol="features", labelCol="label_idx", numTrees=5, seed=42
+        ).fit(tr)
+        folds.append({
+            **regression_metrics(reg.transform(va), "target_temp_next", "prediction"),
+            **classification_metrics(clf.transform(va), "label_idx", "prediction"),
+        })
+    assert len(folds) == models.metrics["n_folds"] == 3
+    for k in ("mae", "rmse", "accuracy", "weighted_f1"):
+        assert models.metrics[k] == sum(f[k] for f in folds) / len(folds), k
+
+
 def test_train_adaptive_feature_fallback(spark, tmp_path):
     """Small corpora retry with lighter lags/windows before the hard floor
     (reference training.py:29-40). 80 raw rows -> default depth leaves 40

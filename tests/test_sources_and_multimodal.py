@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import json
+from datetime import datetime, timezone
+from zoneinfo import ZoneInfo
 
 import pandas as pd
 import pytest
@@ -61,15 +63,21 @@ def test_synthetic_weather_shape_and_determinism(spark):
 def test_catalog_sinks_roundtrip(spark, tmp_path):
     cat = TableCatalog(spark, str(tmp_path))
     df = synthetic_weather(spark, n_batches=2)
-    cat.append_raw(df)
-    cat.append_raw(df)  # append log grows
+    at = datetime(2024, 5, 1, 12, 30, 45, tzinfo=timezone.utc)
+    cat.append_raw(df, at)
+    cat.append_raw(df, at)  # append log grows
     assert cat.read("raw_weather").count() == 40
     cat.overwrite_current(df)
     cur = cat.read("current_weather")
     assert cur.count() == 10  # latest row per city
     assert cur.filter(F.col("is_current")).count() == 10
-    cat.append_batch_partition(df)
-    assert "batch_id" in cat.read("weather_batches").columns
+    cat.append_batch_partition(df, at)
+    # the one driver instant, formatted in the session time zone
+    want = at.astimezone(ZoneInfo(spark.conf.get("spark.sql.session.timeZone")))
+    want = want.strftime("%Y%m%d_%H%M%S")
+    for table in ("raw_weather", "weather_batches"):
+        ids = cat.read(table).select("batch_id").distinct().collect()
+        assert [r[0] for r in ids] == [want], table
     assert sorted(cat.list_tables()) == ["current_weather", "raw_weather", "weather_batches"]
 
 

@@ -33,10 +33,11 @@ Usage: python tools/check_oracle.py [--strict] [--emit PATH] [sf_dir] [query ...
 from __future__ import annotations
 
 import math
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

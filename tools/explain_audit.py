@@ -13,10 +13,11 @@ Usage: python tools/explain_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from weatherdatapipeline_spark.queries import QUERIES
 from weatherdatapipeline_spark.session import get_spark

@@ -19,10 +19,11 @@ Usage: python tools/schedule_stability.py [--all] [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.check_oracle import strict_cell  # noqa: E402
 

@@ -28,8 +28,7 @@ from pyspark.sql import functions as F
 from .ml.pipeline import predict as _predict
 from .ml.pipeline import train as _train
 from .ml.registry import LocalRegistry
-from .operators.stats import batch_statistics
-from .sources.catalog import TableCatalog
+from .sources.catalog import TableCatalog, load_batch
 from .sources.synthetic import synthetic_weather
 
 MODEL_NAME = "weather_models"
@@ -51,15 +50,12 @@ class WeatherEngine:
     # --- E-path --------------------------------------------------------
 
     def run_etl(self) -> dict:
-        """Extract → four sinks + stats (reference main.py:70-112)."""
+        """Extract → four sinks + stats (reference main.py:70-112): one
+        ``load_batch`` of the extracted batch, whose four writes run
+        concurrently, then the summary read from the stats frame it wrote."""
         batch = self.source(self.spark).persist()
         try:
-            self.catalog.append_raw(batch)
-            self.catalog.overwrite_current(batch)
-            self.catalog.append_batch_partition(batch)
-            stats = batch_statistics(batch)
-            self.catalog.append_stats(stats)
-            row = stats.collect()[0]
+            row = load_batch(self.catalog, batch).collect()[0]
             return {
                 "status": "success",
                 "records": row["total_records"],

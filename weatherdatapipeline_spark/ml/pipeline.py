@@ -15,9 +15,16 @@ Mapping (SURVEY.md §3.2):
   the registry entry; inference realigns with align_features
 
 Scale: categories are discovered once, in one job; training data flows
-through ONE VectorAssembler plan; CV folds are row_number range filters —
-no per-fold shuffles or emptiness probes. RF fits are the dominant cost and
-parallelize in the JVM. Inference is one scoring pass, no key join.
+through ONE VectorAssembler plan, cached and filled by one count; CV folds
+are row_number range filters — no per-fold shuffles or emptiness probes.
+The fits are the dominant cost and, on small corpora, mostly driver and
+scheduling latency: every fold's regressor and classifier fit + score and
+the two final refits are independent, so ``train`` issues all of them at
+once through ``session.run_concurrently`` — 2·(n_splits + 1) threads at
+most, each fitting its own estimator copy (one shared estimator's param
+transfer to the JVM is not thread-safe). The Spark scheduler shares the
+cores among their jobs; each fit is the same as a serial fit. Inference
+is one scoring pass, no key join.
 """
 
 from __future__ import annotations
@@ -38,6 +45,7 @@ from ..operators.features import (
     engineer_features,
     with_calendar,
 )
+from ..session import run_concurrently
 
 
 def with_time_order(df: DataFrame, tiebreaker: str | None = None) -> DataFrame:
@@ -172,6 +180,8 @@ def train(
         inputCol="target_condition", outputCol="label_idx", stringOrderType="alphabetAsc"
     ).fit(assembled)
     assembled = indexer.transform(assembled).persist()
+    # fill the cache once: the concurrent fits below would race to fill it
+    assembled.count()
 
     reg = RandomForestRegressor(
         featuresCol="features", labelCol="target_temp_next", numTrees=n_trees, seed=42
@@ -186,16 +196,24 @@ def train(
             featuresCol="features", labelCol="label_idx", numTrees=n_trees, seed=42
         )
 
-    fold_metrics: list[dict[str, float]] = []
+    def fit(est, rows: DataFrame):
+        est = est.copy()
+        return lambda: est.fit(rows)
+
+    def fit_and_score(est, tr: DataFrame, va: DataFrame, metric_fn, label: str):
+        est = est.copy()
+        return lambda: metric_fn(est.fit(tr).transform(va), label, "prediction")
+
+    thunks = []
     for train_end, val_end in time_series_splits(n, n_splits):
         tr = assembled.filter(F.col("_row") <= train_end)
         va = assembled.filter((F.col("_row") > train_end) & (F.col("_row") <= val_end))
-        m = {}
-        scored_r = reg.fit(tr).transform(va)
-        m.update(regression_metrics(scored_r, "target_temp_next", "prediction"))
-        scored_c = clf.fit(tr).transform(va)
-        m.update(classification_metrics(scored_c, "label_idx", "prediction"))
-        fold_metrics.append(m)
+        thunks.append(fit_and_score(reg, tr, va, regression_metrics, "target_temp_next"))
+        thunks.append(fit_and_score(clf, tr, va, classification_metrics, "label_idx"))
+    *scores, final_reg, final_clf = run_concurrently(
+        weather.sparkSession, *thunks, fit(reg, assembled), fit(clf, assembled)
+    )
+    fold_metrics = [{**r, **c} for r, c in zip(scores[::2], scores[1::2])]
 
     metrics = {
         k: sum(m[k] for m in fold_metrics) / len(fold_metrics)
@@ -204,8 +222,6 @@ def train(
     metrics["n_rows"] = float(n)
     metrics["n_folds"] = float(len(fold_metrics))
 
-    final_reg = reg.fit(assembled)
-    final_clf = clf.fit(assembled)
     assembled.unpersist()
     feats.unpersist()
     return TrainedModels(

@@ -19,6 +19,10 @@ import os
 import shutil
 from dataclasses import asdict, dataclass, field
 
+from pyspark.sql import SparkSession
+
+from ..session import run_concurrently
+
 
 @dataclass
 class ModelVersion:
@@ -75,14 +79,20 @@ class LocalRegistry:
         return self.latest(name)
 
     def log(self, name: str, models, params: dict) -> ModelVersion:
-        """Register a new version from a TrainedModels bundle."""
+        """Register a new version from a TrainedModels bundle. The three
+        Spark ML models are saved concurrently, each into its own directory."""
         prev = self.latest(name)
         version = (prev.version + 1) if prev else 1
         vdir = os.path.join(self.root, name, f"v{version}")
         os.makedirs(vdir, exist_ok=True)
-        models.regressor.write().overwrite().save(os.path.join(vdir, "regressor"))
-        models.classifier.write().overwrite().save(os.path.join(vdir, "classifier"))
-        models.label_indexer.write().overwrite().save(os.path.join(vdir, "label_indexer"))
+        run_concurrently(
+            SparkSession.active(),
+            lambda: models.regressor.write().overwrite().save(os.path.join(vdir, "regressor")),
+            lambda: models.classifier.write().overwrite().save(os.path.join(vdir, "classifier")),
+            lambda: models.label_indexer.write().overwrite().save(
+                os.path.join(vdir, "label_indexer")
+            ),
+        )
         self._models[vdir] = (models.regressor, models.classifier, models.label_indexer)
         mv = ModelVersion(
             name=name,

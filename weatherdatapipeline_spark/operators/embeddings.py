@@ -606,33 +606,44 @@ def pq_adc_topk(
     computed once (driver-side numpy, m*k floats) and each row costs m
     literal-array lookups — the point of PQ serving is that NO float
     vector math and no original vectors are touched per row. TakeOrdered
-    gives the global top-k without a sort. Returns (id, adc_distance)."""
+    gives the global top-k without a sort. Returns (id, adc_distance).
+    A row whose code count is not m raises, NULL codes or not (codes
+    written under other codebooks); a row of m codes with a NULL code has
+    a NULL distance and ranks last."""
     import numpy as np
 
     q = np.asarray(query_vec, dtype="float64")
     m, k, sub_d = _pq_validate(codebooks)
     if q.shape[0] != m * sub_d:
         raise ValueError(f"query dim {q.shape[0]} != m*sub_d = {m * sub_d}")
+    c = F.col(codes_col)
     dist = None
     for j, cb in enumerate(codebooks):
         qs = q[j * sub_d : (j + 1) * sub_d]
-        lut = [float(((np.asarray(c) - qs) ** 2).sum()) for c in cb]
-        term = F.element_at(
-            darray(lut),
-            (F.col(codes_col)[j] + 1).cast("int"),
-        )
+        lut = [float(((np.asarray(v) - qs) ** 2).sum()) for v in cb]
+        term = F.element_at(darray(lut), (c[j] + 1).cast("int"))
         dist = term if dist is None else dist + term
-    # stale-artifact guard: codes written under a different m would make
-    # codes[j] NULL (out-of-range getItem) -> NULL distances that rank
-    # FIRST under NULLS FIRST; fail loudly per row instead
-    width_ok = F.assert_true(
-        F.size(F.col(codes_col)) == F.lit(m),
-        F.lit(f"pq_codes width != m={m}: codes were written under different codebooks"),
+    # Both guards sit in the distance value itself, so no optimizer rule
+    # can prune them. Stale artifact: codes written under a different m
+    # must fail, not score (a short row's missing codes would read as
+    # NULL, a long row's extra codes would be ignored); the width is
+    # tested before the NULL-code mask, so a stale row that also holds a
+    # NULL still fails. A NULL code in a row of the right width gives a
+    # NULL distance, ranked last; it must not reach element_at, whose
+    # codegen returns an element for a NULL index.
+    guarded = (
+        F.when(c.isNull(), F.lit(None))
+        .when(
+            F.size(c) != m,
+            F.raise_error(
+                F.lit(f"pq_codes width != m={m}: codes were written under different codebooks")
+            ),
+        )
+        .when(F.exists(c, lambda x: x.isNull()), F.lit(None))
+        .otherwise(dist)
     )
-    scored = codes.select(
-        F.col(id_col), F.round(dist, 6).alias("adc_distance"), width_ok.alias("_chk")
-    ).drop("_chk")
-    return scored.orderBy("adc_distance", id_col).limit(topk)
+    scored = codes.select(F.col(id_col), F.round(guarded, 6).alias("adc_distance"))
+    return scored.orderBy(F.asc_nulls_last("adc_distance"), id_col).limit(topk)
 
 
 def _sq_dist_to_literal(vec_col: str, centroid: list[float]):

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .iterate import fixpoint
+from .text import persist_scoped
 
 
 def pagerank(
@@ -44,21 +45,19 @@ def pagerank(
     vocabulary, the same bounded-``collect`` contract as the centroid and
     percentile operators.
     """
-    from .text import persist_scoped as _persist_scoped
-
     # persist-scoped (r15, guide §5.3): the edge projection and the node
     # vocabulary are consumed by EVERY iteration (plus the count action)
     # — uncached, the caller's edge-extraction pipeline re-ran once per
     # round; cached, the rounds iterate over the vocabulary-bounded
     # tables only
-    e = _persist_scoped(
+    e = persist_scoped(
         edges.select(
             F.col(src).alias("_src"),
             F.col(dst).alias("node"),
             F.col(weight).alias("_w"),
         )
     )
-    nodes = _persist_scoped(
+    nodes = persist_scoped(
         e.select(F.col("_src").alias("node"))
         .union(e.select("node"))
         .distinct()
@@ -200,11 +199,15 @@ def edge_triangle_support(
 
 
 def _undirected(edges: DataFrame, a: str, b: str, *extra) -> DataFrame:
-    """(src, dst, *extra) with both directions of every edge, deduplicated."""
-    return (
+    """(src, dst, *extra) with both directions of every edge, deduplicated,
+    persisted in the build's cache scope and filled once: every round of
+    the BFS and SSSP loops joins against it, and un-cached each round's
+    checkpoint would re-run the caller's edge plan."""
+    return persist_scoped(
         edges.select(F.col(a).alias("src"), F.col(b).alias("dst"), *extra)
         .union(edges.select(F.col(b).alias("src"), F.col(a).alias("dst"), *extra))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
 
 

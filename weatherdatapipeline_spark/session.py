@@ -17,13 +17,21 @@ the configuration knobs that matter at 100 TB:
   ``spark.sql.shuffle.partitions`` (set to ~2-3x total cores there).
 - **maxPartitionBytes 128m**: scan-side split size so a 100 TB input
   becomes ~800k well-sized tasks rather than a few huge ones.
+
+``run_concurrently`` is the one way this package issues independent
+driver calls at the same time (CV fits, the four batch sinks, model
+saves): on small inputs each call is mostly scheduling latency, and
+concurrent jobs fill the cores one call alone leaves idle.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 def default_parallelism() -> int:
@@ -78,3 +86,18 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
+
+def run_concurrently(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
+    """Call every thunk on its own thread and return their results in
+    argument order; after all have finished, re-raise the first failure
+    in argument order.
+
+    The thunks must be independent: none may read another's output. Each
+    runs under ``inheritable_thread_target(spark)``, so the jobs it starts
+    carry the caller's job group, local properties and tags (a new JVM
+    thread would otherwise start with none). The pool has exactly one
+    thread per thunk, and the Spark scheduler shares the cores among
+    their jobs."""
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    return [f.result() for f in futures]

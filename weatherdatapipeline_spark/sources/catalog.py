@@ -14,19 +14,54 @@ Per-batch *collections* become *partitions*: partition pruning turns
 "latest batch" queries into single-directory scans, and the catalog stays
 O(1) tables instead of O(runs) (SURVEY.md §1.1). At 100 TB, partitioning
 is by date + batch — bounded directory fan-out, prunable by time range.
+
+``load_batch`` is the one loader of a poll batch into the four sinks,
+shared by the batch endpoint (``WeatherEngine.run_etl``) and the streaming
+job (``streaming_etl``).
 """
 
 from __future__ import annotations
+
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.relational import latest_per_key
+from ..operators.stats import batch_statistics
+from ..session import run_concurrently
 
 
-def batch_id_col():
-    """The reference's batch-id format (load.py:32 strftime)."""
-    return F.date_format(F.current_timestamp(), "yyyyMMdd_HHmmss")
+def batch_id_col(at: datetime):
+    """The reference's batch-id format (load.py:32 strftime) of the
+    instant ``at`` in the session time zone. The instant is taken once on
+    the driver, not by each writing query, so every sink of one batch
+    carries the same id."""
+    return F.date_format(F.lit(at), "yyyyMMdd_HHmmss")
+
+
+def load_batch(catalog, batch: DataFrame) -> DataFrame:
+    """Load one poll batch into the four reference sinks (S5-S8): append
+    the raw log, replace the latest-per-city snapshot, append the batch
+    partition, append the one-row statistics. Returns that statistics
+    frame (lazy, over ``batch``).
+
+    The four writes read only ``batch``, none another's output, so they
+    are issued concurrently as separate Spark jobs — on a poll-sized batch
+    each write is mostly scheduling latency. The caller persists
+    ``batch``. The batch id is taken once, so the raw log's ``batch_id``
+    equals the batch partition's value. Each write goes through
+    ``catalog``'s own method, so a wrapping catalog sees all four calls."""
+    batch_time = datetime.now(timezone.utc)
+    stats = batch_statistics(batch)
+    run_concurrently(
+        batch.sparkSession,
+        lambda: catalog.append_raw(batch, batch_time),
+        lambda: catalog.overwrite_current(batch),
+        lambda: catalog.append_batch_partition(batch, batch_time),
+        lambda: catalog.append_stats(stats),
+    )
+    return stats
 
 
 class TableCatalog:
@@ -60,11 +95,12 @@ class TableCatalog:
 
     # --- the four reference sinks -------------------------------------
 
-    def append_raw(self, df: DataFrame, name: str = "raw_weather") -> None:
-        """S5 append-only history log with ingestion metadata (P2)."""
+    def append_raw(self, df: DataFrame, batch_time: datetime, name: str = "raw_weather") -> None:
+        """S5 append-only history log with ingestion metadata (P2);
+        ``batch_id`` is ``batch_id_col(batch_time)``."""
         (
             df.withColumn("inserted_at", F.current_timestamp())
-            .withColumn("batch_id", batch_id_col())
+            .withColumn("batch_id", batch_id_col(batch_time))
             .write.mode("append")
             .parquet(self.path(name))
         )
@@ -77,11 +113,14 @@ class TableCatalog:
         ).withColumn("is_current", F.lit(True))
         snap.write.mode("overwrite").parquet(self.path(name))
 
-    def append_batch_partition(self, df: DataFrame, name: str = "weather_batches") -> None:
+    def append_batch_partition(
+        self, df: DataFrame, batch_time: datetime, name: str = "weather_batches"
+    ) -> None:
         """S7 per-batch sink as a partitioned write — `weather_batch_<ts>`
-        collections become batch_id= partitions of one table."""
+        collections become batch_id= partitions of one table, the value
+        ``batch_id_col(batch_time)``."""
         (
-            df.withColumn("batch_id", batch_id_col())
+            df.withColumn("batch_id", batch_id_col(batch_time))
             .write.mode("append")
             .partitionBy("batch_id")
             .parquet(self.path(name))

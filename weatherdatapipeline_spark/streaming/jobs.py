@@ -286,24 +286,25 @@ def streaming_etl(
 ):
     """The reference's whole scheduler-driven ETL (scheduler.py:20-49 →
     extract→transform→load every 5 min) as ONE foreachBatch streaming job:
-    each micro-batch appends the raw log, upserts the latest-per-city
-    snapshot, appends the batch partition, and appends the single-row
-    stats document — the four sinks of SURVEY §3.1, incrementally.
+    each non-empty micro-batch goes through ``sources.catalog.load_batch``,
+    which appends the raw log, upserts the latest-per-city snapshot,
+    appends the batch partition, and appends the single-row stats
+    document — the four sinks of SURVEY §3.1, incrementally, issued as
+    four concurrent jobs (foreachBatch hands the sink an ordinary batch
+    frame).
 
     Pass ``trigger_minutes=5`` for the reference cadence (ST1) or
     ``available_now=True`` to drain a backlog and stop.
     """
-    from ..operators.stats import batch_statistics
+    from ..sources.catalog import load_batch
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # persisted first, so the emptiness probe also fills the cache of
+        # the batch's first partition (all of a one-file poll batch)
         batch_df.persist()
         try:
-            catalog.append_raw(batch_df)
-            catalog.overwrite_current(batch_df)
-            catalog.append_batch_partition(batch_df)
-            catalog.append_stats(batch_statistics(batch_df))
+            if not batch_df.isEmpty():
+                load_batch(catalog, batch_df)
         finally:
             batch_df.unpersist()
 
