@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from weatherdatapipeline_spark.operators import dedup as _D
 from weatherdatapipeline_spark.queries import QUERIES, _t
-from weatherdatapipeline_spark.session import get_spark
+from weatherdatapipeline_spark.session import default_parallelism, get_spark
 
 # Direct-operator bench entries (not driver-registered queries): the
 # registered dedup_minhash_pairs runs the PORTABLE md5 family so it can be
@@ -597,7 +597,7 @@ def main() -> None:
         "machine": {
             "loadavg_start": round(load_start, 2),
             "calibration_sec": calibration,
-            "cpus": os.cpu_count(),
+            "cpus": default_parallelism(),
         },
     }
     if errors:

@@ -214,6 +214,39 @@ def test_pca_power_scores_match_eigh_direction(spark, sf_dir):
     assert abs(corr) > 0.999, corr
 
 
+def _emb(spark, vectors):
+    return spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vectors)], "vec_id long, embedding array<double>"
+    )
+
+
+def test_pca_power_scores_empty_input_returns_no_rows(spark):
+    from weatherdatapipeline_spark.operators.embeddings import pca_power_scores
+
+    out = pca_power_scores(_emb(spark, []))
+    assert out.columns == ["vec_id", "pc1_score"]
+    assert out.collect() == []
+
+
+def test_pca_power_scores_constant_vectors_score_zero(spark):
+    """Zero covariance: every centered score is 0 (no division by a zero
+    max cell or a zero start-vector norm)."""
+    from weatherdatapipeline_spark.operators.embeddings import pca_power_scores
+
+    got = pca_power_scores(_emb(spark, [[1.5, -2.0, 3.0]] * 4)).collect()
+    assert sorted(r["vec_id"] for r in got) == [0, 1, 2, 3]
+    assert all(r["pc1_score"] == 0.0 for r in got)
+
+
+def test_pca_power_scores_start_vector_orthogonal_raises(spark):
+    """Points on the (1, -1) line: the covariance has zero row sums, so
+    the all-ones start vector has no component along PC1."""
+    from weatherdatapipeline_spark.operators.embeddings import pca_power_scores
+
+    with pytest.raises(ValueError, match="orthogonal"):
+        pca_power_scores(_emb(spark, [[1.0, -1.0], [2.0, -2.0], [3.0, -3.0]]))
+
+
 def test_pq_encode_matches_numpy(spark, sf_dir):
     """PQ encoding equals the numpy argmin per subspace, and a codebook
     seed vector encodes to its own index in every subspace."""

@@ -5,6 +5,7 @@ tools/check_oracle.py run (which remains the authoritative gate at sf0.01)."""
 from __future__ import annotations
 
 import math
+import os
 from collections import Counter
 
 import duckdb
@@ -100,3 +101,60 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     ms = Counter(tuple(norm(r[i]) for i in s_order) for r in srows)
     md = Counter(tuple(norm(r[i]) for i in d_order) for r in drows)
     assert ms == md
+
+
+# ---- register_sql binding: queries whose build is spark.sql(oracle) ----
+
+
+def _duck_at(d):
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
+    return con
+
+
+def _strict_problems(sdf, d, name):
+    from tools.check_oracle import strict_compare
+
+    return strict_compare(sdf.toPandas(), _duck_at(d).execute(ORACLES[name]).df())
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp[ns]", "timestamp[us, tz=UTC]"])
+def test_register_sql_pins_utc_for_a_non_utc_caller(spark, sf_dir, tmp_path, ts_type):
+    """hour(ts) over events in the legacy nanos layout and in a UTC-
+    adjusted layout, built from a Los Angeles session: the build binds
+    events through _t (nanos decode, UTC pin), so it matches DuckDB on
+    the original files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    name = "cochran_armitage_hour_trend"
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    unit, tz = ("ns", None) if ts_type == "timestamp[ns]" else ("us", "UTC")
+    i = ev.schema.get_field_index("ts")
+    ev = ev.set_column(i, "ts", ev.column("ts").cast(pa.timestamp(unit, tz=tz)))
+    pq.write_table(ev, str(tmp_path / "events.parquet"))
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        spd = QUERIES[name](spark, str(tmp_path)).toPandas()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    from tools.check_oracle import strict_compare
+
+    assert strict_compare(spd, _duck_at(sf_dir).execute(ORACLES[name]).df()) == []
+
+
+def test_register_sql_binds_each_builds_own_scale(spark, sf_dir):
+    name = "q1_pricing_summary"
+    other = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    for d in (sf_dir, other):
+        assert _strict_problems(QUERIES[name](spark, d), d, name) == []
+
+
+def test_register_sql_frame_keeps_its_tables_after_a_later_build(spark, sf_dir):
+    name = "q1_pricing_summary"
+    other = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    first = QUERIES[name](spark, sf_dir)
+    QUERIES[name](spark, other)  # re-binds the same view names to other files
+    assert _strict_problems(first, sf_dir, name) == []

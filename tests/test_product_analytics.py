@@ -13,7 +13,7 @@ from weatherdatapipeline_spark.queries import (
     ORACLE_FUNNEL,
     ORACLE_OHLC,
     ORACLE_RETENTION,
-    funnel_view_click_purchase,
+    QUERIES,
     ohlc_resample_daily,
     retention_weekly_cohorts,
 )
@@ -50,7 +50,7 @@ def test_funnel_strict_ordering(spark, tmp_path):
         (8, TS0, 4, "view", 1.0),
     ]
     sf = _write_events(spark, tmp_path, rows)
-    got = funnel_view_click_purchase(spark, sf).collect()[0].asDict()
+    got = QUERIES["funnel_view_click_purchase"](spark, sf).collect()[0].asDict()
     assert got["n_users"] == 4
     assert got["n_viewed"] == 3
     assert got["n_clicked"] == 2  # u1, u2
@@ -105,7 +105,7 @@ def test_funnel_single_exchange_plan(spark, sf_dir):
     """The three stacked user-windows must reuse ONE hash partitioning:
     exactly one Exchange below the window stack (plus the final 1-row agg
     exchange), never three."""
-    plan = funnel_view_click_purchase(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    plan = QUERIES["funnel_view_click_purchase"](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges <= 1, plan
 

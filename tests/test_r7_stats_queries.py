@@ -44,13 +44,13 @@ def test_diff_in_diff_recovers_planted_effect(spark, tmp_path):
 def test_jackknife_se_zero_for_homogeneous_users(spark, tmp_path):
     """Every user contributes the same per-event value, so every
     leave-one-out replicate equals the point estimate: SE must be 0."""
-    from weatherdatapipeline_spark.queries import jackknife_ratio_metric
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows = [
         (i, f"2024-01-0{1 + i % 5}T00:00:00", i % 4, 7.0) for i in range(20)
     ]
     _write_events(spark, str(tmp_path), rows)
-    got = jackknife_ratio_metric(spark, str(tmp_path)).collect()[0]
+    got = QUERIES["jackknife_ratio_metric"](spark, str(tmp_path)).collect()[0]
     assert got["ratio_estimate"] == 7.0
     assert got["jackknife_se"] == 0.0
     assert got["n_users"] == 4
@@ -59,7 +59,7 @@ def test_jackknife_se_zero_for_homogeneous_users(spark, tmp_path):
 def test_calendar_effects_pure_dow_signal(spark, tmp_path):
     """Value depends ONLY on day-of-week: R^2(dow) must be 1 (and adding
     hour cannot reduce it below ~1)."""
-    from weatherdatapipeline_spark.queries import calendar_effects_decomposition
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows = []
     eid = 0
@@ -71,7 +71,7 @@ def test_calendar_effects_pure_dow_signal(spark, tmp_path):
             )
             eid += 1
     _write_events(spark, str(tmp_path), rows)
-    got = calendar_effects_decomposition(spark, str(tmp_path)).collect()[0]
+    got = QUERIES["calendar_effects_decomposition"](spark, str(tmp_path)).collect()[0]
     assert got["r2_dow"] == pytest.approx(1.0, abs=1e-6)
     assert got["r2_dow_hour"] == pytest.approx(1.0, abs=1e-6)
 
@@ -117,7 +117,7 @@ def test_conformal_coverage_on_uniform_residuals(spark, tmp_path):
 def test_eb_shrinkage_pulls_low_n_users_harder(spark, tmp_path):
     """A 2-event outlier user must shrink toward the grand mean more
     than a 40-event user with the SAME raw mean (both 80, grand ~50)."""
-    from weatherdatapipeline_spark.queries import eb_shrunk_user_means
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows = []
     eid = 0
@@ -134,7 +134,7 @@ def test_eb_shrinkage_pulls_low_n_users_harder(spark, tmp_path):
         rows.append((eid, f"2024-01-0{1 + j}T02:00:00", 101, 79.0 + 2.0 * j))
         eid += 1
     _write_events(spark, str(tmp_path), rows)
-    got = {r["user_id"]: r for r in eb_shrunk_user_means(spark, str(tmp_path)).collect()}
+    got = {r["user_id"]: r for r in QUERIES["eb_shrunk_user_means"](spark, str(tmp_path)).collect()}
     assert got[100]["shrink_weight"] > got[101]["shrink_weight"]
     # both shrink DOWN toward the grand mean, low-n user further down
     assert got[100]["eb_mean"] > got[101]["eb_mean"]

@@ -135,7 +135,7 @@ def test_cramers_v_planted_perfect_association(spark, tmp_path):
     """documents: lang is a FUNCTION of source -> V = 1. events:
     event_type is a function of day-of-week -> V = 1. dof checks the
     contingency dimensions."""
-    from weatherdatapipeline_spark.queries import cramers_v_matrix
+    from weatherdatapipeline_spark.queries import QUERIES
 
     docs = [
         (i, "text body", ["en", "de", "fr"][i % 3], ["s_en", "s_de", "s_fr"][i % 3])
@@ -150,7 +150,7 @@ def test_cramers_v_planted_perfect_association(spark, tmp_path):
         for j in range(3):
             events.append((d * 10 + j, f"{day.isoformat()}T08:00:00", 1, 5.0, et))
     _write_events(spark, str(tmp_path), events)
-    got = {r["pair"]: r for r in cramers_v_matrix(spark, str(tmp_path)).collect()}
+    got = {r["pair"]: r for r in QUERIES["cramers_v_matrix"](spark, str(tmp_path)).collect()}
     d = got["documents_lang_source"]
     assert d["n"] == 30 and d["dof"] == 4
     assert d["cramers_v"] == pytest.approx(1.0)
@@ -162,7 +162,7 @@ def test_cramers_v_planted_perfect_association(spark, tmp_path):
 def test_gini_zero_for_equal_and_exact_small_case(spark, tmp_path):
     """Equal values -> G = 0; values [1,2,3,4] -> G = 0.25 by hand
     (2*(1+4+9+16)/(4*10) - 5/4)."""
-    from weatherdatapipeline_spark.queries import gini_concentration_by_type
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows = [(i, "2024-05-01T00:00:00", 1, 5.0, "flat") for i in range(10)]
     rows += [
@@ -170,7 +170,7 @@ def test_gini_zero_for_equal_and_exact_small_case(spark, tmp_path):
         for i, v in enumerate([1, 2, 3, 4])
     ]
     _write_events(spark, str(tmp_path), rows)
-    got = {r["event_type"]: r for r in gini_concentration_by_type(spark, str(tmp_path)).collect()}
+    got = {r["event_type"]: r for r in QUERIES["gini_concentration_by_type"](spark, str(tmp_path)).collect()}
     assert got["flat"]["gini"] == pytest.approx(0.0, abs=1e-9)
     assert got["ramp"]["n"] == 4
     assert got["ramp"]["gini"] == pytest.approx(0.25)

@@ -26,14 +26,14 @@ def test_anova_null_and_welch_df(spark, tmp_path):
     """Two groups with IDENTICAL value multisets: SSB = 0 so classic F,
     eta^2 and Welch F are all exactly 0 — and for k=2 equal-(n, var)
     groups the Welch df2 has the closed form (k^2-1)/(3*Lambda) = 4."""
-    from weatherdatapipeline_spark.queries import anova_value_by_type
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows = []
     for i, v in enumerate([1, 2, 3]):
         rows.append((i, "2024-01-01T00:00:00", 1, v, "click"))
         rows.append((10 + i, "2024-01-01T00:00:00", 2, v, "view"))
     _write_events(spark, str(tmp_path), rows)
-    got = anova_value_by_type(spark, str(tmp_path)).collect()[0]
+    got = QUERIES["anova_value_by_type"](spark, str(tmp_path)).collect()[0]
     assert got["k_groups"] == 2 and got["n"] == 6
     assert got["f_classic"] == 0.0 and got["eta_sq"] == 0.0
     assert got["f_welch"] == 0.0
@@ -43,7 +43,7 @@ def test_anova_null_and_welch_df(spark, tmp_path):
 def test_anova_separated_groups(spark, tmp_path):
     """Groups {0.9,1.0,1.1} vs {9.9,10.0,10.1}: between-group variance
     dwarfs within, so eta^2 ~ 1 and F is enormous."""
-    from weatherdatapipeline_spark.queries import anova_value_by_type
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows = []
     for i, v in enumerate([0.9, 1.0, 1.1]):
@@ -51,7 +51,7 @@ def test_anova_separated_groups(spark, tmp_path):
     for i, v in enumerate([9.9, 10.0, 10.1]):
         rows.append((10 + i, "2024-01-01T00:00:00", 2, v, "view"))
     _write_events(spark, str(tmp_path), rows)
-    got = anova_value_by_type(spark, str(tmp_path)).collect()[0]
+    got = QUERIES["anova_value_by_type"](spark, str(tmp_path)).collect()[0]
     assert got["eta_sq"] > 0.99
     assert got["f_classic"] > 1000
     assert got["f_welch"] > 1000
@@ -244,7 +244,7 @@ def test_page_hinkley_flat_vs_step(spark, tmp_path):
 def test_nbinom_equidispersed_vs_bursty(spark, tmp_path):
     """Identical daily counts: var = 0 so the dispersion index is 0 and
     nothing is flagged. Alternating 2/40 counts: index >> 1, flagged."""
-    from weatherdatapipeline_spark.queries import nbinom_overdispersion
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows, eid = [], 0
     for i in range(10):
@@ -253,7 +253,7 @@ def test_nbinom_equidispersed_vs_bursty(spark, tmp_path):
             rows.append((eid, f"{day.isoformat()}T12:00:00", 1, 1.0, "click"))
             eid += 1
     _write_events(spark, str(tmp_path), rows)
-    got = nbinom_overdispersion(spark, str(tmp_path)).collect()[0]
+    got = QUERIES["nbinom_overdispersion"](spark, str(tmp_path)).collect()[0]
     assert got["n_days"] == 10 and got["mean_daily"] == 5.0
     assert got["dispersion_index"] == 0.0 and got["overdispersed"] == 0
 
@@ -264,7 +264,7 @@ def test_nbinom_equidispersed_vs_bursty(spark, tmp_path):
             rows.append((eid, f"{day.isoformat()}T12:00:00", 1, 1.0, "click"))
             eid += 1
     _write_events(spark, str(tmp_path), rows)
-    got = nbinom_overdispersion(spark, str(tmp_path)).collect()[0]
+    got = QUERIES["nbinom_overdispersion"](spark, str(tmp_path)).collect()[0]
     assert got["dispersion_index"] > 5.0 and got["overdispersed"] == 1
 
 

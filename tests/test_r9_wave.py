@@ -188,12 +188,12 @@ def test_sql_udf_inlines_and_bands(spark, tmp_path):
     """The SQL UDF must band correctly AND inline into the JVM plan —
     no Python evaluation node anywhere (that's the whole point of a SQL
     UDF over a @udf with the same body)."""
-    from weatherdatapipeline_spark.queries import sql_udf_value_bands
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows = [(0, 1, 5.0, "a"), (1, 1, 50.0, "a"), (2, 1, 500.0, "a"),
             (3, 1, 9.99, "a"), (4, 1, 10.0, "a")]
     _write_events(spark, str(tmp_path), rows)
-    df = sql_udf_value_bands(spark, str(tmp_path))
+    df = QUERIES["sql_udf_value_bands"](spark, str(tmp_path))
     got = {r["band"]: (r["n"], r["sum_q2"]) for r in df.collect()}
     assert got["small"] == (2, 1499)  # 5.0 + 9.99 → 14.99 → 1499
     assert got["mid"] == (2, 6000)    # 50 + 10
@@ -362,7 +362,7 @@ def test_mase_backtest_closed_forms(spark, tmp_path):
     seasonal err = 7 every day ⇒ MASE = 1/7 exactly."""
     import datetime as _dt
 
-    from weatherdatapipeline_spark.queries import forecast_mase_backtest
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows, eid = [], 0
     for d in range(21):
@@ -374,7 +374,7 @@ def test_mase_backtest_closed_forms(spark, tmp_path):
         "event_type STRING, props STRING",
     )
     df.write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    [r] = forecast_mase_backtest(spark, str(tmp_path)).collect()
+    [r] = QUERIES["forecast_mase_backtest"](spark, str(tmp_path)).collect()
     assert r["n_days"] == 14  # days 8..21 have both lags
     assert r["mae_pers_q4"] == 10_000       # |y - lag1| = 1
     assert r["mae_seas_q4"] == 7 * 10_000   # |y - lag7| = 7
@@ -671,7 +671,7 @@ def test_eb_beta_binomial_shrinks_small_sources(spark, tmp_path):
     """A 4-doc source with 2 dups (raw 50%) must shrink hard toward the
     corpus prior; a 400-doc source at the same raw rate barely moves;
     shrinkage never crosses the prior mean side."""
-    from weatherdatapipeline_spark.queries import eb_beta_binomial_dup_rates
+    from weatherdatapipeline_spark.queries import QUERIES
 
     docs = []
     # big source: 400 docs, 10% dups (each dup = one repeated text)
@@ -688,7 +688,7 @@ def test_eb_beta_binomial_shrinks_small_sources(spark, tmp_path):
         for i in range(50):
             docs.append((3000 + 100 * s + i, f"mid {s} text {i}", f"mid{s}"))
     _write_documents(spark, str(tmp_path), docs)
-    got = {r["source"]: r for r in eb_beta_binomial_dup_rates(spark, str(tmp_path)).collect()}
+    got = {r["source"]: r for r in QUERIES["eb_beta_binomial_dup_rates"](spark, str(tmp_path)).collect()}
     assert got["small"]["prior_ok"] == 1
     assert got["small"]["raw_rate_q6"] == 500_000
     # real shrinkage: the 4-doc source moves meaningfully toward the low
@@ -708,7 +708,7 @@ def test_journey_trigrams_planted_path(spark, tmp_path):
     different path: the dominant trigram wins with the right support."""
     import datetime as _dt
 
-    from weatherdatapipeline_spark.queries import journey_trigrams_top20
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows, eid = [], 0
     for uid in (1, 2, 3):
@@ -722,7 +722,7 @@ def test_journey_trigrams_planted_path(spark, tmp_path):
         "event_type STRING, props STRING",
     )
     df.write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    got = journey_trigrams_top20(spark, str(tmp_path)).collect()
+    got = QUERIES["journey_trigrams_top20"](spark, str(tmp_path)).collect()
     top = got[0]
     assert (top["a"], top["b"], top["c"]) == ("view", "click", "purchase")
     assert top["n_paths"] == 3 and top["n_users"] == 3

@@ -119,8 +119,10 @@ def test_pagerank_matches_reference_loop(spark):
     assert got["a"] > got["b"] == got["c"]
 
 
-def test_seasonal_zscore_flags_cohort_outlier(spark):
+def test_seasonal_anomaly_events_flags_cohort_outlier(spark, tmp_path):
     import datetime as dt
+
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows = []
     # cohort (x, hour 0): nine 10s and one 100 -> z(100) ~ 2.846
@@ -130,12 +132,12 @@ def test_seasonal_zscore_flags_cohort_outlier(spark):
     # zero-variance cohort (y, hour 3): constant -> no outliers, no crash
     for i in range(5):
         rows.append((100 + i, dt.datetime(2024, 1, 1 + i, 3, 0), 2, "y", 7.0, "{}"))
-    ev = spark.createDataFrame(
+    spark.createDataFrame(
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
-    )
-    out = ST.seasonal_zscore_outliers(ev, z_cut=2.5).collect()
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    out = QUERIES["seasonal_anomaly_events"](spark, str(tmp_path)).collect()
     assert [r["event_id"] for r in out] == [9]
     mu = 19.0
     sd = math.sqrt((9 * 81 + 81**2) / 9.0)

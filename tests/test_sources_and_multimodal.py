@@ -149,16 +149,6 @@ def test_multimodal_frame_sampling(spark):
         assert r["count"] == (r["duration_ms"] + 999) // 1000
 
 
-def _have_pil() -> bool:
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-@pytest.mark.skipif(_have_pil(), reason="PIL installed: stdlib-only errors dormant")
 def test_decode_strict_errors_without_pil():
     # non-PNG formats have no stdlib codec → NotImplementedError
     with pytest.raises(NotImplementedError):
@@ -169,9 +159,8 @@ def test_decode_strict_errors_without_pil():
 
 
 def test_decode_real_image_any_backend():
-    # real decode runs in-sandbox: the PNG is generated by the stdlib
-    # encoder and decoded through whichever backend resolves (PIL when
-    # installed, operators/png.py otherwise)
+    # the PNG is generated by the stdlib encoder and decoded by
+    # operators/png.py
     from weatherdatapipeline_spark.operators.png import encode_png
 
     blob = encode_png(4, 3, "RGB", bytes([10, 200, 30]) * 12)
@@ -281,17 +270,12 @@ def test_multimodal_resize_geometry(spark):
 
 
 def test_multimodal_resize_real_pixels(spark):
-    # runs against whichever backend resolves: PIL when installed, the
-    # stdlib PNG codec otherwise — never skipped
-    from weatherdatapipeline_spark.operators.multimodal import (
-        _pil_image_module,
-        resize_images,
-    )
-
-    Image = _pil_image_module()
     import io
 
-    img = Image.new("RGB", (40, 20), color=(9, 8, 7))
+    from weatherdatapipeline_spark.operators.multimodal import resize_images
+    from weatherdatapipeline_spark.operators.png import stdlib_image_module
+
+    img = stdlib_image_module.new("RGB", (40, 20), color=(9, 8, 7))
     buf = io.BytesIO()
     img.save(buf, format="PNG")
     pdf = pd.DataFrame(
@@ -309,7 +293,7 @@ def test_multimodal_resize_real_pixels(spark):
     row = resize_images(media, max_side=16).collect()[0]
     assert row["resized"] == "decoded"
     assert (row["target_w"], row["target_h"]) == (16, 8)
-    back = Image.open(io.BytesIO(row["blob"]))
+    back = stdlib_image_module.open(io.BytesIO(row["blob"]))
     assert back.size == (16, 8)
 
 

@@ -573,7 +573,7 @@ def test_ks_drift_detects_planted_shift(spark):
     case: ref {1,2,3}, cur {1,2,3} -> 0; cur {11,12,13} -> 1.0."""
     import datetime as dt
 
-    from weatherdatapipeline_spark.queries import ks_drift_by_type
+    from weatherdatapipeline_spark.queries import QUERIES
 
     t_ref = dt.datetime(2024, 1, 5)
     t_cur = dt.datetime(2024, 1, 20)
@@ -591,6 +591,6 @@ def test_ks_drift_detects_planted_shift(spark):
     import tempfile, os
     d = tempfile.mkdtemp(prefix="ks_t_")
     df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
-    got = {r["event_type"]: r for r in ks_drift_by_type(spark, d).collect()}
+    got = {r["event_type"]: r for r in QUERIES["ks_drift_by_type"](spark, d).collect()}
     assert got["same"]["ks_stat"] == 0.0
     assert got["shift"]["ks_stat"] == 1.0  # fully separated supports

@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE, _calibrate  # noqa: E402
 from weatherdatapipeline_spark.queries import QUERIES  # noqa: E402
-from weatherdatapipeline_spark.session import get_spark  # noqa: E402
+from weatherdatapipeline_spark.session import default_parallelism, get_spark  # noqa: E402
 
 
 def main() -> int:
@@ -67,7 +67,7 @@ def main() -> int:
             "loadavg_start": round(load_start, 2),
             "loadavg_end": round(os.getloadavg()[0], 2),
             "calibration_sec": calibration,
-            "cpus": os.cpu_count(),
+            "cpus": default_parallelism(),
         },
     }
     if errors:

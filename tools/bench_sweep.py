@@ -38,7 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import EXTRA, _calibrate  # noqa: E402
 from weatherdatapipeline_spark.queries import QUERIES  # noqa: E402
-from weatherdatapipeline_spark.session import get_spark  # noqa: E402
+from weatherdatapipeline_spark.session import default_parallelism, get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -110,7 +110,7 @@ def main() -> int:
             "loadavg_start": round(load_start, 2),
             "loadavg_end": round(os.getloadavg()[0], 2),
             "calibration_sec": calibration,
-            "cpus": os.cpu_count(),
+            "cpus": default_parallelism(),
         },
         "note": (
             "single timed run per query after one warmup — codegen "

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 import urllib.request
@@ -25,6 +26,18 @@ from weatherdatapipeline_spark.queries import QUERIES  # noqa: E402
 from weatherdatapipeline_spark.session import get_spark  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def newest_ladder(root: str) -> str:
+    """The committed ladder of the highest round: ``bench_local_rNN.json``
+    (sidecars such as ``-contended`` or ``_x10`` are not ladders)."""
+    rounds = [
+        (int(m.group(1)), f)
+        for f in os.listdir(root)
+        for m in [re.match(r"bench_local_r(\d+)\.json$", f)]
+        if m
+    ]
+    return os.path.join(root, max(rounds)[1])
 
 
 def plan_of(df) -> str:
@@ -56,9 +69,7 @@ def main() -> int:
         elif a == "--top":
             n = int(args[i + 1])
             i += 2
-            ladder = json.load(
-                open(os.path.join(ROOT, "bench_local_r14.json"))
-            )["queries"]
+            ladder = json.load(open(newest_ladder(ROOT)))["queries"]
             names += [
                 k for k, _ in sorted(ladder.items(), key=lambda kv: -kv[1])[:n]
             ]

@@ -415,6 +415,12 @@ def pca_power_scores(
     float association noise (~1e-12) cannot fork the trajectory; the
     oracle applies the same rounding at the same points.
 
+    Degenerate inputs: with no covariance cell (no rows, or only empty
+    vectors) every row's score is NULL (no rows for an empty input); a
+    zero covariance matrix (constant vectors) scores every row 0.0; a
+    matrix whose squared power has zero row sums (the all-ones start
+    vector is orthogonal to the top component) raises ``ValueError``.
+
     r15 (guide §1.2; the r14 pacf precedent): the squaring pyramid runs
     ON THE DRIVER from the collected d^2 covariance cells. The
     relational loop spent its time on ~40 tiny AQE stages + 9 rounds of
@@ -441,18 +447,30 @@ def pca_power_scores(
     # d(d+1)/2 upper-triangle cells: a bounded driver closure of the same
     # class as the centroid/PQ-codebook LUTs (d^2 is corpus-independent)
     tri = covariance_pairs(embeddings, vec_col, round_digits=6).collect()
+    if not tri:
+        return embeddings.select(id_col, F.lit(None).cast("double").alias("pc1_score"))
     d = max(int(r["j"]) for r in tri) + 1
     C = np.zeros((d, d), dtype="float64")
     for r in tri:
         C[int(r["i"]), int(r["j"])] = r["cov"]
         C[int(r["j"]), int(r["i"])] = r["cov"]
-    for _ in range(squarings):
-        P = C @ C
-        mx = float(np.max(np.abs(P)))
-        C = np.vectorize(lambda t: _r(t / mx, vec_round))(P)
-    wv = [_r(s, vec_round) for s in C.sum(axis=1)]
-    nrm = float(np.sqrt(np.sum(np.array(wv) ** 2)))
-    val = [_r(x / nrm, vec_round) for x in wv]
+    if not np.any(C):
+        # zero covariance: every unit direction is principal and every
+        # centered score is 0 along it; take the first axis
+        val = [1.0] + [0.0] * (d - 1)
+    else:
+        for _ in range(squarings):
+            P = C @ C  # C != 0 is symmetric, so trace(P) = |C|_F^2 > 0
+            mx = float(np.max(np.abs(P)))
+            C = np.vectorize(lambda t: _r(t / mx, vec_round))(P)
+        wv = [_r(s, vec_round) for s in C.sum(axis=1)]
+        nrm = float(np.sqrt(np.sum(np.array(wv) ** 2)))
+        if nrm == 0.0:
+            raise ValueError(
+                "pca_power_scores: the all-ones start vector is orthogonal "
+                "to the top component (C^(2^s) has zero row sums)"
+            )
+        val = [_r(x / nrm, vec_round) for x in wv]
     v = embeddings.sparkSession.createDataFrame(
         [(i, val[i]) for i in range(d)], "i long, val double"
     )

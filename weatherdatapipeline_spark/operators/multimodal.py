@@ -7,10 +7,9 @@ source, the mapInPandas plumbing (batch iteration, output schema, column
 passthrough), partition sizing guidance, the PCM16 audio DSP, the
 RIFF/WAV chunk parser, and — since round 9 — the PNG image decode itself:
 ``operators/png.py`` is a pure-stdlib PNG codec (zlib inflate + the five
-spec filters), so the real decode/convert/resize arm executes even with
-no imaging library installed; PIL is preferred at call time when present
-(it adds JPEG/WebP/etc.). Only non-PNG decode without PIL remains a
-``NotImplementedError`` (those codecs genuinely aren't in the stdlib),
+spec filters) and the only image backend, so the real decode/convert/
+resize arm executes with no imaging library installed. Non-PNG decode
+raises ``NotImplementedError`` (those codecs are not in the stdlib),
 and undecodable blobs fall back to the deterministic byte-fold feature.
 
 Scale notes
@@ -43,6 +42,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .png import PNG_SIGNATURE, stdlib_image_module
 
 MEDIA_SCHEMA = StructType(
     [
@@ -94,55 +95,28 @@ def synthetic_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFra
     )
 
 
-def _pil_image_module():
-    """Image backend resolved at CALL time, never at module import, so the
-    Spark plumbing stays importable anywhere. PIL wins when installed
-    (full codec coverage); otherwise the pure-stdlib PNG codec
-    (``operators/png.py`` — zlib inflate + spec filters) backs the same
-    ``open/new/convert/resize/save`` surface, so the REAL decode arm
-    executes even in codec-free sandboxes (VERDICT r8 item 6). Never
-    returns None."""
-    try:
-        from PIL import Image  # noqa: PLC0415 - deliberate call-time import
-
-        return Image
-    except Exception:
-        from .png import stdlib_image_module  # noqa: PLC0415
-
-        return stdlib_image_module
-
-
 def decode_image_strict(blob: bytes) -> object:
-    """Decode an inline image blob: PIL when installed (any format), else
-    the stdlib PNG codec. Non-PNG blobs without PIL raise
-    NotImplementedError (a JPEG/WebP codec is genuinely not in the
+    """Decode an inline image blob with the stdlib PNG codec. Non-PNG
+    blobs raise NotImplementedError (a JPEG/WebP codec is not in the
     stdlib); corrupt or truncated PNGs raise ValueError from the decoder.
     Returns the loaded image with pixels materialized."""
     import io
 
-    Image = _pil_image_module()
-    from .png import PNG_SIGNATURE, _StdlibImageModule
-
-    if isinstance(Image, _StdlibImageModule) and not (
-        blob and blob.startswith(PNG_SIGNATURE[:4])
-    ):
-        raise NotImplementedError(
-            "non-PNG image decode requires an imaging library (PIL/libvips) "
-            "not present in this environment; `pip install pillow` enables it"
-        )
-    img = Image.open(io.BytesIO(blob))
+    if not (blob and blob.startswith(PNG_SIGNATURE[:4])):
+        raise NotImplementedError("only PNG blobs decode: no JPEG/WebP codec is available")
+    img = stdlib_image_module.open(io.BytesIO(blob))
     img.load()
     return img
 
 
-def _pil_feature(Image, blob: bytes, dim: int) -> list[float] | None:
+def _png_feature(blob: bytes, dim: int) -> list[float] | None:
     """Real decode path: grayscale, resize to ``dim`` pixels, scale to
     [0, 1]. Returns None when the blob is not a decodable image (the
     caller falls back to the byte-fold stand-in)."""
     import io
 
     try:
-        img = Image.open(io.BytesIO(blob)).convert("L").resize((dim, 1))
+        img = stdlib_image_module.open(io.BytesIO(blob)).convert("L").resize((dim, 1))
     except Exception:
         return None
     return [p / 255.0 for p in img.getdata()]
@@ -162,23 +136,19 @@ def _fake_feature(blob: bytes | None, dim: int) -> list[float]:
 def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
     """Arrow-batched feature extraction over binary blobs via mapInPandas.
 
-    The codec is resolved INSIDE the UDF on each executor (optional
-    import, PIL preferred, stdlib PNG codec otherwise): image blobs
-    decode (grayscale → resize(dim) → [0,1] floats); any other modality
-    or an undecodable blob falls back to the deterministic byte-fold
-    stand-in, so the operator is total either way. The iterator shape
-    (pdf-in → pdf-out) is identical in both paths.
+    Image blobs decode with the stdlib PNG codec (grayscale → resize(dim)
+    → [0,1] floats); any other modality or an undecodable blob falls back
+    to the deterministic byte-fold stand-in, so the operator is total.
     """
 
-    def feature(Image, modality: str, blob: bytes | None) -> list[float]:
-        if Image is not None and modality == "image" and blob is not None:
-            real = _pil_feature(Image, blob, dim)
+    def feature(modality: str, blob: bytes | None) -> list[float]:
+        if modality == "image" and blob is not None:
+            real = _png_feature(blob, dim)
             if real is not None:
                 return real
         return _fake_feature(blob, dim)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Image = _pil_image_module()  # once per task, not per row
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -186,7 +156,7 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
                     "modality": pdf["modality"],
                     "n_bytes": pdf["blob"].map(lambda b: len(b) if b is not None else 0),
                     "feature": [
-                        feature(Image, m, b)
+                        feature(m, b)
                         for m, b in zip(pdf["modality"], pdf["blob"])
                     ],
                 }
@@ -225,13 +195,11 @@ def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
     """Aspect-fit resize of image rows to ``max_side`` via mapInPandas.
 
     The TARGET-GEOMETRY math (scale = max_side / longest side, rounded
-    dims, never upscale) is real and runs in both paths — it only needs
-    the metadata columns. The PIXEL work is the optional-import tier:
-    with PIL installed the blob is decoded, resized to (target_w,
-    target_h), and re-encoded PNG (``resized='decoded'``); when the blob
-    is not decodable by the resolved backend it passes through untouched
-    (``resized='passthrough'``) so the operator is total in codec-free
-    environments. Same no-shuffle, Arrow-batched contract as
+    dims, never upscale) needs only the metadata columns. The PIXEL work
+    uses the stdlib PNG codec: the blob is decoded, resized to (target_w,
+    target_h), and re-encoded PNG (``resized='decoded'``); a blob that is
+    not a decodable PNG passes through untouched (``resized='passthrough'``),
+    so the operator is total. Same no-shuffle, Arrow-batched contract as
     extract_features."""
 
     def geometry(w, h):
@@ -241,7 +209,6 @@ def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
         return max(1, round(w * scale)), max(1, round(h * scale))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Image = _pil_image_module()  # once per task
         import io
 
         for pdf in batches:
@@ -252,9 +219,9 @@ def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
             for row in pdf.itertuples(index=False):
                 tw, th = geometry(row.width, row.height)
                 blob, how = row.blob, "passthrough"
-                if Image is not None and blob is not None and tw and th:
+                if blob is not None and tw and th:
                     try:
-                        img = Image.open(io.BytesIO(blob)).resize((tw, th))
+                        img = stdlib_image_module.open(io.BytesIO(blob)).resize((tw, th))
                         buf = io.BytesIO()
                         img.save(buf, format="PNG")
                         blob, how = buf.getvalue(), "decoded"
@@ -424,8 +391,8 @@ def image_dhash(
     media: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
 ) -> DataFrame:
     """63-bit dHash (difference hash) perceptual signature per image row:
-    decode the blob with the REAL codec (PIL when installed, else the
-    stdlib PNG decoder — zlib inflate + spec filters), convert to
+    decode the blob with the stdlib PNG decoder (zlib inflate + spec
+    filters), convert to
     grayscale, resize to the canonical 9x8 grid, and set bit ``r*8+c``
     when ``pixel[r][c] > pixel[r][c+1]`` (horizontal gradient sign — the
     standard dHash of Krawetz's "Kind of Like That"). Gradient bits are
@@ -437,7 +404,6 @@ def image_dhash(
     operator total over corrupt corpus bytes. Map-only; Arrow-batched."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Image = _pil_image_module()  # once per task
         import io
 
         for pdf in batches:
@@ -448,7 +414,7 @@ def image_dhash(
                     continue
                 try:
                     img = (
-                        Image.open(io.BytesIO(bytes(blob)))
+                        stdlib_image_module.open(io.BytesIO(bytes(blob)))
                         .convert("L")
                         .resize((_DHASH_W, _DHASH_H))
                     )
@@ -520,7 +486,7 @@ def parse_wav_metadata(
 ) -> DataFrame:
     """REAL RIFF/WAVE container parsing over opaque binary blobs — the
     third genuinely-unstubbed multimodal arm (after PCM16 DSP and the
-    optional-PIL image path): stdlib `struct` chunk walk extracting
+    stdlib PNG image path): stdlib `struct` chunk walk extracting
     channels / sample rate / bit depth / frame count / duration, so no
     external codec is needed at all. Malformed or truncated blobs yield
     valid=0 with NULL fields — the operator is total and never throws on

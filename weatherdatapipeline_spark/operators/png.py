@@ -9,9 +9,8 @@ decoder/encoder for 8-bit-depth, non-interlaced PNGs in the four
 non-palette color types (greyscale, RGB, grey+alpha, RGBA) and wraps the
 result in :class:`StdlibImage`, which mimics the slice of the PIL
 ``Image`` API the operators in ``multimodal.py`` use (``open/new/load/
-convert/resize/getdata/save/size``). When PIL *is* installed it still
-wins (see ``multimodal._pil_image_module``); this is the fallback that
-makes the decode path real everywhere.
+convert/resize/getdata/save/size``). It is the only image backend those
+operators use.
 
 Differences from PIL, by design (documented, not hidden): ``resize`` is
 nearest-neighbor (PIL defaults to bicubic) and ``convert("L")`` uses the

@@ -25,16 +25,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def join_dim(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Fact-to-dimension equi-join with an explicit broadcast hint.
-
-    AQE would usually discover the broadcast by itself, but at 100 TB the
-    cost of a mis-planned shuffle join on the fact table is high enough
-    that we pin the hint for known-small dims (region/nation-sized).
-    """
-    return fact.join(F.broadcast(dim), on=on, how=how)
-
-
 def top_k(df: DataFrame, order_by: list[Column], k: int) -> DataFrame:
     """Global top-k (reference O1: sort + tail, ``main.py:130``).
 

@@ -414,46 +414,6 @@ def ab_conversion_ztest(
     )
 
 
-def seasonal_zscore_outliers(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    z_cut: float = 2.5,
-) -> DataFrame:
-    """Seasonal-baseline anomaly detection: the expected level of a metric
-    depends on the hour of day, so each observation is z-scored against
-    its own (key, hour-of-day) cohort rather than the global mean —
-    flagging "high for 3am" that a global z-score would call normal.
-
-    The baseline table is (|keys| x 24) rows — vocabulary-sized, hence the
-    broadcast join back onto the event scan; the only wide operation is
-    one map-side-combined agg on the (key, hour) composite. Zero-variance
-    cohorts define no outliers (NULL z via try_divide on a 0 stddev).
-
-    The cut compares the ROUNDED z (6 dp) so any engine recomputing the
-    audit selects the identical row set.
-    """
-    keyed = events.withColumn("hour_of_day", F.hour(ts_col).cast("bigint"))
-    base = keyed.groupBy(key_col, "hour_of_day").agg(
-        F.avg(value_col).alias("_mu"),
-        F.stddev_samp(value_col).alias("_sd"),
-    )
-    z = F.round(
-        F.try_divide(
-            F.col(value_col) - F.col("_mu"), F.nullif(F.col("_sd"), F.lit(0.0))
-        ),
-        6,
-    )
-    return (
-        keyed.join(F.broadcast(base), [key_col, "hour_of_day"])
-        .withColumn("z_score", z)
-        .filter(F.abs(F.col("z_score")) >= z_cut)
-        .select(id_col, key_col, "hour_of_day", value_col, "z_score")
-    )
-
-
 # Poisson(1) CDF thresholds for the bootstrap weights: P(X <= k) for
 # k = 0..4; u above the last threshold draws weight 5. Shared with the
 # DuckDB oracle (queries.py interpolates these exact literals) so both
