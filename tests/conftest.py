@@ -13,16 +13,8 @@ from weatherdatapipeline_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # small local parallelism: test data is tiny, scheduling overhead dominates.
-    # The status tracker drops the oldest 10% of its jobs at once when it
-    # passes spark.ui.retainedJobs (default 1000); a test comparing job-id
-    # sets before and after a call would then see ids vanish, depending on
-    # how many jobs earlier tests ran. The limit here exceeds any test session.
-    s = get_spark(
-        "tests",
-        cpus=4,
-        extra_conf={"spark.sql.shuffle.partitions": "4", "spark.ui.retainedJobs": "1000000"},
-    )
+    # small local parallelism: test data is tiny, scheduling overhead dominates
+    s = get_spark("tests", cpus=4, extra_conf={"spark.sql.shuffle.partitions": "4"})
     yield s
 
 

@@ -32,6 +32,20 @@ def test_morton_interleave_known_values(spark):
     assert got[1] == 1 and got[2] == 2 and got[4] == 255
 
 
+def test_fixed_width_bucket_clamps_and_degenerate(spark):
+    df = spark.createDataFrame(
+        [(0.0,), (50.0,), (100.0,), (-5.0,), (105.0,)], "x DOUBLE"
+    )
+    out = df.select(
+        L.fixed_width_bucket(F.col("x"), F.lit(0.0), F.lit(100.0), 16).alias("b"),
+        L.fixed_width_bucket(F.col("x"), F.lit(7.0), F.lit(7.0), 16).alias("deg"),
+    ).collect()
+    bands = [r["b"] for r in out]
+    assert bands[0] == 0 and bands[2] == 15  # max clamps into top band
+    assert bands[3] == 0 and bands[4] == 15  # out-of-domain clamps
+    assert all(r["deg"] == 0 for r in out)  # degenerate domain, no div/0
+
+
 def test_zorder_file_summary_locality(spark, sf_dir):
     """Filing by zfile = z >> 2 drops exactly bit 0 of each dimension:
     every file's band spread must be <= 1 on BOTH dims — the pruning

@@ -157,4 +157,5 @@ def test_register_sql_frame_keeps_its_tables_after_a_later_build(spark, sf_dir):
     other = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     first = QUERIES[name](spark, sf_dir)
     QUERIES[name](spark, other)  # re-binds the same view names to other files
+    assert not spark.catalog.tableExists("lineitem")  # views dropped after analysis
     assert _strict_problems(first, sf_dir, name) == []

@@ -188,12 +188,12 @@ def test_sql_udf_inlines_and_bands(spark, tmp_path):
     """The SQL UDF must band correctly AND inline into the JVM plan —
     no Python evaluation node anywhere (that's the whole point of a SQL
     UDF over a @udf with the same body)."""
-    from weatherdatapipeline_spark.queries import QUERIES
+    from weatherdatapipeline_spark.queries import sql_udf_value_bands
 
     rows = [(0, 1, 5.0, "a"), (1, 1, 50.0, "a"), (2, 1, 500.0, "a"),
             (3, 1, 9.99, "a"), (4, 1, 10.0, "a")]
     _write_events(spark, str(tmp_path), rows)
-    df = QUERIES["sql_udf_value_bands"](spark, str(tmp_path))
+    df = sql_udf_value_bands(spark, str(tmp_path))
     got = {r["band"]: (r["n"], r["sum_q2"]) for r in df.collect()}
     assert got["small"] == (2, 1499)  # 5.0 + 9.99 → 14.99 → 1499
     assert got["mid"] == (2, 6000)    # 50 + 10

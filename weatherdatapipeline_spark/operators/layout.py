@@ -31,6 +31,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def fixed_width_bucket(
+    col: Column, vmin: Column, vmax: Column, buckets: int
+) -> Column:
+    """Bucket ``col`` into ``buckets`` equal-width bands over [vmin, vmax]
+    (band = floor((x - vmin) / width), clamped into range). A degenerate
+    domain (vmax == vmin) maps everything to band 0 rather than dividing
+    by zero (ANSI mode would raise)."""
+    width = (vmax - vmin) / F.lit(float(buckets))
+    return F.when(width == F.lit(0.0), F.lit(0)).otherwise(
+        F.least(
+            F.lit(buckets - 1),
+            F.greatest(F.lit(0), F.floor((col - vmin) / width).cast("int")),
+        )
+    )
+
+
 def morton_interleave(a: Column, b: Column, bits: int) -> Column:
     """Bit-interleave two ``bits``-wide non-negative ints into a Morton
     (Z-order) key: result bit 2i = bit i of ``a``, bit 2i+1 = bit i of

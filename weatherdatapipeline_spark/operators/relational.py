@@ -8,8 +8,9 @@ the reference (broadcast/equi, semi/anti, as-of).
 
 Scale notes
 -----------
-- Small dimensions must be broadcast: ``join_dim`` wraps the dim side in
-  ``F.broadcast`` so a 100 TB fact scan never shuffles on the dim key.
+- Small dimensions are broadcast (AQE picks a BroadcastHashJoin for the
+  region/nation-sized side) so a 100 TB fact scan never shuffles on the
+  dim key.
 - ``latest_per_key`` uses ``max_by`` (a single hash aggregate with map-side
   partial aggregation) rather than ``row_number()`` + filter (a full sort
   within every partition of the window). At 100 TB the agg form shuffles
