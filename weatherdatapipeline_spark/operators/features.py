@@ -25,12 +25,20 @@ tests/test_features_pandas_oracle.py):
   inference mode keeps all rows (reference features.py:71-77 — P6)
 
 Unlike the reference, everything is ONE lazy logical plan over a single
-DataFrame, built in three projections: ``with_calendar`` (event time,
-hour, dayofweek), one ``withColumns`` holding every lag, rolling stat and
-target over the one window spec, and one holding every one-hot column —
-no chain of per-column projections for the analyzer to re-resolve.
-Targets are columns, so the positional index alignments (J1/J4)
+DataFrame, built in three projections and a filter: ``with_calendar``
+(event time, hour, dayofweek); one projection holding every lag, rolling
+stat and target over the one window spec; one selecting keys, features
+and targets with every one-hot column; and, in training mode, the any-NULL
+filter. Targets are columns, so the positional index alignments (J1/J4)
 disappear; row identity is carried by (city, timestamp).
+
+The window and one-hot projections, the filter and ``align_features`` are
+each ONE ``selectExpr`` / ``filter`` call on SQL expression text
+(``sql_ident`` / ``sql_literal`` quote the names and levels), not a tree
+of Python ``Column`` calls: with pyspark's call-site capture each of those
+costs several driver→JVM round-trips, ~90 per one-hot column, so the plan
+for a few hundred levels took ~25k round-trips and seconds before any job
+ran. From text it costs about one round-trip per output column.
 
 Scale: the only shuffle is the hash partition on ``city`` for the windows;
 every lag/rolling/one-hot is computed inside that one exchange.
@@ -38,7 +46,7 @@ every lag/rolling/one-hot is computed inside that one exchange.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_LAGS = [1, 3]
@@ -50,6 +58,34 @@ LAG_BASES = {
     "wind": "wind_speed",
     "pressure": "pressure",
 }
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backtick-quoted, inner backticks
+    doubled. Spark substitutes ``${...}`` in expression text before parsing
+    and a quoted identifier has no escape for it, so such a name raises."""
+    if "${" in name:
+        raise ValueError(f"column name {name!r} holds '${{', which Spark SQL substitutes")
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_literal(value: int | str) -> str:
+    """``value`` as Spark SQL literal text: an int as itself, a string
+    single-quoted with backslash escapes. A doubled quote would NOT escape:
+    Spark concatenates adjacent literals, so ``'St. John''s'`` reads as
+    ``St. Johns``. ``{`` is escaped too, so no ``${...}`` is left for
+    Spark's variable substitution."""
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, str):
+        escaped = value.replace("\\", "\\\\").replace("'", "\\'").replace("{", "\\{")
+        return f"'{escaped}'"
+    raise TypeError(f"no SQL literal for {type(value).__name__} {value!r}")
+
+
+def all_not_null(cols: list[str]) -> str:
+    """SQL text that holds when no column of ``cols`` is NULL."""
+    return " AND ".join(f"{sql_ident(c)} IS NOT NULL" for c in cols)
 
 
 def _event_time(df: DataFrame, ts_col: str) -> Column:
@@ -112,38 +148,33 @@ def engineer_features(
     # timestamp) pairs; distributed ordering has no "original order", so a
     # caller-supplied tiebreaker column makes the window total and the
     # result deterministic (SURVEY.md §7.3 hard part (c)).
-    order = [F.col("timestamp")] + ([F.col(tiebreaker_col)] if tiebreaker_col else [])
-    w = Window.partitionBy("city").orderBy(*order)
+    order = ", ".join(sql_ident(c) for c in ["timestamp", tiebreaker_col] if c)
+
+    def over(frame: str = "") -> str:
+        return f"OVER (PARTITION BY `city` ORDER BY {order}{frame})"
 
     # W1: per-city lags
     derived = {
-        f"{short}_lag_{lag}": F.lag(base, lag).over(w)
+        f"{short}_lag_{lag}": f"lag({sql_ident(base)}, {lag}) {over()}"
         for lag in lags
         for short, base in LAG_BASES.items()
     }
     # W3/W4: rolling with min_periods=w mask (pandas default yields NaN
     # until the window is full; count over the frame supplies the mask)
     for win in rolling_windows:
-        frame = w.rowsBetween(-(win - 1), 0)
-        full_t = F.count("temperature").over(frame) >= win
-        full_h = F.count("humidity").over(frame) >= win
-        derived[f"temp_rollmean_{win}"] = F.when(full_t, F.avg("temperature").over(frame))
-        derived[f"temp_rollstd_{win}"] = F.when(full_t, F.stddev_samp("temperature").over(frame))
-        derived[f"humidity_rollmean_{win}"] = F.when(full_h, F.avg("humidity").over(frame))
+        frame = over(f" ROWS BETWEEN {win - 1} PRECEDING AND CURRENT ROW")
+        for name, agg, base in (
+            ("temp_rollmean", "avg", "`temperature`"),
+            ("temp_rollstd", "stddev_samp", "`temperature`"),
+            ("humidity_rollmean", "avg", "`humidity`"),
+        ):
+            derived[f"{name}_{win}"] = (
+                f"CASE WHEN count({base}) {frame} >= {win} THEN {agg}({base}) {frame} END"
+            )
     # W2: targets — lead for next-step temperature, current weather as class
-    derived["target_temp_next"] = F.lead("temperature", 1).over(w)
-    derived["target_condition"] = F.col("weather")
-    # F12: one-hot, drop_first semantics (sorted-first level dropped) over the
-    # fixed category lists, in a projection of its own ABOVE the windows: in
-    # theirs, Spark evaluates them below the window on top of with_calendar's
-    # projection, and that stack over a latest-N limit stops the top-K plan.
-    onehot = {
-        f"{c}_{level}": (F.col(c) == F.lit(level)).cast("boolean")
-        for c in ONE_HOT_COLS
-        for level in categories.get(c, [])[1:]
-    }
-    onehot_cols = list(onehot)
-    df = df.withColumns(derived).withColumns(onehot)
+    derived["target_temp_next"] = f"lead(`temperature`, 1) {over()}"
+    derived["target_condition"] = "`weather`"
+    df = df.selectExpr("*", *[f"{e} AS {sql_ident(c)}" for c, e in derived.items()])
 
     numeric_features = [
         "temperature",
@@ -158,19 +189,30 @@ def engineer_features(
             for p in ("temp_rollmean", "temp_rollstd", "humidity_rollmean")
         ],
     ]
-    feature_cols = numeric_features + onehot_cols
-
+    # F12: one-hot, drop_first semantics (sorted-first level dropped) over the
+    # fixed category lists, in a projection of its own ABOVE the windows: in
+    # theirs, Spark evaluates them below the window on top of with_calendar's
+    # projection, and that stack over a latest-N limit stops the top-K plan.
+    # The same projection keeps only keys, features and targets: the
+    # reference's drop-set and the raw one-hot sources go (pandas
+    # get_dummies removes the latter too).
+    onehot = {
+        f"{c}_{level}": f"{sql_ident(c)} = {sql_literal(level)}"
+        for c in ONE_HOT_COLS
+        for level in categories.get(c, [])[1:]
+    }
+    feature_cols = numeric_features + list(onehot)
+    targets = ["target_temp_next", "target_condition"]
+    present = set(df.columns)
+    df = df.selectExpr(
+        *[sql_ident(c) for c in ["city", "timestamp", *numeric_features] if c in present],
+        *[f"{e} AS {sql_ident(c)}" for c, e in onehot.items()],
+        *map(sql_ident, targets),
+    )
     # P6: training-mode validity filter (any-NULL feature or NULL target)
     if not inference:
-        cond = F.lit(True)
-        for c in feature_cols + ["target_temp_next", "target_condition"]:
-            cond = cond & F.col(c).isNotNull()
-        df = df.filter(cond)
-
-    keep = ["city", "timestamp"] + feature_cols + ["target_temp_next", "target_condition"]
-    # keys, features and targets only: the reference's drop-set and the raw
-    # one-hot sources go (pandas get_dummies removes the latter too)
-    return df.select(*[c for c in keep if c in df.columns]), feature_cols
+        df = df.filter(all_not_null(feature_cols + targets))
+    return df, feature_cols
 
 
 def align_features(
@@ -180,16 +222,17 @@ def align_features(
 ) -> DataFrame:
     """Schema-alignment contract at inference (reference predict.py:65-88):
     missing one-hot columns materialize as False, missing numerics as 0.0,
-    extra columns are dropped, order enforced. A pure ``select`` builder —
-    no data pass, just plan surgery."""
-    existing = set(df.columns)
-    selected = []
-    for c in expected_feature_cols:
-        if c in existing:
-            selected.append(F.col(c))
-        elif c.startswith(onehot_prefixes):
-            selected.append(F.lit(False).alias(c))
-        else:
-            selected.append(F.lit(0.0).alias(c))
-    passthrough = [c for c in df.columns if c not in expected_feature_cols]
-    return df.select(*[F.col(c) for c in passthrough], *selected)
+    feature order enforced; columns outside the expected list (keys,
+    targets) pass through in front. One ``selectExpr`` — no
+    data pass, just plan surgery. The fills are typed like ``F.lit(False)``
+    and ``F.lit(0.0)``: a bare ``0.0`` would parse as DECIMAL(1,1)."""
+    cols = df.columns
+    have, want = set(cols), set(expected_feature_cols)
+
+    def fill(c: str) -> str:
+        return f"{'false' if c.startswith(onehot_prefixes) else '0.0D'} AS {sql_ident(c)}"
+
+    return df.selectExpr(
+        *[sql_ident(c) for c in cols if c not in want],
+        *[sql_ident(c) if c in have else fill(c) for c in expected_feature_cols],
+    )

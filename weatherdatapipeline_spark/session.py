@@ -18,6 +18,11 @@ the configuration knobs that matter at 100 TB:
 - **maxPartitionBytes 128m**: scan-side split size so a 100 TB input
   becomes ~800k well-sized tasks rather than a few huge ones.
 
+Python workers import this package from its own checkout, whatever the
+driver's working directory: ``get_spark`` puts the package root on
+``spark.executorEnv.PYTHONPATH`` (workers otherwise see only the
+driver's cwd and ``PYTHONPATH``, not its ``sys.path``).
+
 ``run_concurrently`` is the one way this package issues independent
 driver calls at the same time (CV fits, the four batch sinks, model
 saves): on small inputs each call is mostly scheduling latency, and
@@ -30,8 +35,13 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
 from pyspark.util import inheritable_thread_target
+
+# the directory holding the package: what a Python worker needs on its path
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER_PATH_KEY = "spark.executorEnv.PYTHONPATH"
 
 
 def default_parallelism() -> int:
@@ -50,6 +60,10 @@ def get_spark(
     the submitter there, not here).
     """
     n = cpus or default_parallelism()
+    conf = dict(extra_conf or {})
+    # merged with a path from the caller or the submit-time conf
+    given = conf.get(WORKER_PATH_KEY) or SparkConf().get(WORKER_PATH_KEY, None)
+    conf[WORKER_PATH_KEY] = os.pathsep.join(p for p in (PACKAGE_ROOT, given) if p)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{n}]")
@@ -80,7 +94,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

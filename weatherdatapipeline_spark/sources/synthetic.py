@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.features import sql_literal
+
 # Mirrors the reference's demo city set (demo_pipeline.py:16-17) — value
 # ranges from demo_pipeline.py:23-34.
 CITIES = [
@@ -69,8 +71,10 @@ def synthetic_weather(
     cadence (reference scheduler.py:49), per-city strictly-increasing
     timestamps (FIXTURES.md A1)."""
     cities = cities or CITIES
-    city_arr = F.array(*[F.struct(F.lit(c).alias("city"), F.lit(k).alias("country"))
-                         for c, k in cities])
+    # one SQL expression, not ~6 Column calls (each a JVM round-trip) per city
+    city_arr = F.expr("array({})".format(", ".join(
+        f"named_struct('city', {sql_literal(c)}, 'country', {sql_literal(k)})" for c, k in cities
+    )))
     rows = spark.range(n_batches * len(cities)).select(
         (F.col("id") / len(cities)).cast("long").alias("batch"),
         F.pmod(F.col("id"), F.lit(len(cities))).cast("int").alias("ci"),
