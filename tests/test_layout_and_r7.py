@@ -3,7 +3,6 @@ recurrence, fuzzy decontamination."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from weatherdatapipeline_spark.operators import layout as L
@@ -117,64 +116,6 @@ def test_fuzzy_decontaminate_flags_planted_paraphrase(spark):
     got = fuzzy_decontaminate_portable(corpus, evals, threshold=0.3).collect()
     assert [(r["corpus_doc"], r["eval_doc"]) for r in got] == [(1, 100)]
     assert got[0]["jaccard"] > 0.5
-
-
-def test_write_zordered_prunes_both_dims(spark, tmp_path):
-    """The point of the Z-order WRITE path: parquet min/max footer stats
-    must let a reader skip files on EITHER dimension. A single-dim sort
-    prunes only its own dimension — every file spans the full range of
-    the other — while the Z-ordered layout bounds both."""
-    pa_pq = pytest.importorskip("pyarrow.parquet")
-    import glob
-    import os
-
-    ev = spark.range(0, 4096).select(
-        (F.col("id") % 16).cast("int").alias("vb"),
-        (F.floor(F.col("id") / 256)).cast("int").alias("db"),
-        F.col("id").alias("payload"),
-    )
-    zdir = str(tmp_path / "zordered")
-    sdir = str(tmp_path / "value_sorted")
-    L.write_zordered(ev, zdir, F.col("vb"), F.col("db"), bits=4, n_files=8)
-    (
-        ev.repartitionByRange(8, "vb")
-        .sortWithinPartitions("vb")
-        .write.mode("overwrite")
-        .parquet(sdir)
-    )
-
-    def files_matching(path, col, val):
-        hit, total = 0, 0
-        for f in glob.glob(os.path.join(path, "*.parquet")):
-            md = pa_pq.ParquetFile(f).metadata
-            lo = min(
-                md.row_group(i).column(
-                    [md.schema.column(j).name for j in range(md.num_columns)].index(col)
-                ).statistics.min
-                for i in range(md.num_row_groups)
-            )
-            hi = max(
-                md.row_group(i).column(
-                    [md.schema.column(j).name for j in range(md.num_columns)].index(col)
-                ).statistics.max
-                for i in range(md.num_row_groups)
-            )
-            total += 1
-            if lo <= val <= hi:
-                hit += 1
-        return hit, total
-
-    # dim vb: both layouts prune (the sorted layout sorts on vb)
-    zhit_v, ztot = files_matching(zdir, "vb", 3)
-    shit_v, stot = files_matching(sdir, "vb", 3)
-    assert zhit_v < ztot and shit_v < stot
-    # dim db: ONLY the z-ordered layout prunes; the vb-sorted layout
-    # spreads every db value across all files
-    zhit_d, _ = files_matching(zdir, "db", 3)
-    shit_d, _ = files_matching(sdir, "db", 3)
-    assert zhit_d < ztot, "z-order must bound the second dimension"
-    assert shit_d == stot, "single-dim sort cannot prune the other dim"
-    assert zhit_d < shit_d
 
 
 def test_data_contract_audit_detects_planted_violations(spark, tmp_path, monkeypatch):

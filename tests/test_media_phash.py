@@ -155,53 +155,3 @@ def test_audio_fingerprint_short_blob_dropped(spark):
         [(0, b"\x00\x01" * 10), (1, None)], "doc_id LONG, blob BINARY"
     )
     assert audio_fingerprint(df).count() == 0
-
-
-def _make_avi(width=320, height=240, uspf=33333, frames=90, streams=1) -> bytes:
-    import struct
-
-    avih = struct.pack(
-        "<10I", uspf, 1_000_000, 0, 0x10, frames, 0, streams, 65536, width, height
-    ) + b"\x00" * 16  # avih is 56 bytes on disk; parser needs the first 40
-    avih_chunk = b"avih" + struct.pack("<I", len(avih)) + avih
-    hdrl = b"hdrl" + avih_chunk
-    hdrl_list = b"LIST" + struct.pack("<I", len(hdrl)) + hdrl
-    movi = b"LIST" + struct.pack("<I", 4) + b"movi"
-    body = b"AVI " + hdrl_list + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_parse_avi_metadata_real_container_walk(spark):
-    from weatherdatapipeline_spark.operators.multimodal import parse_avi_metadata
-
-    rows = [
-        (0, _make_avi()),
-        (1, _make_avi(width=64, height=48, uspf=40000, frames=250, streams=2)),
-        (2, b"RIFF\x08\x00\x00\x00WAVE"),  # wrong RIFF type
-        (3, b"junk"),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "media_id LONG, blob BINARY")
-    got = {r.media_id: r for r in parse_avi_metadata(df).collect()}
-    r0 = got[0]
-    assert (r0.valid, r0.width, r0.height, r0.usec_per_frame) == (1, 320, 240, 33333)
-    assert r0.total_frames == 90 and r0.n_streams == 1
-    assert abs(r0.duration_ms - 90 * 33333 / 1000.0) < 1e-9
-    r1 = got[1]
-    assert (r1.valid, r1.width, r1.height, r1.total_frames, r1.n_streams) == (
-        1, 64, 48, 250, 2,
-    )
-    for bad in (2, 3, 4):
-        assert got[bad].valid == 0 and got[bad].width is None
-
-
-def test_parse_avi_truncated_chunk_is_invalid(spark):
-    from weatherdatapipeline_spark.operators.multimodal import _parse_avi
-
-    good = _make_avi()
-    assert _parse_avi(good) is not None
-    assert _parse_avi(good[:30]) is None  # truncated mid-header
-    # declared chunk size overruns the blob -> rejected, not crashed
-    bad = bytearray(good)
-    bad[16:20] = (10**6).to_bytes(4, "little")
-    assert _parse_avi(bytes(bad)) is None

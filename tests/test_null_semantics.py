@@ -63,3 +63,30 @@ def test_window_lag_null_vs_missing(spark):
     assert got[1] is None  # boundary null
     assert got[3] is None  # data null propagated
     assert got[2] == 10.0
+
+
+def test_rbo_rank_index_never_null(spark, tmp_path):
+    """rbo_ranking_similarity looks up each doc's suffix weight with
+    ``element_at(<literal array>, greatest(ra, rb))``. A doc with a NULL
+    score in both top-k lists must rank like the oracle's CASE WHEN ..
+    ELSE 0 count (rank 1), not reach element_at with a NULL index, whose
+    codegen returns an element instead of NULL."""
+    import duckdb
+    import pandas as pd
+
+    from weatherdatapipeline_spark.queries import ORACLES, QUERIES
+
+    pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3],
+            "text": ["a b c", "x y", None],
+            "lang": ["en"] * 3,
+            "source": ["s"] * 3,
+            "n_chars": pd.array([5, 3, None], dtype="Int64"),
+        }
+    ).to_parquet(tmp_path / "documents.parquet")
+    [got] = QUERIES["rbo_ranking_similarity"](spark, str(tmp_path)).collect()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    [want] = con.execute(ORACLES["rbo_ranking_similarity"]).fetchall()
+    assert tuple(got) == want

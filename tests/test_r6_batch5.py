@@ -119,61 +119,3 @@ def test_join_view_matches_oneshot_and_replay_is_idempotent(spark, tmp_table_roo
         (r.fk, r.dk, r.x, r.seg) for r in fact.join(dim, "dk").collect()
     }
     assert got == want and len(got) == 4
-
-
-def test_session_timeout_emits_once_after_watermark_passes(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from weatherdatapipeline_spark.streaming.jobs import (
-        session_aggregate_with_timeout,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ck")
-    out_dir = str(tmp_path / "out")
-    schema = "user_id long, ts timestamp"
-
-    def write_file(rows, name):
-        spark.createDataFrame(rows, "user_id long, ts_s long").withColumn(
-            "ts", F.timestamp_seconds("ts_s")
-        ).drop("ts_s").coalesce(1).write.mode("append").parquet(src)
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(src)
-        sess = session_aggregate_with_timeout(
-            stream, "user_id", "ts", gap="30 minutes", watermark="10 seconds"
-        )
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        try:
-            return spark.read.parquet(out_dir).collect()
-        except Exception:
-            return []
-
-    # run 1: user 7's two events; session stays OPEN (wm small < timeout).
-    # times start at 1000 (not 0): rows at event-time <= the initial
-    # watermark of 0 are dropped as late by the stateful operator
-    write_file([(7, 1000), (7, 1600)], "a")
-    first = run_once()
-    assert [r for r in first if r.user_id == 7] == []
-
-    # later runs push the watermark far past last_event + gap via another
-    # user's events; user 7's session must then emit exactly once
-    emitted = []
-    for i in range(1, 4):
-        write_file([(99, 7200 * i)], f"b{i}")
-        emitted = [r for r in run_once() if r.user_id == 7]
-        if emitted:
-            break
-    assert len(emitted) == 1
-    row = emitted[0]
-    assert int(row.session_start.timestamp()) == 1000
-    assert int(row.session_end.timestamp()) == 1600
-    assert row.n == 2

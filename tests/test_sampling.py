@@ -13,9 +13,7 @@ from weatherdatapipeline_spark.operators.sampling import (
     mixture_weighted_sample,
     sample_per_group,
     split_assign,
-    stratified_sample,
     temperature_mixture_weights,
-    train_test_split,
 )
 
 
@@ -43,7 +41,9 @@ def test_split_fractions_validated(docs):
 
 
 def test_train_test_disjoint_and_complete(docs):
-    train, test = train_test_split(docs, "doc_id", test_frac=0.2)
+    tagged = split_assign(docs, "doc_id", {"train": 0.8, "test": 0.2})
+    train = tagged.filter(F.col("split") == "train")
+    test = tagged.filter(F.col("split") == "test")
     n, nt, ns = docs.count(), train.count(), test.count()
     assert nt + ns == n
     assert train.join(test, "doc_id").count() == 0
@@ -59,13 +59,6 @@ def test_mixture_sample_keeps_full_stratum(docs):
     assert by_src.get("src0") == docs.filter("source = 'src0'").count()
     assert "src1" not in by_src  # keep=0 drops all
     assert len(by_src) == 1  # default_fraction=0 drops the rest
-
-
-def test_stratified_sample_seed_deterministic(docs):
-    fr = {"en": 0.5, "de": 0.2, "es": 0.2, "fr": 0.2, "zh": 0.2}
-    a = stratified_sample(docs, "lang", fr, seed=11).select("doc_id").collect()
-    b = stratified_sample(docs, "lang", fr, seed=11).select("doc_id").collect()
-    assert sorted(r[0] for r in a) == sorted(r[0] for r in b)
 
 
 def test_sample_per_group_exact_k_and_stable(spark, docs):

@@ -1,5 +1,5 @@
-"""Scale-path mechanisms: salted aggregation equivalence, IVF ANN recall,
-bucketed-table shuffle elimination (the SCALE.md claims, asserted)."""
+"""Scale-path mechanisms: IVF ANN recall and bucketed-table shuffle
+elimination (the SCALE.md claims, asserted)."""
 
 from __future__ import annotations
 
@@ -7,48 +7,8 @@ import re
 
 from pyspark.sql import functions as F
 
-from weatherdatapipeline_spark.operators.relational import salted_agg
 from weatherdatapipeline_spark.operators.similarity import cosine_topk, ivf_index, ivf_topk
 from weatherdatapipeline_spark.sources.catalog import TableCatalog
-
-
-def test_salted_agg_equals_direct(spark):
-    # heavily skewed: one key holds 90% of rows
-    df = spark.range(2000).select(
-        F.when(F.col("id") < 1800, F.lit("hot")).otherwise(F.concat(F.lit("k"), F.col("id"))).alias("k"),
-        (F.col("id") % 97).cast("double").alias("v"),
-    )
-    direct = {
-        r["k"]: r
-        for r in df.groupBy("k")
-        .agg(
-            F.count("v").alias("cnt"),
-            F.sum("v").alias("total"),
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-            F.avg("v").alias("mean"),
-        )
-        .collect()
-    }
-    salted = {
-        r["k"]: r
-        for r in salted_agg(
-            df,
-            ["k"],
-            {
-                "cnt": ("v", "count"),
-                "total": ("v", "sum"),
-                "lo": ("v", "min"),
-                "hi": ("v", "max"),
-                "mean": ("v", "avg"),
-            },
-        ).collect()
-    }
-    assert set(direct) == set(salted)
-    for k in direct:
-        for m in ("cnt", "total", "lo", "hi"):
-            assert direct[k][m] == salted[k][m], (k, m)
-        assert abs(direct[k]["mean"] - salted[k]["mean"]) < 1e-9
 
 
 def test_ivf_topk_recall_on_clusters(spark):

@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from weatherdatapipeline_spark.operators.stateful import ewma, zscore_anomalies
+from weatherdatapipeline_spark.operators.stateful import ewma
 
 
 def test_ewma_recurrence_exact(spark):
@@ -13,14 +13,6 @@ def test_ewma_recurrence_exact(spark):
     assert got[("a", 3)] == 17.5  # 0.5*20 + 0.5*15
     assert got[("b", 1)] == 4.0  # independent key state
 
-
-def test_zscore_anomalies_flags_planted_spike(spark):
-    rows = [("a", t, 10.0 + (t % 3) * 0.1) for t in range(20)]
-    rows.append(("a", 20, 500.0))  # planted spike
-    df = spark.createDataFrame(rows, "k string, t long, v double")
-    out = zscore_anomalies(df, "k", "t", "v", alpha=0.3, threshold=3.0).collect()
-    assert any(r["t"] == 20 and r["deviation"] > 3.0 for r in out)
-    assert all(r["t"] == 20 or r["deviation"] > 3.0 for r in out)  # steady rows not flagged
 
 def test_kalman_1d_gain_adapts_and_matches_hand_values(spark):
     """Adaptive gain is the point: with constant Q/R the gain must fall

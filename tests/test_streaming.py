@@ -14,7 +14,6 @@ from weatherdatapipeline_spark.streaming.jobs import (
     run_available_now_to_memory,
     session_counts,
     tumbling_stats,
-    upsert_snapshot_sink,
 )
 
 SCHEMA = "event_id long, ts timestamp, user_id string, value double"
@@ -46,26 +45,6 @@ def test_st5_watermark_dedup(spark, stream_source):
     run_available_now_to_memory(out, "dedup_sink", "append")
     rows = spark.sql("SELECT * FROM dedup_sink").collect()
     assert len(rows) == 5  # 6 input rows, 1 exact duplicate dropped
-
-
-def test_st5_dedup_within_watermark_jittered_redelivery(spark, tmp_path_factory):
-    from weatherdatapipeline_spark.streaming.jobs import dedup_within_watermark
-
-    path = str(tmp_path_factory.mktemp("jitter_in"))
-    rows = [
-        (1, ts("2024-01-01T10:00:00"), "u1", 1.0),
-        (1, ts("2024-01-01T10:00:03"), "u1", 1.0),  # redelivery, ts jittered 3s
-        (2, ts("2024-01-01T10:02:00"), "u1", 2.0),
-        (2, ts("2024-01-01T10:02:00"), "u1", 2.0),  # exact duplicate
-        (3, ts("2024-01-01T10:07:00"), "u2", 3.0),
-    ]
-    spark.createDataFrame(rows, SCHEMA).write.mode("overwrite").parquet(path)
-    src = spark.readStream.schema(SCHEMA).parquet(path)
-    out = dedup_within_watermark(src, "ts", ["event_id"], watermark="10 minutes")
-    run_available_now_to_memory(out, "jitter_sink", "append")
-    got = sorted(r["event_id"] for r in spark.sql("SELECT * FROM jitter_sink").collect())
-    # the jittered redelivery of event 1 is caught (exact dedup would keep it)
-    assert got == [1, 2, 3]
 
 
 def test_st3_latest_per_key_complete_mode(spark, stream_source):
@@ -100,18 +79,6 @@ def test_st6_session_windows(spark, stream_source):
     # 10:07 session closes when the watermark (12:00 - 10min) passes its gap
     # end, but u2's 12:00 session is still open at drain → held in state
     assert [(r["user_id"], r["cnt"]) for r in rows] == [("u1", 4), ("u2", 1)]
-
-
-def test_stream_static_join(spark, stream_source):
-    from weatherdatapipeline_spark.streaming.jobs import stream_static_enrich
-
-    dim = spark.createDataFrame(
-        [("u1", "alice"), ("u2", "bob")], "user_id string, user_name string"
-    )
-    out = stream_static_enrich(stream_source(), dim, "user_id")
-    run_available_now_to_memory(out, "enrich_sink", "append")
-    rows = spark.sql("SELECT DISTINCT user_id, user_name FROM enrich_sink").collect()
-    assert {(r["user_id"], r["user_name"]) for r in rows} == {("u1", "alice"), ("u2", "bob")}
 
 
 def test_stream_stream_join_time_bounded(spark, stream_source):
@@ -237,21 +204,6 @@ def test_stateful_checkpoint_recovery(spark, tmp_path_factory):
     assert got[ts("2024-01-01T10:02:00")] == 17.5
 
 
-def test_st3_foreachbatch_upsert(spark, stream_source, tmp_path_factory):
-    snap = str(tmp_path_factory.mktemp("snap")) + "/current"
-    q = (
-        stream_source()
-        .writeStream.foreachBatch(
-            lambda df, bid: upsert_snapshot_sink(df, bid, snap, "user_id", "ts")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r["user_id"]: r["event_id"] for r in spark.read.parquet(snap).collect()}
-    assert got == {"u1": 4, "u2": 5}
-
-
 def test_rocksdb_state_store_parity(spark, stream_source):
     """Same stateful plan, RocksDB-backed state: identical emissions.
 
@@ -365,53 +317,6 @@ def test_stage_events_stream_invalidates_on_source_change(spark, tmp_path):
     shutil.rmtree(path, ignore_errors=True)
 
 
-def test_streaming_quality_gate_routes_batches(spark, tmp_path_factory):
-    """Quality gate: passing docs land in accepted, failing docs land in
-    rejected WITH their rule booleans; checkpoint restart does not
-    reprocess drained files."""
-    from weatherdatapipeline_spark.streaming.jobs import streaming_quality_gate
-
-    src = str(tmp_path_factory.mktemp("qg_src"))
-    acc = str(tmp_path_factory.mktemp("qg_acc")) + "/docs"
-    rej = str(tmp_path_factory.mktemp("qg_rej")) + "/docs"
-    ckpt = str(tmp_path_factory.mktemp("qg_ckpt"))
-    schema = "doc_id LONG, text STRING"
-    good = (
-        "the quick brown fox and that lazy dog have plenty of ordinary "
-        "words to be counted here"
-    )
-    spark.createDataFrame(
-        [(1, good), (2, "too short"), (9, None)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    def drain():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = streaming_quality_gate(
-            stream, acc, rej, checkpoint=ckpt, available_now=True, min_words=5
-        )
-        q.awaitTermination()
-
-    drain()
-    assert {r["doc_id"] for r in spark.read.parquet(acc).collect()} == {1}
-    rejected = {r["doc_id"]: r for r in spark.read.parquet(rej).collect()}
-    # NULL-text doc must be REJECTED, not silently dropped by both sinks
-    assert set(rejected) == {2, 9}
-    assert rejected[2]["ok_word_count"] is False  # auditable reason
-    assert "_batch_id" in rejected[2].asDict()  # replay-dedup handle
-
-    # second batch after a restart: only the new file is processed
-    spark.createDataFrame(
-        [(3, good + " again and again")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    drain()
-    assert {r["doc_id"] for r in spark.read.parquet(acc).collect()} == {1, 3}
-    assert set(r["doc_id"] for r in spark.read.parquet(rej).collect()) == {2, 9}
-
-
 def test_streaming_cms_sketch_merges_batches(spark, tmp_path_factory):
     """The stored sketch after two drained micro-batches must equal the
     batch-built sketch over the CONCATENATED data (cell-wise merge
@@ -449,79 +354,6 @@ def test_streaming_cms_sketch_merges_batches(spark, tmp_path_factory):
     est = {r["item"]: r["cms_count"] for r in
            cms_estimate(stored.select("row", "bucket", "cnt"), probes, width=64).collect()}
     assert est["a"] >= 7 and est["b"] >= 3 and est["c"] >= 7
-
-
-def test_streaming_rollup_matches_batch(spark, tmp_path_factory):
-    """Two drained micro-batches maintained through the streaming rollup
-    must equal the one-shot batch rollup over all rows."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from weatherdatapipeline_spark.sources.upsert import UpsertTable
-    from weatherdatapipeline_spark.streaming.jobs import streaming_rollup
-
-    src = str(tmp_path_factory.mktemp("ru_src"))
-    ckpt = str(tmp_path_factory.mktemp("ru_ckpt"))
-    root = str(tmp_path_factory.mktemp("ru_tbl"))
-    schema = "event_type STRING, ts TIMESTAMP, value DOUBLE"
-    t0 = dt.datetime(2024, 3, 1, 9, 0)
-    b1 = [("a", t0, 1.0), ("b", t0, 2.0)]
-    b2 = [("a", t0 + dt.timedelta(hours=2), 4.0)]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    table = UpsertTable(spark, root, "daily", key="rollup_key", partition_col="k")
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = streaming_rollup(stream, table, checkpoint=ckpt, available_now=True)
-    q.awaitTermination()
-
-    got = {r["rollup_key"]: r for r in table.read().collect()}
-    assert got["a|2024-03-01"]["n"] == 2 and got["a|2024-03-01"]["sum_value"] == 5.0
-    assert got["b|2024-03-01"]["n"] == 1
-
-
-def test_stateful_holt_across_batches_matches_batch(spark, tmp_path_factory):
-    """The coupled (level, trend) state must carry across micro-batches:
-    two separate file-batches produce the same series as the BATCH
-    holt_linear over the concatenated input — bitwise, since both sides
-    run the identical op sequence."""
-    import time as _time
-
-    from weatherdatapipeline_spark.operators.stateful import holt_linear
-    from weatherdatapipeline_spark.streaming.jobs import holt_stateful
-
-    path = str(tmp_path_factory.mktemp("holt_in"))
-    batch1 = [(1, ts("2024-01-01T10:00:00"), "u1", 10.0), (2, ts("2024-01-01T10:01:00"), "u1", 20.0)]
-    batch2 = [(3, ts("2024-01-01T10:02:00"), "u1", 40.0), (4, ts("2024-01-01T10:03:00"), "u1", 5.0)]
-    spark.createDataFrame(batch1, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-    _time.sleep(1.1)
-    spark.createDataFrame(batch2, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-
-    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(path)
-    out = holt_stateful(
-        stream.select("user_id", "ts", "value"), "user_id", "ts", "value",
-        alpha=0.5, beta=0.3,
-    )
-    q = (
-        out.writeStream.format("memory").queryName("holt_sink")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {
-        r["ts"]: (r["level"], r["trend"])
-        for r in spark.sql("SELECT * FROM holt_sink WHERE user_id='u1'").collect()
-    }
-    batch_df = spark.createDataFrame(batch1 + batch2, SCHEMA)
-    want = {
-        r["ts"]: (r["level"], r["trend"])
-        for r in holt_linear(
-            batch_df, "user_id", "ts", "value", alpha=0.5, beta=0.3
-        ).collect()
-    }
-    assert got == want and len(got) == 4
 
 
 def _have_protobuf() -> bool:
@@ -629,246 +461,6 @@ def test_token_quota_gate_transformwithstate(spark, tmp_path_factory):
     )
     batch_map = {r["doc_id"]: (r["cum_tokens"], r["admitted"]) for r in batch.collect()}
     assert batch_map == got
-
-
-def test_streaming_kmv_sketch_equals_batch(spark, tmp_path_factory):
-    """KMV maintained over two drained micro-batches must be ROW-IDENTICAL
-    to the batch sketch over the concatenated data (the bottom-k merge
-    identity), stay bounded at k rows per group, and the estimates must
-    be exact for under-k groups."""
-    from weatherdatapipeline_spark.operators.stats import kmv_bottom_k, kmv_estimate
-    from weatherdatapipeline_spark.streaming.jobs import streaming_kmv_sketch
-
-    src = str(tmp_path_factory.mktemp("kmv_src"))
-    sk = str(tmp_path_factory.mktemp("kmv_sk")) + "/sketch"
-    ckpt = str(tmp_path_factory.mktemp("kmv_ckpt"))
-    schema = "event_type STRING, user_id LONG"
-    # 'click' exceeds k=16 across the two batches (with overlap);
-    # 'view' stays under k so its estimate must be exact
-    b1 = [("click", i) for i in range(30)] + [("view", 100 + i) for i in range(5)]
-    b2 = [("click", 20 + i) for i in range(30)] + [("view", 103 + i) for i in range(4)]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = streaming_kmv_sketch(
-        stream, sk, checkpoint=ckpt, k=16, available_now=True
-    )
-    q.awaitTermination()
-
-    stored = spark.read.parquet(sk).select("event_type", "user_id", "h")
-    ref = kmv_bottom_k(
-        spark.createDataFrame(b1 + b2, schema), "event_type", "user_id", k=16
-    )
-    got = {tuple(r) for r in stored.collect()}
-    want = {tuple(r) for r in ref.collect()}
-    assert got == want  # bit-identical sketch rows, not just close estimates
-    per_group = {r["event_type"]: r["n_sketch"] for r in
-                 kmv_estimate(stored, "event_type", k=16).collect()}
-    assert per_group["click"] == 16  # bounded at k
-    est = {r["event_type"]: r["est_distinct"] for r in
-           kmv_estimate(stored, "event_type", k=16).collect()}
-    assert est["view"] == 7  # under-k group: sketch IS the set, exact
-    assert est["click"] > 16  # full sketch extrapolates beyond k
-
-
-def test_stateful_page_hinkley_across_batches(spark, tmp_path_factory):
-    """The PH recurrence must carry across micro-batches: a mean step
-    change that happens IN THE SECOND batch is detected with exactly the
-    statistic a single-pass Python replay computes over all rows."""
-    import time as _time
-
-    from weatherdatapipeline_spark.streaming.jobs import page_hinkley_stateful
-
-    path = str(tmp_path_factory.mktemp("ph_in"))
-    flat = [(i, ts(f"2024-01-01T10:0{i}:00"), "u1", 10.0) for i in range(5)]
-    jump = [(5 + i, ts(f"2024-01-01T11:0{i}:00"), "u1", 50.0) for i in range(5)]
-    spark.createDataFrame(flat, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-    _time.sleep(1.1)
-    spark.createDataFrame(jump, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-
-    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(path)
-    out = page_hinkley_stateful(
-        stream.select("user_id", "ts", "value"), "user_id", "ts", "value", delta=0.01
-    )
-    q = (
-        out.writeStream.format("memory").queryName("ph_sink")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM ph_sink ORDER BY ts").collect()
-    assert len(rows) == 10
-
-    # single-pass replay over ALL rows — state must have crossed batches
-    n = tot = s = 0.0
-    min_s, max_ph, want = float("inf"), 0.0, []
-    for v in [10.0] * 5 + [50.0] * 5:
-        n += 1
-        tot += v
-        s += v - tot / n - 0.01
-        min_s = min(min_s, s)
-        max_ph = max(max_ph, s - min_s)
-        want.append((s - min_s, max_ph))
-    for r, (ph, mph) in zip(rows, want):
-        assert abs(r["ph"] - ph) < 1e-9 and abs(r["max_ph"] - mph) < 1e-9
-    # the jump IS detected: PH grows once the mean shifts
-    assert rows[-1]["max_ph"] > 50 and rows[4]["max_ph"] < 1.0
-
-
-def test_stateful_sprt_across_batches(spark, tmp_path_factory):
-    """SPRT integer state must carry across micro-batches: a ~50%
-    converting arm crosses the upper Wald bound mid-SECOND-batch with
-    exactly the statistics an integer replay computes, and the stopped
-    flag is sticky from the crossing row onward."""
-    import math
-    import time as _time
-
-    from weatherdatapipeline_spark.streaming.jobs import sprt_stateful
-
-    path = str(tmp_path_factory.mktemp("sprt_in"))
-    # value column doubles as the conversion indicator here
-    b1 = [(i, ts(f"2024-01-01T10:{i:02d}:00"), "u1", float(i % 2)) for i in range(10)]
-    b2 = [(10 + i, ts(f"2024-01-01T11:{i:02d}:00"), "u1", float(i % 2)) for i in range(30)]
-    spark.createDataFrame(b1, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-    _time.sleep(1.1)
-    spark.createDataFrame(b2, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-
-    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(path)
-    out = sprt_stateful(
-        stream.select("user_id", "ts", "value"), "user_id", "ts", "value"
-    )
-    q = (
-        out.writeStream.format("memory").queryName("sprt_sink")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM sprt_sink ORDER BY ts").collect()
-    assert len(rows) == 40
-    l1, l2 = math.log(1.5), math.log(0.85 / 0.9)
-    upper = math.log(0.95 / 0.05)
-    n = c = stopped = 0
-    first_cross = None
-    for i, r in enumerate(rows):
-        n += 1
-        c += int(i % 2 == 1)  # values alternate 0,1 within each batch
-        assert (r["n"], r["c"]) == (n, c)
-        llr = c * l1 + (n - c) * l2
-        assert abs(r["llr"] - llr) < 1e-9
-        if llr >= upper and first_cross is None:
-            first_cross = i
-        stopped = max(stopped, 1 if llr >= upper else 0)
-        assert r["stopped"] == stopped
-    assert first_cross is not None and 10 <= first_cross < 40  # crossed in batch 2
-
-
-def test_streaming_merkle_fingerprints_equal_batch(spark, tmp_path_factory):
-    """Fingerprints folded across two micro-batches must equal the
-    one-shot batch fingerprints over all rows (commutative monoid), stay
-    bounded, and DETECT a divergent replica: dropping one row changes
-    exactly that row's bucket."""
-    import hashlib
-    import time as _time
-
-    from pyspark.sql import functions as F
-    from weatherdatapipeline_spark.streaming.jobs import streaming_merkle_fingerprints
-
-    src = str(tmp_path_factory.mktemp("mk_src"))
-    tbl = str(tmp_path_factory.mktemp("mk_tbl")) + "/fp"
-    ckpt = str(tmp_path_factory.mktemp("mk_ckpt"))
-    schema = "event_id LONG"
-    b1 = [(i,) for i in range(500)]
-    b2 = [(i,) for i in range(500, 900)]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    _time.sleep(1.1)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = streaming_merkle_fingerprints(
-        stream, tbl, checkpoint=ckpt, buckets=64, available_now=True
-    )
-    q.awaitTermination()
-
-    stored = {r["bucket"]: (r["n"], r["sum_h"])
-              for r in spark.read.parquet(tbl).collect()}
-    assert len(stored) <= 64
-
-    h = F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10).cast("bigint")
-    ref = {
-        r["bucket"]: (r["n"], r["sum_h"])
-        for r in spark.createDataFrame(b1 + b2, schema)
-        .select((h % 64).alias("bucket"), h.alias("word"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("word").alias("sum_h"))
-        .collect()
-    }
-    assert stored == ref
-    # divergence detection: a replica missing row 123 differs ONLY in
-    # the bucket md5(123) hashes to
-    w = int(hashlib.md5(b"123").hexdigest()[:8], 16)
-    replica = dict(ref)
-    replica[w % 64] = (replica[w % 64][0] - 1, replica[w % 64][1] - w)
-    diff = {b for b in ref if ref[b] != replica.get(b)}
-    assert diff == {w % 64}
-
-
-def test_streaming_bottomk_sample_equals_batch(spark, tmp_path_factory):
-    """The bottom-k row sample maintained across two drained micro-batches
-    must be ROW-IDENTICAL (values included) to a batch bottom-k over the
-    concatenated data, stay bounded at k rows per group, and keep an
-    under-k group's sample equal to the whole group."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from weatherdatapipeline_spark.streaming.jobs import streaming_bottomk_sample
-
-    src = str(tmp_path_factory.mktemp("bks_src"))
-    sk = str(tmp_path_factory.mktemp("bks_sk")) + "/sample"
-    ckpt = str(tmp_path_factory.mktemp("bks_ckpt"))
-    schema = "event_type STRING, event_id LONG, value DOUBLE"
-    b1 = [("click", i, float(i) * 1.5) for i in range(30)] + [
-        ("view", 100 + i, float(i)) for i in range(5)
-    ]
-    b2 = [("click", 20 + i, float(20 + i) * 1.5) for i in range(30)] + [
-        ("view", 103 + i, float(3 + i)) for i in range(4)
-    ]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = streaming_bottomk_sample(
-        stream, sk, checkpoint=ckpt, k=16, available_now=True
-    )
-    q.awaitTermination()
-
-    stored = spark.read.parquet(sk).select("event_type", "event_id", "value", "h")
-
-    # batch twin: same hash, same rank, same k over the concatenated rows
-    allrows = spark.createDataFrame(b1 + b2, schema)
-    h = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    du = allrows.distinct().withColumn("h", h)
-    w = Window.partitionBy("event_type").orderBy("h", "event_id")
-    ref = (
-        du.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 16)
-        .drop("_rn")
-        .select("event_type", "event_id", "value", "h")
-    )
-    got = {tuple(r) for r in stored.collect()}
-    want = {tuple(r) for r in ref.collect()}
-    assert got == want  # bit-identical sample rows, values carried
-
-    counts = {
-        r["event_type"]: r["n"]
-        for r in stored.groupBy("event_type").agg(F.count("*").alias("n")).collect()
-    }
-    assert counts["click"] == 16  # bounded at k
-    assert counts["view"] == 7  # under-k group: the sample IS the group
 
 
 def test_streaming_funnel_steps_ordered_conversion(spark, tmp_path_factory):

@@ -10,7 +10,7 @@ import os
 
 import pytest
 
-from weatherdatapipeline_spark.sources.upsert import UpsertTable, merge_sink
+from weatherdatapipeline_spark.sources.upsert import UpsertTable
 
 
 def _rows(df):
@@ -88,15 +88,6 @@ def test_unpartitioned_merge(spark, tmp_path):
     t.merge(df([(1, "a"), (2, "b")]))
     t.merge(df([(2, "B"), (3, "c")]))
     assert _rows(t.read()) == {(1, "a"), (2, "B"), (3, "c")}
-
-
-def test_streaming_merge_sink(spark, tmp_path, sf_dir):
-    """foreachBatch MERGE: the stream's latest-per-key lands as an upsert."""
-    t = UpsertTable(spark, str(tmp_path), "s", key="id", partition_col="day")
-    t.merge(_df(spark, [(1, "d1", "stale")]))
-    sink = merge_sink(t)
-    sink(_df(spark, [(1, "d1", "fresh"), (1, "d1", "fresh"), (5, "d2", "new")]), 0)
-    assert _rows(t.read()) == {("d1", 1, "fresh"), ("d2", 5, "new")}
 
 
 def test_read_changes_cdf(spark, table):

@@ -1,20 +1,12 @@
-"""Embedding-column utilities (SURVEY.md §2.11 adjuncts): L2
-normalization and int8 quantization over ``array<float>`` columns.
+"""Embedding-column utilities (SURVEY.md §2.11 adjuncts) over
+``array<float>`` columns: int8 quantization, covariance/PCA, product
+quantization and k-means.
 
-Both are map-only (zero shuffles) with two interchangeable physical
-paths: the default pure-JVM ``transform``/``aggregate`` expressions, and
-an Arrow-batched pandas UDF variant (``impl="arrow"``) with identical
-float64 semantics — benchmarked a tie at 64 dims (SCALE.md "HOF vs
-Arrow"; output-array construction dominates), the Arrow path wins as
-vectors get wider. Quantization is the standard
+Quantization is map-only (zero shuffles) and pure-JVM
+``transform``/collection expressions. It is the standard
 storage/serving trade for large embedding corpora — 4x smaller vectors
 (int8 vs float32) at ~1% cosine error — and per-vector symmetric scaling
 (``scale = max|x| / 127``) keeps dequantization a one-multiply map.
-
-Normalization matters upstream of every cosine path in
-``operators/similarity.py``: unit-norm vectors turn cosine into a plain
-dot product, which halves the per-pair arithmetic of brute-force top-k
-and makes LSH hyperplane signs exact rather than norm-biased.
 """
 
 from __future__ import annotations
@@ -27,52 +19,11 @@ from pyspark.sql.functions import pandas_udf as _pandas_udf
 from pyspark.sql.types import (
     ArrayType as _ArrayT,
     DoubleType as _DoubleT,
-    IntegerType as _IntT,
-    StructField as _Field,
-    StructType as _StructT,
 )
 
 from .litfast import darray, darray2
 
 INT8_MAX = 127
-
-# Arrow variants: measured at sf0.1 x256 (512k rows, 64 dims —
-# SCALE.md "HOF vs Arrow") quantize/normalize are a tie with the HOF
-# path (output-array construction dominates both), so the JVM path
-# stays the default here; the variants remain for wider vectors,
-# where Arrow's per-batch (not per-element) overhead wins. float64 op
-# order is kept identical so both paths agree bitwise and the oracle
-# hashes are unchanged either way.
-#
-# Return types are DataType OBJECTS, not DDL strings: a DDL string is
-# parsed by the JVM at decoration time, which raises
-# SESSION_OR_CONTEXT_NOT_EXISTS when this module is imported before
-# the SparkSession exists (bench.py / check_oracle import order).
-@_pandas_udf(_ArrayT(_DoubleT()))
-def _l2_normalize_arrow(v: _pd.Series, eps: _pd.Series) -> _pd.Series:
-    A = _np.stack(v.to_numpy()).astype(_np.float64)
-    acc = _np.zeros(A.shape[0])
-    for i in range(A.shape[1]):  # sequential fold == HOF sum order
-        acc = acc + A[:, i] * A[:, i]
-    n = _np.maximum(_np.sqrt(acc), eps.to_numpy())
-    return _pd.Series(list(A / n[:, None]))
-
-
-@_pandas_udf(_StructT([_Field("scale", _DoubleT()), _Field("qvec", _ArrayT(_IntT()))]))
-def _quantize_arrow(v: _pd.Series) -> _pd.DataFrame:
-    A = _np.stack(v.to_numpy()).astype(_np.float64)
-    scale = _np.abs(A).max(axis=1) / INT8_MAX
-    safe = _np.maximum(scale, 1e-30)[:, None]
-    x = A / safe
-    # SQL ROUND is HALF_UP (away from zero); np.round is half-to-even
-    q = _np.sign(x) * _np.floor(_np.abs(x) + 0.5)
-    # NaN mirror of the JVM clamp: NaN compares greatest there, so
-    # greatest(NaN,-127)=NaN then least(NaN,127)=127; np.clip would
-    # PROPAGATE NaN and astype(int32) turns it into garbage
-    q = _np.where(_np.isnan(q), float(INT8_MAX), q)
-    q = _np.clip(q, -INT8_MAX, INT8_MAX).astype(_np.int32)
-    return _pd.DataFrame({"scale": scale, "qvec": list(q)})
-
 
 def _sq_dists_arrow_udf(centroids: list[list[float]]):
     """Factory: pandas UDF computing squared L2 distance from a vector
@@ -104,37 +55,6 @@ def _sq_dists_arrow_udf(centroids: list[list[float]]):
     return dists
 
 
-# benchmarked tie at 64 dims (SCALE.md) -> keep the no-Python JVM path;
-# pass impl="arrow" per-call for wide vectors
-VECTOR_IMPL = "hof"
-
-
-def l2_norm(vec: Column) -> Column:
-    """Euclidean norm of an array column, folded in DOUBLE."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(vec, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def l2_normalize(vec: Column, eps: float = 1e-12, impl: str | None = None) -> Column:
-    """Unit-normalize an array column; an all-zero vector stays zero
-    (norm clamped by ``eps``) rather than dividing by zero to NULL/NaN.
-
-    The default is the pure-JVM "hof" path (``VECTOR_IMPL``); pass
-    impl="arrow" per call to run the same float64 math as a vectorized
-    pandas UDF instead (wins as vectors get wider, SCALE.md)."""
-    if isinstance(vec, str):
-        vec = F.col(vec)
-    if (impl or VECTOR_IMPL) == "arrow":
-        return _l2_normalize_arrow(vec, F.lit(float(eps)))
-    n = F.greatest(l2_norm(vec), F.lit(float(eps)))
-    return F.transform(vec, lambda x: x.cast("double") / n)
-
-
 def quantization_scale(vec: Column) -> Column:
     """Per-vector symmetric int8 scale: ``max|x| / 127`` (0.0 for an
     all-zero vector, which then quantizes to all zeros).
@@ -157,14 +77,12 @@ def quantize_int8(
     vec_col: str = "embedding",
     out_vec_col: str = "qvec",
     scale_col: str = "scale",
-    impl: str | None = None,
 ) -> DataFrame:
     """Symmetric per-vector int8 quantization: adds ``scale`` (double)
     and ``qvec`` (array<int> in [-127, 127]); original float vector is
     dropped. Map-only — no shuffle, no Python.
 
-    Rounding is ``round`` half-up via SQL ROUND (mirrored as
-    sign*floor(abs+0.5) in the Arrow path) to keep the oracle (DuckDB
+    Rounding is ``round`` half-up via SQL ROUND to keep the oracle (DuckDB
     ``round``) bit-identical. For FINITE inputs ``|x| <= max|x| =
     127*scale <= 127*safe`` already bounds every quotient to
     [-127, 127]; the least/greatest clamp exists for non-finite
@@ -173,18 +91,7 @@ def quantize_int8(
     job-killing CAST_OVERFLOW, while the clamp degrades it to 127 (NaN
     compares greatest, so greatest(NaN,-127)=NaN, least(NaN,127)=127) —
     one corrupt vector must not abort a corpus-scale run.
-
-    The default is the pure-JVM "hof" path (``VECTOR_IMPL``); pass
-    impl="arrow" per call for one vectorized pandas UDF emitting a
-    (scale, qvec) struct (wins as vectors get wider, SCALE.md).
     """
-    if (impl or VECTOR_IMPL) == "arrow":
-        s = _quantize_arrow(F.col(vec_col))
-        return embeddings.select(
-            F.col(id_col),
-            s.getField("scale").alias(scale_col),
-            s.getField("qvec").alias(out_vec_col),
-        )
     # Two projections so the array_max(transform(abs)) pass runs ONCE per
     # row: referencing `scale` both as an output column and inside the
     # quantize lambda within a single select would evaluate it twice, and
@@ -247,20 +154,6 @@ def quantize_int8_rows(
         )
         .cast("int")
         .alias("qv"),
-    )
-
-
-def dequantize_int8(
-    quantized: DataFrame,
-    vec_col: str = "qvec",
-    scale_col: str = "scale",
-    out_col: str = "embedding",
-) -> DataFrame:
-    """Inverse map: ``x ≈ q * scale`` (double array). Reconstruction
-    error per component is bounded by ``scale / 2``."""
-    return quantized.withColumn(
-        out_col,
-        F.transform(F.col(vec_col), lambda q: q.cast("double") * F.col(scale_col)),
     )
 
 
@@ -353,30 +246,6 @@ def pca_projection_matrix(embeddings: DataFrame, n_components: int, vec_col: str
         if c[np.argmax(np.abs(c))] < 0:
             c *= -1
     return comps, vals[order]
-
-
-def pca_project(
-    embeddings: DataFrame,
-    components,
-    vec_col: str = "embedding",
-    out_col: str = "pca",
-) -> DataFrame:
-    """Map-only projection onto a fixed (k, d) component matrix: each
-    output coordinate is one JVM dot product (zip_with + aggregate) over
-    the embedding — no Python in the per-row path, no shuffle. The
-    matrix rides along as array literals (k*d doubles — broadcast-sized
-    by construction)."""
-    rows = []
-    for comp in components:
-        lit = darray(comp)
-        rows.append(
-            F.aggregate(
-                F.zip_with(F.col(vec_col), lit, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    return embeddings.withColumn(out_col, F.array(*rows))
 
 
 def pca_power_scores(

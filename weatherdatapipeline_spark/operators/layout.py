@@ -150,35 +150,3 @@ def sampled_range_shards(
             F.max("k").alias("max_key"),
         )
     )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    dim_a: Column,
-    dim_b: Column,
-    bits: int = 8,
-    n_files: int = 8,
-) -> None:
-    """Write ``df`` as a Z-ordered parquet table: range-partition on the
-    Morton key (so each output file owns a contiguous Z range) and sort
-    within partitions (so row groups inside a file are Z-clustered too).
-    Parquet min/max column statistics then make BOTH dimensions
-    skippable: a reader's predicate on either dim prunes files AND row
-    groups whose [min,max] don't intersect — without the write ever
-    sorting by that dim globally.
-
-    ``dim_a``/``dim_b`` must be int bands in [0, 2^bits). The Z column
-    itself is dropped from the output (it's a layout key, not data).
-    Exactly the Delta/Iceberg OPTIMIZE ZORDER BY effect, expressed with
-    stock repartitionByRange + sortWithinPartitions.
-    """
-    z = morton_interleave(dim_a, dim_b, bits)
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -2,15 +2,15 @@
 ``binary`` columns with typed metadata, processed by Arrow-batched Pandas
 iterators (``mapInPandas``).
 
-What is REAL here (and tested): the schema contract, the synthetic blob
-source, the mapInPandas plumbing (batch iteration, output schema, column
-passthrough), partition sizing guidance, the PCM16 audio DSP, the
-RIFF/WAV chunk parser, and — since round 9 — the PNG image decode itself:
-``operators/png.py`` is a pure-stdlib PNG codec (zlib inflate + the five
-spec filters) and the only image backend, so the real decode/convert/
-resize arm executes with no imaging library installed. Non-PNG decode
-raises ``NotImplementedError`` (those codecs are not in the stdlib),
-and undecodable blobs fall back to the deterministic byte-fold feature.
+What is REAL here (and tested): the mapInPandas plumbing (batch
+iteration, output schema, column passthrough), partition sizing guidance,
+the PCM16 audio DSP, the planted PNG/PCM corpora with their dHash and
+audio fingerprints, and the PNG image decode itself: ``operators/png.py``
+is a pure-stdlib PNG codec (zlib inflate + the five spec filters) and the
+only image backend, so the real decode/convert/resize arm executes with
+no imaging library installed. Non-PNG decode raises
+``NotImplementedError`` (those codecs are not in the stdlib), and
+undecodable blobs fall back to the deterministic byte-fold feature.
 
 Scale notes
 -----------
@@ -29,12 +29,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    DoubleType,
     FloatType,
     IntegerType,
     LongType,
@@ -43,20 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .png import PNG_SIGNATURE, stdlib_image_module
+from .png import stdlib_image_module
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("modality", StringType(), False),  # image | audio | video
-        StructField("uri", StringType(), True),  # external ref when blob absent
-        StructField("blob", BinaryType(), True),  # inline payload (small media)
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-        StructField("format", StringType(), True),
-    ]
-)
 
 FEATURE_SCHEMA = StructType(
     [
@@ -66,47 +53,6 @@ FEATURE_SCHEMA = StructType(
         StructField("feature", ArrayType(FloatType()), True),
     ]
 )
-
-
-def synthetic_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table: blob = repeated hash bytes, metadata
-    consistent with the modality. Exercises the binary column path without
-    any codec."""
-    base = spark.range(n).select(
-        F.col("id").alias("media_id"),
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.pmod(F.col("id"), F.lit(3)) + 1).cast("int"),
-        ).alias("modality"),
-        F.concat(F.lit("synthetic://media/"), F.col("id")).alias("uri"),
-        F.sha2(F.concat(F.lit(seed), F.col("id")), 256).cast("binary").alias("blob"),
-        (32 + F.pmod(F.xxhash64("id", F.lit("w")), F.lit(96))).cast("int").alias("width"),
-        (32 + F.pmod(F.xxhash64("id", F.lit("h")), F.lit(96))).cast("int").alias("height"),
-        (1000 + F.pmod(F.xxhash64("id", F.lit("d")), F.lit(9000))).cast("int").alias("duration_ms"),
-        F.lit("synthetic").alias("format"),
-    )
-    return base.withColumn(
-        "width", F.when(F.col("modality") == "audio", F.lit(None)).otherwise(F.col("width"))
-    ).withColumn(
-        "height", F.when(F.col("modality") == "audio", F.lit(None)).otherwise(F.col("height"))
-    ).withColumn(
-        "duration_ms",
-        F.when(F.col("modality") == "image", F.lit(None)).otherwise(F.col("duration_ms")),
-    )
-
-
-def decode_image_strict(blob: bytes) -> object:
-    """Decode an inline image blob with the stdlib PNG codec. Non-PNG
-    blobs raise NotImplementedError (a JPEG/WebP codec is not in the
-    stdlib); corrupt or truncated PNGs raise ValueError from the decoder.
-    Returns the loaded image with pixels materialized."""
-    import io
-
-    if not (blob and blob.startswith(PNG_SIGNATURE[:4])):
-        raise NotImplementedError("only PNG blobs decode: no JPEG/WebP codec is available")
-    img = stdlib_image_module.open(io.BytesIO(blob))
-    img.load()
-    return img
 
 
 def _png_feature(blob: bytes, dim: int) -> list[float] | None:
@@ -163,82 +109,6 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
             )
 
     return media.mapInPandas(fn, FEATURE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plumbing for video rows: one output row per sampled
-    timestamp (the decode itself is the stub). Demonstrates the
-    one-to-many explode shape a real frame sampler produces."""
-    video = media.filter(F.col("modality") == "video")
-    return video.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("duration_ms") - 1, F.lit(every_ms))
-        ).alias("frame_ts_ms"),
-        F.col("uri"),
-    )
-
-RESIZE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("target_w", IntegerType(), True),
-        StructField("target_h", IntegerType(), True),
-        StructField("blob", BinaryType(), True),
-        StructField("resized", StringType(), False),  # 'decoded' | 'passthrough'
-    ]
-)
-
-
-def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
-    """Aspect-fit resize of image rows to ``max_side`` via mapInPandas.
-
-    The TARGET-GEOMETRY math (scale = max_side / longest side, rounded
-    dims, never upscale) needs only the metadata columns. The PIXEL work
-    uses the stdlib PNG codec: the blob is decoded, resized to (target_w,
-    target_h), and re-encoded PNG (``resized='decoded'``); a blob that is
-    not a decodable PNG passes through untouched (``resized='passthrough'``),
-    so the operator is total. Same no-shuffle, Arrow-batched contract as
-    extract_features."""
-
-    def geometry(w, h):
-        if w is None or h is None or w <= 0 or h <= 0:
-            return None, None
-        scale = min(1.0, max_side / max(w, h))
-        return max(1, round(w * scale)), max(1, round(h * scale))
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            out = {
-                "media_id": [], "width": [], "height": [],
-                "target_w": [], "target_h": [], "blob": [], "resized": [],
-            }
-            for row in pdf.itertuples(index=False):
-                tw, th = geometry(row.width, row.height)
-                blob, how = row.blob, "passthrough"
-                if blob is not None and tw and th:
-                    try:
-                        img = stdlib_image_module.open(io.BytesIO(blob)).resize((tw, th))
-                        buf = io.BytesIO()
-                        img.save(buf, format="PNG")
-                        blob, how = buf.getvalue(), "decoded"
-                    except Exception:
-                        pass  # undecodable blob: keep passthrough
-                out["media_id"].append(row.media_id)
-                out["width"].append(row.width)
-                out["height"].append(row.height)
-                out["target_w"].append(tw)
-                out["target_h"].append(th)
-                out["blob"].append(blob)
-                out["resized"].append(how)
-            yield pd.DataFrame(out)
-
-    return media.filter(F.col("modality") == "image").select(
-        "media_id", "width", "height", "blob", "modality"
-    ).mapInPandas(fn, RESIZE_SCHEMA)
 
 
 PCM_FRAME_SCHEMA = StructType(
@@ -436,92 +306,6 @@ def image_dhash(
     return media.select(id_col, blob_col).mapInPandas(fn, DHASH_SCHEMA)
 
 
-WAV_META_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("valid", IntegerType(), False),
-        StructField("n_channels", IntegerType(), True),
-        StructField("sample_rate", IntegerType(), True),
-        StructField("bits_per_sample", IntegerType(), True),
-        StructField("n_frames", LongType(), True),
-        StructField("duration_ms", DoubleType(), True),
-    ]
-)
-
-
-def _parse_wav(blob: bytes | None):
-    """Walk a RIFF/WAVE byte stream — stdlib struct only, no codec.
-    Returns (channels, rate, bits, frames, duration_ms) or None when the
-    blob is not a well-formed PCM WAV (wrong magic, truncated chunk,
-    missing fmt/data)."""
-    import struct
-
-    if blob is None or len(blob) < 44:
-        return None
-    b = bytes(blob)
-    if b[0:4] != b"RIFF" or b[8:12] != b"WAVE":
-        return None
-    o, fmt, data_size = 12, None, None
-    while o + 8 <= len(b):
-        cid = b[o : o + 4]
-        (size,) = struct.unpack("<I", b[o + 4 : o + 8])
-        body = b[o + 8 : o + 8 + size]
-        if cid == b"fmt " and len(body) >= 16:
-            _, ch, rate, _, _, bits = struct.unpack("<HHIIHH", body[:16])
-            fmt = (ch, rate, bits)
-        elif cid == b"data":
-            data_size = size
-        o += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data_size is None:
-        return None
-    ch, rate, bits = fmt
-    if ch == 0 or rate == 0 or bits == 0:
-        return None
-    frames = data_size // (ch * bits // 8) if bits >= 8 else 0
-    return ch, rate, bits, frames, frames / rate * 1000.0
-
-
-def parse_wav_metadata(
-    media: DataFrame, id_col: str = "media_id", blob_col: str = "blob"
-) -> DataFrame:
-    """REAL RIFF/WAVE container parsing over opaque binary blobs — the
-    third genuinely-unstubbed multimodal arm (after PCM16 DSP and the
-    stdlib PNG image path): stdlib `struct` chunk walk extracting
-    channels / sample rate / bit depth / frame count / duration, so no
-    external codec is needed at all. Malformed or truncated blobs yield
-    valid=0 with NULL fields — the operator is total and never throws on
-    corrupt corpus bytes (the property a 100 TB media crawl actually
-    needs). Arrow-batched mapInPandas, map-only: pipelines with the
-    scan, zero shuffles."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in WAV_META_SCHEMA.fields}
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                parsed = _parse_wav(blob)
-                rows["media_id"].append(int(mid))
-                rows["valid"].append(1 if parsed else 0)
-                if parsed:
-                    ch, rate, bits, frames, dur = parsed
-                    rows["n_channels"].append(ch)
-                    rows["sample_rate"].append(rate)
-                    rows["bits_per_sample"].append(bits)
-                    rows["n_frames"].append(frames)
-                    rows["duration_ms"].append(dur)
-                else:
-                    for k in (
-                        "n_channels",
-                        "sample_rate",
-                        "bits_per_sample",
-                        "n_frames",
-                        "duration_ms",
-                    ):
-                        rows[k].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.select(id_col, blob_col).mapInPandas(fn, WAV_META_SCHEMA)
-
-
 PCM_BLOB_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
@@ -568,8 +352,8 @@ def planted_pcm_corpus(
     max_doc_id: int = 1024,
 ) -> DataFrame:
     """Pack one REAL PCM16-LE audio blob per document (stdlib ``struct``
-    byte packing — the same wire format ``audio_frame_features`` and the
-    WAV parser consume) from the deterministic planted waveform. Map-only
+    byte packing — the same wire format ``audio_frame_features``
+    consumes) from the deterministic planted waveform. Map-only
     mapInPandas; participation capped at ``doc_id < max_doc_id`` so the
     planted pair mass stays bounded at any scale factor."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -631,106 +415,3 @@ def audio_fingerprint(
             yield pd.DataFrame({"doc_id": ids, "afp": sigs})
 
     return media.select(id_col, blob_col).mapInPandas(fn, AUDIO_FP_SCHEMA)
-
-
-AVI_META_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("valid", IntegerType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("usec_per_frame", IntegerType(), True),
-        StructField("total_frames", LongType(), True),
-        StructField("n_streams", IntegerType(), True),
-        StructField("duration_ms", DoubleType(), True),
-    ]
-)
-
-
-def _parse_avi(blob: bytes | None):
-    """Walk a RIFF/AVI byte stream to the 'avih' main header — stdlib
-    struct only, no codec (the video sibling of ``_parse_wav``: container
-    metadata is parseable everywhere even though frame DECODE genuinely
-    needs a codec library). Returns (width, height, usec_per_frame,
-    total_frames, n_streams, duration_ms) or None when the blob is not a
-    well-formed AVI (wrong magic, truncated chunk, missing hdrl/avih)."""
-    import struct
-
-    if blob is None or len(blob) < 24:
-        return None
-    b = bytes(blob)
-    if b[0:4] != b"RIFF" or b[8:12] != b"AVI ":
-        return None
-
-    def walk(lo: int, hi: int):
-        o = lo
-        while o + 8 <= hi:
-            cid = b[o : o + 4]
-            (size,) = struct.unpack("<I", b[o + 4 : o + 8])
-            body_lo, body_hi = o + 8, o + 8 + size
-            if body_hi > hi:
-                return None
-            if cid == b"LIST":
-                ltype = b[body_lo : body_lo + 4]
-                if ltype == b"hdrl":
-                    found = walk(body_lo + 4, body_hi)
-                    if found is not None:
-                        return found
-            elif cid == b"avih" and size >= 40:
-                return b[body_lo : body_lo + 40]
-            o = body_hi + (size & 1)  # chunks are word-aligned
-        return None
-
-    avih = walk(12, len(b))
-    if avih is None:
-        return None
-    (uspf, _maxbps, _pad, _flags, frames, _init, streams, _buf, w, h) = struct.unpack(
-        "<10I", avih
-    )
-    if w == 0 or h == 0:
-        return None
-    dur = frames * uspf / 1000.0 if uspf else None
-    return w, h, uspf, frames, streams, dur
-
-
-def parse_avi_metadata(
-    media: DataFrame, id_col: str = "media_id", blob_col: str = "blob"
-) -> DataFrame:
-    """REAL RIFF/AVI container parsing over opaque binary blobs — the
-    video modality's metadata arm (image has ``png_dimensions``, audio
-    ``parse_wav_metadata``): nested-LIST chunk walk extracting geometry /
-    frame timing / stream count from the 'avih' main header. Frame
-    PIXEL decode still requires a codec library and remains the
-    documented stub; the container layer is what a 100 TB media-lake
-    profiling pass actually scans. Malformed blobs yield valid=0 with
-    NULL fields — total over corrupt corpus bytes. Arrow-batched
-    mapInPandas, map-only."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in AVI_META_SCHEMA.fields}
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                parsed = _parse_avi(blob)
-                rows["media_id"].append(int(mid))
-                rows["valid"].append(1 if parsed else 0)
-                if parsed:
-                    w, h, uspf, frames, streams, dur = parsed
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["usec_per_frame"].append(uspf)
-                    rows["total_frames"].append(frames)
-                    rows["n_streams"].append(streams)
-                    rows["duration_ms"].append(dur)
-                else:
-                    for k in (
-                        "width",
-                        "height",
-                        "usec_per_frame",
-                        "total_frames",
-                        "n_streams",
-                        "duration_ms",
-                    ):
-                        rows[k].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.select(id_col, blob_col).mapInPandas(fn, AVI_META_SCHEMA)

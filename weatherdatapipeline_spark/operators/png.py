@@ -8,9 +8,9 @@ PNG spec §6) are byte arithmetic — so this module implements a minimal
 decoder/encoder for 8-bit-depth, non-interlaced PNGs in the four
 non-palette color types (greyscale, RGB, grey+alpha, RGBA) and wraps the
 result in :class:`StdlibImage`, which mimics the slice of the PIL
-``Image`` API the operators in ``multimodal.py`` use (``open/new/load/
-convert/resize/getdata/save/size``). It is the only image backend those
-operators use.
+``Image`` API the operators in ``multimodal.py`` use (``open/convert/
+resize/getdata``); :func:`encode_png` writes the planted corpus images. It
+is the only image backend those operators use.
 
 Differences from PIL, by design (documented, not hidden): ``resize`` is
 nearest-neighbor (PIL defaults to bicubic) and ``convert("L")`` uses the
@@ -62,9 +62,6 @@ class StdlibImage:
     def size(self) -> tuple[int, int]:
         return (self.width, self.height)
 
-    def load(self):  # PIL-compat: pixels are already materialized
-        return self
-
     def tobytes(self) -> bytes:
         return self._data
 
@@ -108,11 +105,6 @@ class StdlibImage:
                 out += src[row + x * ch : row + (x + 1) * ch]
         return StdlibImage(w2, h2, self.mode, bytes(out))
 
-    def save(self, fp, format: str = "PNG") -> None:  # noqa: A002 - PIL parity
-        if format.upper() != "PNG":
-            raise NotImplementedError("stdlib codec writes PNG only")
-        fp.write(encode_png(self.width, self.height, self.mode, self._data))
-
 
 def _iter_chunks(blob: bytes):
     pos = len(PNG_SIGNATURE)
@@ -132,19 +124,6 @@ def _iter_chunks(blob: bytes):
             return
         pos = end + 4
     raise ValueError("PNG ended without IEND")
-
-
-def png_dimensions(blob: bytes) -> tuple[int, int] | None:
-    """Header-only (width, height) from the IHDR chunk, or None when the
-    blob is not a PNG. O(33 bytes) regardless of image size — the right
-    primitive for metadata extraction over a 100 TB media lake, where a
-    full pixel decode per row would be pure waste."""
-    if not blob or not blob.startswith(PNG_SIGNATURE) or len(blob) < 24:
-        return None
-    if blob[12:16] != b"IHDR":
-        return None
-    w, h = struct.unpack(">II", blob[16:24])
-    return (w, h)
 
 
 def decode_png(blob: bytes) -> StdlibImage:
@@ -235,24 +214,11 @@ def encode_png(width: int, height: int, mode: str, data: bytes) -> bytes:
 
 class _StdlibImageModule:
     """Duck-typed stand-in for the ``PIL.Image`` module: just enough
-    surface (``open``/``new``) for the multimodal operators and tests."""
-
-    Image = StdlibImage  # isinstance-able, PIL-module-shaped
+    surface (``open``) for the multimodal operators."""
 
     @staticmethod
     def open(fp) -> StdlibImage:
         return decode_png(fp.read())
-
-    @staticmethod
-    def new(mode: str, size: tuple[int, int], color=0) -> StdlibImage:
-        ch = _MODE_CHANNELS[mode]
-        if isinstance(color, int):
-            px = bytes([color] * ch)
-        else:
-            if len(color) != ch:
-                raise ValueError(f"color {color!r} does not match mode {mode!r}")
-            px = bytes(color)
-        return StdlibImage(size[0], size[1], mode, px * (size[0] * size[1]))
 
 
 stdlib_image_module = _StdlibImageModule()

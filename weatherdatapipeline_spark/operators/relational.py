@@ -120,52 +120,6 @@ def asof_join(
     )
 
 
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    metrics: dict[str, tuple[str, str]],
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Two-level aggregation for skewed grouping keys: stage 1 aggregates
-    on (keys + random salt) so a monster key spreads across
-    ``salt_buckets`` tasks; stage 2 combines the partials.
-
-    ``metrics`` maps output name → (column, op) with op ∈
-    {count, sum, min, max, avg}. All are algebraic — partials combine
-    exactly, so the result is identical to a direct ``groupBy(keys)``.
-
-    Use when ONE key holds a double-digit percentage of the rows (AQE
-    skew-join handles joins, but a skewed *aggregation* key still funnels
-    into a single reducer without salting). For uniform keys the extra
-    shuffle is pure overhead — don't default to this.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns[:1]], F.monotonically_increasing_id()), F.lit(salt_buckets))
-    partial_exprs, final_exprs = [], []
-    for name, (col, op) in metrics.items():
-        if op == "count":
-            partial_exprs.append(F.count(col).alias(f"_p_{name}"))
-            final_exprs.append(F.sum(f"_p_{name}").alias(name))
-        elif op == "sum":
-            partial_exprs.append(F.sum(col).alias(f"_p_{name}"))
-            final_exprs.append(F.sum(f"_p_{name}").alias(name))
-        elif op == "min":
-            partial_exprs.append(F.min(col).alias(f"_p_{name}"))
-            final_exprs.append(F.min(f"_p_{name}").alias(name))
-        elif op == "max":
-            partial_exprs.append(F.max(col).alias(f"_p_{name}"))
-            final_exprs.append(F.max(f"_p_{name}").alias(name))
-        elif op == "avg":
-            partial_exprs.append(F.sum(col).alias(f"_p_{name}_s"))
-            partial_exprs.append(F.count(col).alias(f"_p_{name}_c"))
-            final_exprs.append(
-                (F.sum(f"_p_{name}_s") / F.sum(f"_p_{name}_c")).alias(name)
-            )
-        else:
-            raise ValueError(f"unsupported salted op: {op}")
-    partial = df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(*partial_exprs)
-    return partial.groupBy(*keys).agg(*final_exprs)
-
-
 def banded_histogram(
     df: DataFrame, col: str, bands: list[tuple[str, float | None, float | None]]
 ) -> list[Column]:

@@ -58,17 +58,6 @@ def split_assign(
     return df.withColumn(out_col, expr)
 
 
-def train_test_split(
-    df: DataFrame, id_col: str, test_frac: float = 0.2
-) -> tuple[DataFrame, DataFrame]:
-    """Two-way deterministic split; returns (train, test)."""
-    tagged = split_assign(df, id_col, {"train": 1 - test_frac, "test": test_frac})
-    return (
-        tagged.filter(F.col("split") == "train").drop("split"),
-        tagged.filter(F.col("split") == "test").drop("split"),
-    )
-
-
 def mixture_weighted_sample(
     df: DataFrame,
     id_col: str,
@@ -148,16 +137,6 @@ def temperature_mixture_weights(
         .withColumn("weight", F.pow(F.col("p"), F.lit(float(alpha))) / F.col("_z"))
         .select(strata_col, "n_docs", "p", "weight")
     )
-
-
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict[str, float], seed: int = 7
-) -> DataFrame:
-    """Seeded Bernoulli stratified sample (``DataFrame.sampleBy``) — the
-    quick-look variant when approximate per-stratum rates are fine and no
-    stable id exists. For pipeline splits prefer ``split_assign``
-    (deterministic; see module docstring)."""
-    return df.sampleBy(strata_col, fractions, seed)
 
 
 def token_budget_sample(

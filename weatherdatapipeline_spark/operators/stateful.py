@@ -129,39 +129,6 @@ def ewma(
     )
 
 
-def zscore_anomalies(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    value_col: str,
-    alpha: float = 0.3,
-    threshold: float = 3.0,
-) -> DataFrame:
-    """Online anomaly flags: |x_t - EWMA_{t-1}| > threshold · EW-std_{t-1}.
-    Uses the *previous* state so the anomaly itself doesn't mask its own
-    detection — again inherently sequential, hence applyInPandas."""
-    out_schema = StructType(
-        [
-            df.schema[key],
-            df.schema[ts_col],
-            df.schema[value_col],
-            StructField("expected", DoubleType()),
-            StructField("deviation", DoubleType()),
-        ]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        m = pdf[value_col].ewm(alpha=alpha, adjust=False).mean().shift(1)
-        s = pdf[value_col].ewm(alpha=alpha, adjust=False).std().shift(1)
-        pdf["expected"] = m
-        pdf["deviation"] = (pdf[value_col] - m).abs() / s
-        out = pdf[[key, ts_col, value_col, "expected", "deviation"]]
-        return out[out["deviation"] > threshold]
-
-    return df.select(key, ts_col, value_col).groupBy(key).applyInPandas(fn, out_schema)
-
-
 def capped_running_balance(
     df: DataFrame,
     key: str,

@@ -27,25 +27,15 @@ TEMPERATURE_BANDS: list[tuple[str, float | None, float | None]] = [
 ]
 
 
-def batch_statistics(
-    weather: DataFrame,
-    group_by: list[str] | None = None,
-    exact_distinct: bool = True,
-) -> DataFrame:
+def batch_statistics(weather: DataFrame, group_by: list[str] | None = None) -> DataFrame:
     """A1-A9 in one aggregate.
 
     ``group_by=None`` reproduces the reference exactly (one summary row per
-    batch — callers group by batch_id). ``exact_distinct=False`` swaps
-    ``countDistinct`` for ``approx_count_distinct`` (HLL): at 100 TB an
-    exact distinct on a high-cardinality key is its own extra shuffle; the
-    sketch is mergeable map-side.
+    batch — callers group by batch_id).
     """
-    distinct_cities = (
-        F.countDistinct("city") if exact_distinct else F.approx_count_distinct("city")
-    )
     aggs = [
         F.count(F.lit(1)).alias("total_records"),  # A1
-        distinct_cities.alias("cities_count"),  # A2
+        F.countDistinct("city").alias("cities_count"),  # A2
         F.avg("temperature").alias("avg_temperature"),  # A3
         F.max("temperature").alias("max_temperature"),  # A4
         F.min("temperature").alias("min_temperature"),  # A4
@@ -581,44 +571,4 @@ def ridge_closed_form_2f(
         F.round(d0 / det, 6).alias("b0"),
         F.round(d1 / det, 6).alias("b1"),
         F.round(d2 / det, 6).alias("b2"),
-    )
-
-
-def kmv_bottom_k(
-    df: DataFrame, group_col: str, id_col: str, k: int = 64
-) -> DataFrame:
-    """KMV (k-minimum-values) sketch rows per group: the ``k`` smallest
-    portable 32-bit md5 hashes of the DISTINCT ids, as (group, id, h).
-
-    This is THE mergeable distinct-count sketch for relational engines:
-    merging two sketches is "union the rows, keep the k smallest again"
-    — the identity bottom-k(A ∪ B) = bottom-k(bottom-k(A) ∪ bottom-k(B))
-    (audited end-to-end by queries.kmv_union_merge_audit) — so partitions
-    sketch locally and a k-row-per-group merge replaces a global
-    distinct at any scale. The rank window is group-partitioned, never a
-    global order; sketch size is k·|groups| regardless of input size."""
-    from pyspark.sql import Window
-
-    h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    du = df.select(group_col, id_col).distinct().withColumn("h", h)
-    w = Window.partitionBy(group_col).orderBy("h", id_col)
-    return (
-        du.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def kmv_estimate(sketch: DataFrame, group_col: str, k: int = 64) -> DataFrame:
-    """Distinct-count estimates from KMV sketch rows: D ≈ (k−1)·2³²/h_(k)
-    when the sketch is full, else the exact row count (the sketch IS the
-    whole set). Returns (group, n_sketch, est_distinct BIGINT)."""
-    est = F.when(
-        F.count(F.lit(1)) < k, F.count(F.lit(1)).cast("double")
-    ).otherwise(F.lit(float(k - 1)) * F.lit(4294967296.0) / F.max("h"))
-    return sketch.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_sketch"),
-        F.round(est).cast("bigint").alias("est_distinct"),
     )

@@ -171,20 +171,6 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
 
 
-def fingerprint_rolling(text: Column, modulus: int = 1_000_000_007, base: int = 31) -> Column:
-    """Polynomial rolling hash over characters (Rabin-Karp style), all
-    arithmetic mod ``modulus`` so it never overflows bigint under ANSI mode.
-
-    Built-in `aggregate` over the char array — JVM-side, no UDF.
-    """
-    chars = F.split(text, "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, ch: F.pmod(acc * F.lit(base) + F.ascii(ch), F.lit(modulus)),
-    )
-
-
 def profile(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document text profile: counts, ratios, quality, language, print.
     Map-only, but the regex battery is the whole cost — spread() so a

@@ -352,20 +352,6 @@ class UpsertTable:
         return removed
 
 
-def merge_sink(table: UpsertTable):
-    """foreachBatch adapter: stream micro-batches MERGE into the table —
-    the Delta-style streaming upsert sink. Dedup the batch on (key[,
-    partition]) first if the source can repeat keys within one batch."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        cols = [table.key] + (
-            [table.partition_col] if table.partition_col else []
-        )
-        table.merge(batch_df.dropDuplicates(cols))
-
-    return sink
-
-
 def maintain_daily_rollup(
     table: UpsertTable,
     batch: DataFrame,

@@ -70,25 +70,6 @@ def dedup_late_data(
     )
 
 
-def dedup_within_watermark(
-    stream: DataFrame,
-    event_time: str,
-    keys: list[str],
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """ST5 (jittered-redelivery form): ``dropDuplicatesWithinWatermark``
-    dedups on the KEY ALONE for events whose event-times fall within the
-    watermark delay of each other — the at-least-once-delivery case where
-    a retried event arrives with a slightly different timestamp, which
-    exact ``dropDuplicates([key, ts])`` cannot catch (the timestamps
-    differ) and ``dropDuplicates([key])`` alone would hold state forever.
-    State per key is evicted once the watermark passes first-seen + delay,
-    so memory stays bounded by the horizon, not the stream length."""
-    return stream.withWatermark(event_time, watermark).dropDuplicatesWithinWatermark(
-        keys
-    )
-
-
 def latest_per_key_updates(stream: DataFrame, key: str, event_time: str) -> DataFrame:
     """ST3 (agg form): latest full row per key as an update-mode stream —
     ``max_by(struct(*), event_time)`` keeps ONE struct per key in state."""
@@ -101,24 +82,6 @@ def latest_per_key_updates(stream: DataFrame, key: str, event_time: str) -> Data
         )
         .select(key, "_row.*")
     )
-
-
-def upsert_snapshot_sink(batch_df: DataFrame, batch_id: int, path: str, key: str, ts: str):
-    """ST3 (foreachBatch form): per-micro-batch upsert of the snapshot
-    table — reduce the batch to latest-per-key, union with the stored
-    snapshot, keep the winner, overwrite. This is the reference's
-    current_weather replace semantics made incremental."""
-    from ..operators.relational import latest_per_key
-
-    spark = batch_df.sparkSession
-    incoming = latest_per_key(batch_df, key, ts)
-    try:
-        existing = spark.read.parquet(path)
-        merged = latest_per_key(existing.unionByName(incoming), key, ts)
-    except Exception:  # first batch: no snapshot yet
-        merged = incoming
-    # small state table: coalesce to avoid many tiny files, rewrite atomically
-    merged.coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def tumbling_stats(
@@ -187,13 +150,6 @@ def session_counts(
             "cnt",
         )
     )
-
-
-def stream_static_enrich(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
-    """Stream-static join: enrich each micro-batch against a (slowly
-    changing) dimension table. The static side is re-read per micro-batch —
-    at scale keep it broadcastable or pre-bucketed; no state is kept."""
-    return stream.join(F.broadcast(dim), on, "left")
 
 
 def stream_stream_join(
@@ -644,70 +600,11 @@ def run_available_now_to_memory(
     return q
 
 
-def streaming_quality_gate(
-    doc_stream: DataFrame,
-    accepted_path: str,
-    rejected_path: str,
-    checkpoint: str | None = None,
-    available_now: bool = False,
-    min_words: int = 50,
-):
-    """Streaming corpus quality gate: every micro-batch is scored with
-    the Gopher document rules (operators/quality.py) and routed —
-    passing docs append to ``accepted_path``, failing docs append to
-    ``rejected_path`` WITH their rule booleans, so rejected data stays
-    auditable (why was this dropped?) instead of vanishing. Docs whose
-    flags are NULL (e.g. NULL text) are routed to REJECTED — NULL must
-    not slip through either filter.
-
-    foreachBatch because one input feeds two sinks per batch; the
-    scoring itself is the same map-only projection as the batch query
-    (gopher_quality_report), so per-batch cost is one scan of the
-    batch. Delivery is AT-LEAST-ONCE: a crash between an append and the
-    checkpoint commit replays the batch and appends those rows again
-    (plain parquet appends are not transactional). Every row therefore
-    carries the micro-batch id in ``_batch_id`` so downstream consumers
-    can dedup on (doc_id, _batch_id) — or route through
-    ``sources/upsert.py::UpsertTable`` where exactly-once matters.
-    """
-    from ..operators.quality import gopher_quality_flags
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        flags = gopher_quality_flags(batch_df, min_words=min_words).persist()
-        try:
-            # NULL-safe routing: coalesce(passes, False) so a NULL-text
-            # doc is rejected, never silently dropped by both filters
-            ids = flags.select(
-                "doc_id", F.coalesce(F.col("passes"), F.lit(False)).alias("_ok")
-            )
-            docs = batch_df.join(ids, "doc_id")
-            docs.filter("_ok").drop("_ok").withColumn(
-                "_batch_id", F.lit(batch_id)
-            ).write.mode("append").parquet(accepted_path)
-            batch_df.join(
-                flags.join(ids, "doc_id").filter(~F.col("_ok")).drop("_ok"),
-                "doc_id",
-            ).withColumn("_batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(rejected_path)
-        finally:
-            flags.unpersist()
-
-    writer = doc_stream.writeStream.foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def _is_replayed_batch(prior: DataFrame, batch_id: int, checkpoint: str | None) -> bool:
-    """Replay guard for the read-modify-write sketch sinks (CMS / KMV /
-    Merkle): a batch is a genuine replay — already merged, skip it —
-    only when the stored ``_last_batch_id`` is >= this batch AND the
-    store was written under the SAME checkpoint. A stream restarted
+    """Replay guard for the read-modify-write CMS sketch sink: a batch is
+    a genuine replay — already merged, skip it — only when the stored
+    ``_last_batch_id`` is >= this batch AND the store was written under
+    the SAME checkpoint. A stream restarted
     with a NEW checkpoint against an existing store resets batch ids to
     0, and those batches carry fresh data that must merge (ADVICE r9:
     the old id-only guard silently dropped them). Stores written before
@@ -790,199 +687,6 @@ def streaming_cms_sketch(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def streaming_rollup(
-    event_stream: DataFrame,
-    table,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    checkpoint: str | None = None,
-    available_now: bool = False,
-):
-    """Continuous materialized-rollup maintenance: every micro-batch
-    folds into the persistent per-(key, day) aggregate table via
-    sources/upsert.py::maintain_daily_rollup — the streaming face of the
-    same decomposable-aggregate algebra (dashboards read the bounded
-    rollup, never the raw stream history). The micro-batch id is
-    threaded through, so a replayed batch after a crash (foreachBatch
-    is at-least-once) is SKIPPED by the stored _last_batch_id guard
-    instead of double-counted — same pattern as streaming_cms_sketch."""
-    from ..sources.upsert import maintain_daily_rollup
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        maintain_daily_rollup(
-            table, batch_df, key_col=key_col, ts_col=ts_col,
-            value_col=value_col, batch_id=batch_id,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def session_aggregate_with_timeout(
-    stream: DataFrame,
-    key: str,
-    ts_col: str,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Custom session aggregation with EVENT-TIME TIMEOUT emission
-    (applyInPandasWithState + GroupStateTimeout.EventTimeTimeout): a
-    user's open session accumulates silently across micro-batches and is
-    emitted exactly once — when the watermark passes last_event + gap and
-    the state TIMES OUT. This is the state-timeout half of the custom-
-    stateful API that ewma_stateful (NoTimeout) doesn't exercise, and the
-    imperative twin of the built-in session_window aggregation: reach for
-    it when the per-session logic outgrows an aggregate (e.g. emitting
-    derived per-session features at close time).
-
-    State per key is three scalars (start, last, n) — bounded regardless
-    of session length; timeout eviction is what keeps abandoned keys from
-    accumulating forever. Returns (key, session_start, session_end, n)
-    rows, emitted ONLY at session close.
-    """
-    import pandas as pd  # noqa: PLC0415
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    gap_ms = _interval_ms(gap)
-    out_schema = StructType(
-        [
-            StructField(key, LongType()),
-            StructField("session_start", TimestampType()),
-            StructField("session_end", TimestampType()),
-            StructField("n", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start_ms", LongType()),
-            StructField("last_ms", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
-
-    def fn(k, pdfs, state):
-        if state.hasTimedOut:
-            start_ms, last_ms, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    key: [k[0]],
-                    "session_start": [pd.Timestamp(start_ms, unit="ms")],
-                    "session_end": [pd.Timestamp(last_ms, unit="ms")],
-                    "n": [n],
-                }
-            )
-            return
-        start_ms, last_ms, n = state.get if state.exists else (None, None, 0)
-        for pdf in pdfs:
-            ts_ms = (pdf[ts_col].astype("int64") // 1_000_000).tolist()
-            for t in ts_ms:
-                start_ms = t if start_ms is None else min(start_ms, t)
-                last_ms = t if last_ms is None else max(last_ms, t)
-                n += 1
-        if last_ms is not None:
-            state.update((start_ms, last_ms, n))
-            state.setTimeoutTimestamp(last_ms + gap_ms)
-        return
-        yield  # pragma: no cover - generator form required by the API
-
-    w = stream.withWatermark(ts_col, watermark)
-    return w.groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _interval_ms(spec: str) -> int:
-    """'30 minutes' -> 1_800_000. Supports seconds/minutes/hours."""
-    qty, unit = spec.split()
-    mult = {"second": 1000, "seconds": 1000, "minute": 60_000,
-            "minutes": 60_000, "hour": 3_600_000, "hours": 3_600_000}[unit]
-    return int(qty) * mult
-
-
-def holt_stateful(
-    stream: DataFrame,
-    key: str,
-    ts_col: str,
-    value_col: str,
-    alpha: float = 0.5,
-    beta: float = 0.3,
-) -> DataFrame:
-    """Streaming twin of operators/stateful.py::holt_linear: the COUPLED
-    (level, trend) recurrence carried across micro-batches via
-    applyInPandasWithState — per-key state is the two floats, so a
-    restarted or long-running stream continues the exact same smoothing
-    the batch operator would produce over the concatenated input
-    (asserted in tests/test_streaming.py). Same op-order discipline as
-    the batch loop, so batch and stream agree bitwise. State is bounded
-    (one 2-float struct per key); per-batch work is an Arrow-batched
-    fold."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    out_schema = StructType(
-        [
-            stream.schema[key],
-            StructField(ts_col, TimestampType()),
-            StructField(value_col, DoubleType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("l", DoubleType()), StructField("b", DoubleType())]
-    )
-    one_minus_a = 1.0 - alpha
-    one_minus_b = 1.0 - beta
-
-    def fn(key_tuple, pdf_iter, state: GroupState):
-        l, b = (state.get[0], state.get[1]) if state.exists else (None, None)
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(ts_col)
-            levels, trends = [], []
-            for v in pdf[value_col]:
-                x = float(v)
-                if l is None:
-                    l, b = x, 0.0
-                else:
-                    lp = l
-                    l = alpha * x + one_minus_a * (lp + b)
-                    b = beta * (l - lp) + one_minus_b * b
-                levels.append(l)
-                trends.append(b)
-            pdf = pdf.copy()
-            pdf["level"] = levels
-            pdf["trend"] = trends
-            yield pdf[
-                [c.name for c in out_schema.fields[:-2]] + ["level", "trend"]
-            ].assign(**{key: key_tuple[0]})
-        state.update((l, b))
-
-    return stream.groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
 
 
 def token_quota_gate_stateful(
@@ -1068,386 +772,6 @@ def token_quota_gate_stateful(
         outputMode="append",
         timeMode="None",
     )
-
-
-def streaming_kmv_sketch(
-    row_stream: DataFrame,
-    sketch_path: str,
-    checkpoint: str | None = None,
-    group_col: str = "event_type",
-    id_col: str = "user_id",
-    k: int = 64,
-    available_now: bool = False,
-):
-    """Maintain per-group KMV distinct-count sketches over a stream: each
-    micro-batch's local bottom-k (operators/stats.py::kmv_bottom_k)
-    merges into the stored sketch by "union rows, keep the k smallest
-    distinct again" — the exact identity the batch-side
-    kmv_union_merge_audit query verifies, here driving unbounded-stream
-    state. State is the k·|groups|-row parquet table — constant-size no
-    matter how much data has streamed — so a streaming COUNT(DISTINCT)
-    (not expressible as a native streaming agg without keeping every key)
-    becomes a bounded-state job whose estimates are bit-identical to a
-    batch sketch over the same rows (pytest pins stream == batch).
-
-    Same foreachBatch read-modify-write contract as streaming_cms_sketch:
-    the stored table carries ``_last_batch_id``; a replayed batch is
-    skipped, a genuinely unreadable store raises (never silently resets
-    state)."""
-    from ..operators.stats import kmv_bottom_k
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        partial = kmv_bottom_k(batch_df, group_col, id_col, k=k)
-        import os
-
-        if os.path.exists(sketch_path):
-            prior = spark.read.parquet(sketch_path)
-            if _is_replayed_batch(prior, batch_id, checkpoint):
-                return  # replayed batch: already merged
-            both = prior.select(group_col, id_col, "h").unionByName(partial)
-            # the merge IS another bottom-k: distinct ids, k smallest
-            merged = kmv_bottom_k(both, group_col, id_col, k=k)
-        else:  # first batch: nothing stored yet
-            merged = partial
-        out = merged.withColumn("_last_batch_id", F.lit(batch_id)).withColumn(
-            "_run_id", F.lit(checkpoint or "")
-        )
-        # bounded table: collect-and-rewrite avoids reading the file being
-        # overwritten (k rows per group by construction)
-        rows = out.collect()
-        spark.createDataFrame(rows, out.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(sketch_path)
-
-    writer = row_stream.writeStream.foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_bottomk_sample(
-    row_stream: DataFrame,
-    sample_path: str,
-    checkpoint: str | None = None,
-    group_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    k: int = 128,
-    available_now: bool = False,
-):
-    """Maintain per-group bottom-k UNIFORM ROW SAMPLES (values attached)
-    over a stream — the streaming twin of the batch
-    ``bottomk_quantile_sketch`` query: the k rows with the smallest
-    portable md5(id) per group are an order-independent simple random
-    sample, and samples merge exactly like KMV sketches (bottom-k(A∪B)
-    = bottom-k(bottom-k A ∪ bottom-k B), the identity the batch
-    kmv_union_merge_audit pins). Each micro-batch's local bottom-k
-    unions into the stored table and re-ranks — state stays at
-    k·|groups| rows forever, and quantile estimates read from the store
-    are BIT-IDENTICAL to a batch bottom-k over the same rows (pytest
-    pins stream == batch).
-
-    Same foreachBatch read-modify-write contract as the CMS/KMV/Merkle
-    sinks: ``_last_batch_id`` + ``_run_id`` skip only genuine replays
-    within one checkpoint; an unreadable store raises rather than
-    silently resetting the sample."""
-
-    def local_bottomk(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
-        h = F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        du = (
-            df.select(group_col, id_col, value_col)
-            .filter(F.col(value_col).isNotNull())
-            .distinct()
-            .withColumn("h", h)
-        )
-        w = Window.partitionBy(group_col).orderBy("h", id_col)
-        return (
-            du.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        partial = local_bottomk(batch_df)
-        import os
-
-        if os.path.exists(sample_path):
-            prior = spark.read.parquet(sample_path)
-            if _is_replayed_batch(prior, batch_id, checkpoint):
-                return  # replayed batch: already merged
-            both = prior.select(group_col, id_col, value_col, "h").unionByName(
-                partial
-            )
-            # the merge IS another bottom-k over the union (dedup by id
-            # first: a row present in both store and batch is one row)
-            merged = local_bottomk(both.drop("h"))
-        else:  # first batch: nothing stored yet
-            merged = partial
-        out = merged.withColumn("_last_batch_id", F.lit(batch_id)).withColumn(
-            "_run_id", F.lit(checkpoint or "")
-        )
-        rows = out.collect()  # bounded: k rows per group by construction
-        spark.createDataFrame(rows, out.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(sample_path)
-
-    writer = row_stream.writeStream.foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def page_hinkley_stateful(
-    stream: DataFrame,
-    key: str,
-    ts_col: str,
-    value_col: str,
-    delta: float = 0.01,
-):
-    """Streaming Page-Hinkley drift detector via applyInPandasWithState —
-    the stateful twin of the batch ``page_hinkley_drift`` query, whose
-    recurrence (running mean / cumulative deviation / running min)
-    becomes five floats of per-key state carried across micro-batches:
-    (n, Σx, S, min S, max PH). Emits one row per observation with the
-    PH statistic at that point, so an alerting sink can trigger the
-    moment PH crosses λ rather than at end-of-day batch cadence.
-
-    Same per-key event-time-order assumption as ewma_stateful (replayed
-    logs / per-entity ordered sources); state is O(1) per key forever —
-    the defining property that makes sequential detectors streamable."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    out_schema = StructType(
-        [
-            stream.schema[key],
-            StructField(ts_col, TimestampType()),
-            StructField(value_col, DoubleType()),
-            StructField("ph", DoubleType()),
-            StructField("max_ph", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n", DoubleType()),
-            StructField("sum", DoubleType()),
-            StructField("s", DoubleType()),
-            StructField("min_s", DoubleType()),
-            StructField("max_ph", DoubleType()),
-        ]
-    )
-
-    def fn(key_tuple, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        n, tot, s, min_s, max_ph = (
-            state.get if state.exists else (0.0, 0.0, 0.0, float("inf"), 0.0)
-        )
-        # concatenate ALL of this key's chunks, then sort ONCE: Spark may
-        # deliver a key's micro-batch rows as several pandas chunks, and
-        # per-chunk sorting would process rows out of event-time order
-        # within the batch, diverging from the batch twin (ADVICE r9)
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(ts_col)
-            phs, maxes = [], []
-            for v in pdf[value_col]:
-                x = float(v)
-                n += 1.0
-                tot += x
-                s += x - tot / n - delta
-                min_s = min(min_s, s)
-                ph = s - min_s
-                max_ph = max(max_ph, ph)
-                phs.append(ph)
-                maxes.append(max_ph)
-            out = pdf.copy()
-            out["ph"] = phs
-            out["max_ph"] = maxes
-            out[key] = key_tuple[0]
-            yield out[[f.name for f in out_schema.fields]]
-        state.update((n, tot, s, min_s, max_ph))
-
-    return stream.groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def sprt_stateful(
-    stream: DataFrame,
-    key: str,
-    ts_col: str,
-    conv_col: str,
-    p0: float = 0.10,
-    p1: float = 0.15,
-    alpha: float = 0.05,
-    beta: float = 0.05,
-):
-    """Streaming Wald SPRT via applyInPandasWithState — the stateful twin
-    of the batch ``sprt_daily_readout``: per-key state is two integers
-    (observations, conversions) carried across micro-batches; every
-    observation emits the cumulative log-likelihood ratio, the decision
-    (+1 reject H0 / −1 accept / 0 continue), and a sticky stopped flag —
-    so the alerting sink can end an experiment the moment the Wald bound
-    is crossed instead of waiting for a batch readout.
-
-    The LLR is recomputed from the integer state each step (c·ln(p1/p0)
-    + (n−c)·ln((1−p1)/(1−p0))) — no float accumulates in state, so a
-    replayed batch reproduces identical statistics bit-for-bit."""
-    import math
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    l1 = math.log(p1 / p0)
-    l2 = math.log((1 - p1) / (1 - p0))
-    upper = math.log((1 - beta) / alpha)
-    lower = math.log(beta / (1 - alpha))
-
-    out_schema = StructType(
-        [
-            stream.schema[key],
-            StructField(ts_col, TimestampType()),
-            StructField("n", LongType()),
-            StructField("c", LongType()),
-            StructField("llr", DoubleType()),
-            StructField("decision", LongType()),
-            StructField("stopped", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("c", LongType()),
-            StructField("stopped", LongType()),
-        ]
-    )
-
-    def fn(key_tuple, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        n, c, stopped = state.get if state.exists else (0, 0, 0)
-        # concat-then-sort-once across chunks (same ordering contract as
-        # page_hinkley_stateful — ADVICE r9)
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        for pdf in [pd.concat(chunks, ignore_index=True).sort_values(ts_col)] if chunks else []:
-            rows = {"n": [], "c": [], "llr": [], "decision": [], "stopped": []}
-            for conv in pdf[conv_col]:
-                n += 1
-                c += int(conv)
-                llr = c * l1 + (n - c) * l2
-                decision = 1 if llr >= upper else (-1 if llr <= lower else 0)
-                stopped = max(stopped, abs(decision))
-                rows["n"].append(n)
-                rows["c"].append(c)
-                rows["llr"].append(llr)
-                rows["decision"].append(decision)
-                rows["stopped"].append(stopped)
-            out = pdf[[key, ts_col]].copy()
-            for col, vals in rows.items():
-                out[col] = vals
-            out[key] = key_tuple[0]
-            yield out[[f.name for f in out_schema.fields]]
-        state.update((n, c, stopped))
-
-    return stream.groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def streaming_merkle_fingerprints(
-    row_stream: DataFrame,
-    table_path: str,
-    checkpoint: str | None = None,
-    id_col: str = "event_id",
-    buckets: int = 256,
-    available_now: bool = False,
-):
-    """Maintain the Merkle reconciliation fingerprints incrementally: each
-    micro-batch's per-bucket (count, Σ 32-bit md5 word) partials ADD
-    cell-wise into the stored table — valid because the fingerprint is a
-    commutative monoid over rows, the same property that lets the batch
-    ``merkle_bucket_diff`` fold per partition. A replica can therefore
-    keep its sync fingerprints current per micro-batch instead of
-    re-scanning the table before every anti-entropy round; state is the
-    ≤``buckets``-row parquet table regardless of stream volume.
-
-    Same foreachBatch read-modify-write contract as the CMS/KMV sketch
-    jobs: ``_last_batch_id`` skips replayed batches; an unreadable store
-    raises rather than silently resetting fingerprints."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        h = F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        partial = (
-            batch_df.select(h.alias("word"))
-            .select((F.col("word") % buckets).alias("bucket"), "word")
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("word").cast("long").alias("sum_h"),
-            )
-        )
-        import os
-
-        if os.path.exists(table_path):
-            prior = spark.read.parquet(table_path)
-            if _is_replayed_batch(prior, batch_id, checkpoint):
-                return  # replayed batch: already folded in
-            merged = (
-                prior.select("bucket", "n", "sum_h")
-                .unionByName(partial)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.sum("sum_h").cast("long").alias("sum_h"),
-                )
-            )
-        else:
-            merged = partial
-        out = merged.withColumn("_last_batch_id", F.lit(batch_id)).withColumn(
-            "_run_id", F.lit(checkpoint or "")
-        )
-        rows = out.collect()  # bounded: <= buckets rows
-        spark.createDataFrame(rows, out.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(table_path)
-
-    writer = row_stream.writeStream.foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_type_counts(
