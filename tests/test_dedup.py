@@ -205,24 +205,6 @@ def test_decontaminate_drops_colliding_docs(spark):
     assert got == {1: 1, 2: 0, 3: 1}
 
 
-def test_dedup_incremental(spark):
-    from weatherdatapipeline_spark.operators.dedup import dedup_incremental
-
-    index0 = spark.createDataFrame([("a",)], "fingerprint string").limit(0)
-    batch1 = spark.createDataFrame(
-        [(0, "alpha beta"), (1, "ALPHA  beta"), (2, "gamma delta")], "doc_id long, text string"
-    )
-    novel1, index1 = dedup_incremental(batch1, index0)
-    assert sorted(r["doc_id"] for r in novel1.collect()) == [0, 2]  # 1 dups 0 in-batch
-    index1 = index1.persist()
-    batch2 = spark.createDataFrame(
-        [(3, "alpha beta"), (4, "epsilon zeta")], "doc_id long, text string"
-    )
-    novel2, index2 = dedup_incremental(batch2, index1)
-    assert [r["doc_id"] for r in novel2.collect()] == [4]  # 3 dups the INDEX
-    assert index2.distinct().count() == 3
-
-
 def test_contamination_check(spark):
     from weatherdatapipeline_spark.operators.dedup import contamination_check
 

@@ -128,34 +128,20 @@ def test_covariance_pairs_matches_numpy(spark, sf_dir):
         assert abs(v - C[i, j]) < 2e-6, (i, j, v, C[i, j])
 
 
-def test_pca_project_reduces_reconstruction_error(spark, sf_dir):
-    """PCA basis from the distributed covariance: eigenvalues come back
-    sorted-positive and the component rows are orthonormal."""
-    import numpy as np
-    from weatherdatapipeline_spark.operators.embeddings import pca_projection_matrix
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(500)
-    comps, vals = pca_projection_matrix(emb, n_components=8)
-    assert comps.shape[0] == 8 and vals[0] >= vals[-1] > 0
-    np.testing.assert_allclose(comps @ comps.T, np.eye(8), atol=1e-9)
-
-
 def test_pca_power_scores_match_eigh_direction(spark, sf_dir):
     """The relational power-iteration PC1 scores are (anti)collinear
     with the driver-eigh PC1 projection: |corr| > 0.999 after 4
     iterations (sign is start-vector-dependent, magnitude is not)."""
     import numpy as np
-    from weatherdatapipeline_spark.operators.embeddings import (
-        pca_power_scores,
-        pca_projection_matrix,
-    )
+    from weatherdatapipeline_spark.operators.embeddings import pca_power_scores
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(500)
-    comps, _ = pca_projection_matrix(emb, n_components=1)
     got = {r["vec_id"]: r["pc1_score"] for r in pca_power_scores(emb).collect()}
     rows = emb.select("vec_id", "embedding").collect()
     X = np.stack([np.array(r["embedding"], dtype="float64") for r in rows])
-    want = (X - X.mean(axis=0)) @ comps[0]
+    # eigh sorts eigenvalues ascending: the last eigenvector is PC1
+    pc1 = np.linalg.eigh(np.cov(X, rowvar=False))[1][:, -1]
+    want = (X - X.mean(axis=0)) @ pc1
     a = np.array([got[r["vec_id"]] for r in rows])
     corr = np.corrcoef(a, want)[0, 1]
     assert abs(corr) > 0.999, corr

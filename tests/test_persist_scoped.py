@@ -72,40 +72,31 @@ def test_registered_build_releases_previous_build_only(spark, monkeypatch):
     assert out.count() == 42 * 43
 
 
-def test_streaming_corpus_ingest_leaves_no_cache(spark, tmp_path):
-    """The ingest sink releases everything it persisted per micro-batch:
-    once the stream stops, no persisted RDD and no scoped cache is left."""
-    from weatherdatapipeline_spark.streaming.jobs import streaming_corpus_ingest
+def test_streaming_etl_leaves_no_cache(spark, tmp_path):
+    """The ETL sink persists each micro-batch and releases it in
+    ``finally``: once the stream stops, no persisted RDD and no scoped
+    cache is left."""
+    from weatherdatapipeline_spark.sources.catalog import TableCatalog
+    from weatherdatapipeline_spark.sources.synthetic import synthetic_weather
+    from weatherdatapipeline_spark.streaming.jobs import streaming_etl
 
     def persisted_rdds():
-        # localCheckpoint blocks (connected_components' lineage cuts) are
-        # freed by the ContextCleaner once their plan is collected; a
-        # persist() is held until someone unpersists it
+        # localCheckpoint blocks are freed by the ContextCleaner once their
+        # plan is collected; a persist() is held until someone unpersists it
         rdds = spark.sparkContext._jsc.getPersistentRDDs()
         return {k for k in rdds.keySet() if not rdds.get(k).rdd().isLocallyCheckpointed()}
 
     before = persisted_rdds()
     src = str(tmp_path / "src")
-    schema = "doc_id LONG, text STRING"
-    for batch in (
-        [(1, "the quick brown fox jumps over the lazy dog"), (2, "spark engines run jobs")],
-        [(3, "the quick brown fox jumps over the lazy dog"), (4, "zzz yyy xxx www vvv")],
-    ):
-        spark.createDataFrame(batch, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = streaming_corpus_ingest(
-        stream,
-        str(tmp_path / "corpus"),
-        str(tmp_path / "index"),
-        checkpoint=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
+    for start in (1_700_000_000, 1_700_000_300):  # two files -> two micro-batches
+        weather = synthetic_weather(spark, n_batches=1, start_unix=start)
+        weather.coalesce(1).write.mode("append").parquet(src)
+    cat = TableCatalog(spark, str(tmp_path / "cat"))
+    stream = spark.readStream.schema(weather.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    q = streaming_etl(stream, cat, available_now=True, checkpoint=str(tmp_path / "ckpt"))
     q.awaitTermination()
+    assert len(q.recentProgress) >= 2
     q.stop()
-    assert {r["doc_id"] for r in spark.read.parquet(str(tmp_path / "corpus")).collect()} == {
-        1,
-        2,
-        4,
-    }
+    assert cat.read("raw_weather").count() == 20
     assert T._live_scan_caches == []
     assert persisted_rdds() - before == set()

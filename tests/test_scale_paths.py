@@ -1,5 +1,6 @@
-"""Scale-path mechanisms: IVF ANN recall and bucketed-table shuffle
-elimination (the SCALE.md claims, asserted)."""
+"""Scale-path mechanisms: partition and zone-map pruning, shuffle-join
+degradation, dynamic partition pruning, AQE skew splits, runtime bloom
+filters and the kNN join plan (the SCALE.md claims, asserted)."""
 
 from __future__ import annotations
 
@@ -7,31 +8,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from weatherdatapipeline_spark.operators.similarity import cosine_topk, ivf_index, ivf_topk
 from weatherdatapipeline_spark.sources.catalog import TableCatalog
-
-
-def test_ivf_topk_recall_on_clusters(spark):
-    import numpy as np
-
-    rs = np.random.RandomState(11)
-    centers = rs.standard_normal((4, 16)) * 5
-    rows = []
-    for i in range(400):
-        c = centers[i % 4]
-        rows.append((i, [float(x) for x in c + 0.3 * rs.standard_normal(16)]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    assigned, centroids = ivf_index(df, n_clusters=4)
-    q = [float(x) for x in centers[0]]
-    exact = [r["vec_id"] for r in cosine_topk(df, q, k=10).collect()]
-    approx = [r["vec_id"] for r in ivf_topk(assigned, centroids, q, k=10, n_probe=1).collect()]
-    overlap = len(set(exact) & set(approx))
-    assert overlap >= 8, f"IVF recall too low: {overlap}/10"
-    # 1-probe scans ~1/4 of the corpus
-    probed = assigned.filter(F.col("_cluster").isin(
-        [sorted(range(4), key=lambda i: sum((a - b) ** 2 for a, b in zip(centroids[i], q)))[0]]
-    )).count()
-    assert probed < 200
 
 
 def test_partitioned_write_prunes_scan(spark, tmp_path):
@@ -82,28 +59,6 @@ def test_range_sorted_layout_disjoint_files(spark, tmp_path):
         assert hi1 <= lo2  # pairwise disjoint -> zone maps fully selective
 
     assert spark.read.parquet(path).count() == 5000  # nothing lost
-
-
-def test_bucketed_join_eliminates_exchange(spark, tmp_path):
-    cat = TableCatalog(spark, str(tmp_path))
-    orders = spark.range(1000).select(
-        F.col("id").alias("o_orderkey"), (F.col("id") % 7).alias("o_flag")
-    )
-    items = spark.range(3000).select(
-        (F.col("id") % 1000).alias("l_orderkey"), F.col("id").alias("l_id")
-    )
-    cat.write_bucketed(orders, "orders_b", "o_orderkey", n_buckets=8)
-    cat.write_bucketed(
-        items.withColumnRenamed("l_orderkey", "o_orderkey"), "items_b", "o_orderkey", 8
-    )
-    joined = cat.read_table("orders_b").join(cat.read_table("items_b"), "o_orderkey")
-    plan = joined._sc._jvm.PythonSQLUtils.explainString(
-        joined._jdf.queryExecution(), "formatted"
-    )
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, plan
-    assert joined.count() == 3000
-    spark.sql("DROP TABLE IF EXISTS orders_b")
-    spark.sql("DROP TABLE IF EXISTS items_b")
 
 
 def test_keep_canonical_degrades_to_shuffle_join(spark):

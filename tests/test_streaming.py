@@ -101,39 +101,6 @@ def test_stream_stream_join_time_bounded(spark, stream_source):
     assert all((l, l) in got for l in (1, 2, 3, 4, 5))  # self-joins at lag 0
 
 
-def test_stateful_ewma_across_batches(spark, tmp_path_factory):
-    """The EWMA recurrence must carry across micro-batches: two files
-    processed as separate batches (maxFilesPerTrigger=1) yield the same
-    smoothed series as one batch over all rows."""
-    import time as _time
-
-    from weatherdatapipeline_spark.streaming.jobs import ewma_stateful
-
-    path = str(tmp_path_factory.mktemp("ewma_in"))
-    batch1 = [(1, ts("2024-01-01T10:00:00"), "u1", 10.0), (2, ts("2024-01-01T10:01:00"), "u1", 20.0)]
-    batch2 = [(3, ts("2024-01-01T10:02:00"), "u1", 20.0), (4, ts("2024-01-01T10:03:00"), "u1", 0.0)]
-    spark.createDataFrame(batch1, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-    _time.sleep(1.1)  # distinct mtimes → deterministic file order
-    spark.createDataFrame(batch2, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-
-    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(path)
-    out = ewma_stateful(stream.select("user_id", "ts", "value"), "user_id", "ts", "value", alpha=0.5)
-    q = (
-        out.writeStream.format("memory").queryName("ewma_sink")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {
-        r["ts"]: r["ewma"]
-        for r in spark.sql("SELECT * FROM ewma_sink WHERE user_id='u1'").collect()
-    }
-    # recurrence over ALL FOUR rows: 10, 15, 17.5, 8.75 — state crossed batches
-    assert got[ts("2024-01-01T10:00:00")] == 10.0
-    assert got[ts("2024-01-01T10:01:00")] == 15.0
-    assert got[ts("2024-01-01T10:02:00")] == 17.5
-    assert got[ts("2024-01-01T10:03:00")] == 8.75
-
-
 def test_streaming_etl_four_sinks(spark, tmp_path_factory):
     """ST1 end-to-end: the reference's whole per-interval ETL as a
     foreachBatch job — all four sinks written per micro-batch."""
@@ -162,22 +129,19 @@ def test_streaming_etl_four_sinks(spark, tmp_path_factory):
 
 
 def test_stateful_checkpoint_recovery(spark, tmp_path_factory):
-    """Kill a stateful streaming query between batches and restart from its
-    checkpoint: state must resume (EWMA continues the recurrence), not
-    reset — the exactly-once story a 100 TB pipeline depends on."""
-    from weatherdatapipeline_spark.streaming.jobs import ewma_stateful
-
+    """Stop a stateful streaming query between two runs and restart it from
+    its checkpoint: window state must resume, not reset, and neither the
+    first run's input nor its output may repeat — the exactly-once story a
+    100 TB pipeline depends on."""
     src = str(tmp_path_factory.mktemp("ckpt_in"))
     ckpt = str(tmp_path_factory.mktemp("ckpt_state"))
     out_dir = str(tmp_path_factory.mktemp("ckpt_out"))
 
     def run_once():
         stream = spark.readStream.schema(SCHEMA).parquet(src)
-        out = ewma_stateful(
-            stream.select("user_id", "ts", "value"), "user_id", "ts", "value", alpha=0.5
-        )
         q = (
-            out.writeStream.format("parquet")
+            tumbling_stats(stream, "ts", "value", window="5 minutes")
+            .writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
@@ -185,97 +149,32 @@ def test_stateful_checkpoint_recovery(spark, tmp_path_factory):
             .start()
         )
         q.awaitTermination()
+        return sorted(
+            (r["window_start"], r["total_records"], r["avg_value"], r["min_value"], r["max_value"])
+            for r in spark.read.parquet(out_dir).collect()
+        )
 
     spark.createDataFrame(
-        [(1, ts("2024-01-01T10:00:00"), "u1", 10.0), (2, ts("2024-01-01T10:01:00"), "u1", 20.0)],
+        [
+            (1, ts("2024-01-01T09:40:00"), "u1", 5.0),
+            (2, ts("2024-01-01T10:00:00"), "u1", 10.0),
+            (3, ts("2024-01-01T10:01:00"), "u1", 20.0),
+        ],
         SCHEMA,
     ).coalesce(1).write.mode("append").parquet(src)
-    run_once()  # first run: processes batch 1, checkpoints state, stops
+    closed = (ts("2024-01-01T09:40:00"), 1, 5.0, 5.0, 5.0)
+    # watermark 09:51: the 09:40 window is emitted, the 10:00 one stays in state
+    assert run_once() == [closed]
 
     spark.createDataFrame(
-        [(3, ts("2024-01-01T10:02:00"), "u1", 20.0)], SCHEMA
+        [(4, ts("2024-01-01T10:02:00"), "u1", 30.0), (5, ts("2024-01-01T10:30:00"), "u1", 1.0)],
+        SCHEMA,
     ).coalesce(1).write.mode("append").parquet(src)
-    run_once()  # restart from checkpoint: must see ONLY the new file
-
-    got = {r["ts"]: r["ewma"] for r in spark.read.parquet(out_dir).collect()}
-    assert len(got) == 3  # no reprocessing duplicates (exactly-once sink rows)
-    # recurrence continued across the restart: 10 -> 15 -> 17.5 (NOT 20.0,
-    # which is what a reset state would produce for the third row)
-    assert got[ts("2024-01-01T10:02:00")] == 17.5
-
-
-def test_rocksdb_state_store_parity(spark, stream_source):
-    """Same stateful plan, RocksDB-backed state: identical emissions.
-
-    At 100 TB the HDFS-backed store's on-heap state is the scaling wall;
-    this pins that the provider swap is semantics-preserving."""
-    from weatherdatapipeline_spark.streaming.jobs import (
-        ROCKSDB_PROVIDER,
-        use_rocksdb_state,
-    )
-
-    use_rocksdb_state(spark)
-    try:
-        assert (
-            spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-            == ROCKSDB_PROVIDER
-        )
-        out = session_counts(stream_source(), "ts", "user_id", gap="30 minutes")
-        run_available_now_to_memory(out, "rocksdb_session_sink", "append")
-        rows = spark.sql(
-            "SELECT user_id, cnt FROM rocksdb_session_sink ORDER BY user_id, cnt"
-        ).collect()
-        # matches test_st6_session_windows exactly (default-provider run)
-        assert [(r["user_id"], r["cnt"]) for r in rows] == [("u1", 4), ("u2", 1)]
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_streaming_corpus_ingest_neardup(spark, tmp_path_factory):
-    """Streaming corpus front door: micro-batches probe the persisted
-    MinHash band index; only novel docs land in the corpus, and the index
-    grows with the admitted docs so later batches dedup against them."""
-    from weatherdatapipeline_spark.streaming.jobs import streaming_corpus_ingest
-
-    src = str(tmp_path_factory.mktemp("docs_src"))
-    corpus = str(tmp_path_factory.mktemp("corpus_out")) + "/docs"
-    index = str(tmp_path_factory.mktemp("corpus_idx")) + "/bands"
-    ckpt = str(tmp_path_factory.mktemp("corpus_ckpt"))
-    schema = "doc_id LONG, text STRING"
-
-    batch1 = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "completely different text about spark engines here"),
-    ]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(src)
-
-    def drain():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = streaming_corpus_ingest(
-            stream, corpus, index, checkpoint=ckpt, available_now=True
-        )
-        q.awaitTermination()
-
-    drain()
-    assert {r["doc_id"] for r in spark.read.parquet(corpus).collect()} == {1, 2}
-
-    batch2 = [
-        (10, "The  quick brown FOX jumps over the lazy dog"),  # dup of 1
-        (11, "zzz yyy xxx www vvv uuu ttt sss"),               # novel
-        (12, "zzz yyy xxx www vvv uuu ttt sss"),               # intra-batch dup
-    ]
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(src)
-    drain()  # restart from checkpoint: batch1 files are NOT reprocessed
-
-    got = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert got == {1, 2, 11}
-    # the index holds band rows for exactly the admitted docs
-    idx_ids = {r["doc_id"] for r in spark.read.parquet(index).collect()}
-    assert idx_ids == {1, 2, 11}
+    # restart: only the new file is read, and 10:30 closes the 10:00 window.
+    # It counts the rows of both runs once each: a reset state would give 1
+    # row, a replayed first file 5, and a restart from scratch would emit
+    # the 09:40 window twice.
+    assert run_once() == [closed, (ts("2024-01-01T10:00:00"), 3, 20.0, 10.0, 30.0)]
 
 
 def test_stage_events_stream_invalidates_on_source_change(spark, tmp_path):
@@ -317,152 +216,6 @@ def test_stage_events_stream_invalidates_on_source_change(spark, tmp_path):
     shutil.rmtree(path, ignore_errors=True)
 
 
-def test_streaming_cms_sketch_merges_batches(spark, tmp_path_factory):
-    """The stored sketch after two drained micro-batches must equal the
-    batch-built sketch over the CONCATENATED data (cell-wise merge
-    property), stay bounded at depth*width rows, and point-estimates
-    must upper-bound exact counts."""
-    from weatherdatapipeline_spark.operators.stats import cms_estimate, count_min_sketch
-    from weatherdatapipeline_spark.streaming.jobs import streaming_cms_sketch
-
-    src = str(tmp_path_factory.mktemp("cms_src"))
-    sk = str(tmp_path_factory.mktemp("cms_sk")) + "/sketch"
-    ckpt = str(tmp_path_factory.mktemp("cms_ckpt"))
-    schema = "item STRING"
-    b1 = [("a",)] * 5 + [("b",)] * 3
-    b2 = [("a",)] * 2 + [("c",)] * 7
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = streaming_cms_sketch(
-        stream, sk, checkpoint=ckpt, depth=4, width=64, available_now=True
-    )
-    q.awaitTermination()
-
-    stored = spark.read.parquet(sk)
-    assert stored.count() <= 4 * 64
-    ref = count_min_sketch(
-        spark.createDataFrame(b1 + b2, schema), depth=4, width=64
-    )
-    got = {(r["row"], r["bucket"]): r["cnt"] for r in stored.collect()}
-    want = {(r["row"], r["bucket"]): r["cnt"] for r in ref.collect()}
-    assert got == want
-    probes = spark.createDataFrame([("a",), ("b",), ("c",)], schema)
-    est = {r["item"]: r["cms_count"] for r in
-           cms_estimate(stored.select("row", "bucket", "cnt"), probes, width=64).collect()}
-    assert est["a"] >= 7 and est["b"] >= 3 and est["c"] >= 7
-
-
-def _have_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-def test_token_quota_gate_plan_and_schema(spark):
-    """transformWithStateInPandas plan construction works without the
-    optional protobuf runtime dep: streaming flag + output schema."""
-    from weatherdatapipeline_spark.streaming.jobs import token_quota_gate_stateful
-
-    doc_schema = "source string, ts timestamp, doc_id long, n_tokens long"
-    stream = (
-        spark.readStream.format("rate").load()
-        .select(
-            F.lit("web").alias("source"),
-            F.col("timestamp").alias("ts"),
-            F.col("value").alias("doc_id"),
-            (F.col("value") % 100).alias("n_tokens"),
-        )
-    )
-    out = token_quota_gate_stateful(stream, "source", "ts", "doc_id", "n_tokens", 100)
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == [
-        "source", "ts", "doc_id", "n_tokens", "cum_tokens", "admitted",
-    ]
-    assert "TransformWithStateInPySpark" in out._jdf.queryExecution().analyzed().toString()
-
-
-@pytest.mark.skipif(
-    not _have_protobuf(),
-    reason="protobuf not installed: transformWithState state protocol unavailable",
-)
-def test_token_quota_gate_transformwithstate(spark, tmp_path_factory):
-    """Spark 4 StatefulProcessor v2 (transformWithStateInPandas): the
-    per-source token-budget gate must (a) carry the cumulative count
-    across micro-batches and (b) equal the batch prefix rule
-    sum(tokens) OVER (PARTITION BY source ORDER BY ts, doc) <= budget."""
-    import time as _time
-
-    from weatherdatapipeline_spark.streaming.jobs import (
-        token_quota_gate_stateful,
-        use_rocksdb_state,
-    )
-
-    doc_schema = "source string, ts timestamp, doc_id long, n_tokens long"
-    path = str(tmp_path_factory.mktemp("quota_in"))
-    b1 = [
-        ("web", ts("2024-01-01T10:00:00"), 1, 40),
-        ("web", ts("2024-01-01T10:01:00"), 2, 50),
-        ("books", ts("2024-01-01T10:00:30"), 3, 90),
-    ]
-    b2 = [
-        ("web", ts("2024-01-01T10:02:00"), 4, 20),   # 40+50+20 > 100 -> reject
-        ("web", ts("2024-01-01T10:03:00"), 5, 5),    # prefix rule: still rejected
-        ("books", ts("2024-01-01T10:02:30"), 6, 10), # 90+10 <= 100 -> admit
-    ]
-    spark.createDataFrame(b1, doc_schema).coalesce(1).write.mode("append").parquet(path)
-    _time.sleep(1.1)  # distinct mtimes -> deterministic batch order
-    spark.createDataFrame(b2, doc_schema).coalesce(1).write.mode("append").parquet(path)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)  # transformWithState requires RocksDB
-    try:
-        stream = spark.readStream.schema(doc_schema).option("maxFilesPerTrigger", 1).parquet(path)
-        out = token_quota_gate_stateful(
-            stream, "source", "ts", "doc_id", "n_tokens", budget=100
-        )
-        q = (
-            out.writeStream.format("memory").queryName("quota_sink")
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        got = {
-            r["doc_id"]: (r["cum_tokens"], r["admitted"])
-            for r in spark.sql("SELECT * FROM quota_sink").collect()
-        }
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    assert got == {
-        1: (40, 1), 2: (90, 1), 3: (90, 1),
-        4: (110, 0), 5: (115, 0), 6: (100, 1),
-    }
-
-    # batch twin: identical admitted set from a window cumulative sum
-    from pyspark.sql import Window
-
-    allrows = spark.createDataFrame(b1 + b2, doc_schema)
-    w = Window.partitionBy("source").orderBy("ts", "doc_id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    batch = allrows.select(
-        "doc_id",
-        F.sum("n_tokens").over(w).alias("cum_tokens"),
-        (F.sum("n_tokens").over(w) <= 100).cast("int").alias("admitted"),
-    )
-    batch_map = {r["doc_id"]: (r["cum_tokens"], r["admitted"]) for r in batch.collect()}
-    assert batch_map == got
-
-
 def test_streaming_funnel_steps_ordered_conversion(spark, tmp_path_factory):
     """Planted funnel: one user converts in order, one does the steps out
     of order, one stops at view. The first 24h window closes when the
@@ -502,153 +255,3 @@ def test_streaming_funnel_steps_ordered_conversion(spark, tmp_path_factory):
     assert o["t_click"] < o["t_view"]  # order predicate must reject
     assert got["viewer"]["t_click"] is None
     assert got["viewer"]["t_purchase"] is None
-
-
-def test_streaming_ivf_maintenance_drift_refresh(spark, tmp_path_factory):
-    """IVF index maintenance (VERDICT r13 item 6): batch 1 seeds the
-    quantizer and appends below the drift bound; batch 2 pushes a
-    cluster's member mean past the bound, firing a re-seed (version
-    bump, centroids := member means, full reassignment); batch 3 lands
-    under the bound again; a checkpoint-wiped replay is a no-op (the
-    anti-join idempotence idiom)."""
-    import shutil
-
-    from weatherdatapipeline_spark.streaming.jobs import streaming_ivf_maintenance
-
-    src = str(tmp_path_factory.mktemp("ivf_src"))
-    index = str(tmp_path_factory.mktemp("ivf_idx")) + "/index"
-    cents = str(tmp_path_factory.mktemp("ivf_cent")) + "/centroids"
-    stats = str(tmp_path_factory.mktemp("ivf_stats")) + "/stats"
-    ckpt = str(tmp_path_factory.mktemp("ivf_ckpt"))
-    schema = "vec_id LONG, embedding ARRAY<DOUBLE>"
-
-    def drain():
-        stream = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        q = streaming_ivf_maintenance(
-            stream, index, cents, stats,
-            n_clusters=2, drift_q6_bound=100_000,
-            checkpoint=ckpt, available_now=True,
-        )
-        q.awaitTermination()
-
-    batch1 = [
-        (1, [1.0, 0.0]),  # seed -> centroid 0
-        (2, [0.0, 1.0]),  # seed -> centroid 1
-        (3, [0.9, 0.1]),  # joins cluster 0
-        (4, [0.1, 0.9]),  # joins cluster 1
-    ]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(src)
-    drain()
-    c0 = spark.read.parquet(cents)
-    assert c0.agg(F.max("version")).collect()[0][0] == 0  # drift 70711 < bound
-    assert spark.read.parquet(index).count() == 4
-
-    # drifted arrivals: cluster-0 mean moves to (0.9, 0.2333) -> drift
-    # ~253859 q6 > bound -> refresh fires
-    batch2 = [(5, [0.8, 0.6]), (6, [0.6, 0.8])]
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(src)
-    drain()
-    cv = spark.read.parquet(cents)
-    assert cv.agg(F.max("version")).collect()[0][0] == 1
-    got = {
-        r["centroid_id"]: r["centroid_vec"]
-        for r in cv.filter(F.col("version") == 1).collect()
-    }
-    exp0 = [(1.0 + 0.9 + 0.8) / 3, (0.0 + 0.1 + 0.6) / 3]
-    exp1 = [(0.0 + 0.1 + 0.6) / 3, (1.0 + 0.9 + 0.8) / 3]
-    assert got[0] == pytest.approx(exp0, abs=1e-9)
-    assert got[1] == pytest.approx(exp1, abs=1e-9)
-    idx = spark.read.parquet(index)
-    assert idx.filter(F.col("version") != 1).count() == 0  # fully reassigned
-    sizes = {r["centroid_id"]: r["n"] for r in
-             idx.groupBy("centroid_id").agg(F.count("*").alias("n")).collect()}
-    assert sizes == {0: 3, 1: 3}
-
-    # under-bound arrival: no new version
-    batch3 = [(7, [0.9, 0.2])]
-    spark.createDataFrame(batch3, schema).coalesce(1).write.mode("append").parquet(src)
-    drain()
-    assert spark.read.parquet(cents).agg(F.max("version")).collect()[0][0] == 1
-    assert spark.read.parquet(index).count() == 7
-
-    # wipe the checkpoint: every file replays, but every id is already
-    # indexed -> the anti-join makes the replay a structural no-op
-    before = sorted(
-        (r["vec_id"], r["centroid_id"], r["version"])
-        for r in spark.read.parquet(index).collect()
-    )
-    shutil.rmtree(ckpt)
-    drain()
-    after = sorted(
-        (r["vec_id"], r["centroid_id"], r["version"])
-        for r in spark.read.parquet(index).collect()
-    )
-    assert after == before
-    assert spark.read.parquet(cents).agg(F.max("version")).collect()[0][0] == 1
-
-
-def test_streaming_ivf_refresh_matches_batch_twin(spark, tmp_path_factory):
-    """Stream==batch parity for the refreshed index: one availableNow
-    batch over the sf0.001 embeddings with bound=0 (always refresh) must
-    land exactly where the batch recomputation lands — same seed
-    quantizer (8 lowest vec_ids = vec_id<8 here), centroids == member
-    means, index == reassignment to those means."""
-    from weatherdatapipeline_spark.operators.similarity import assign_to_centroids
-    from weatherdatapipeline_spark.queries import _t
-    from weatherdatapipeline_spark.streaming.jobs import streaming_ivf_maintenance
-
-    emb = _t(spark, "/root/testdata/sf0.001", "embeddings")
-    src = str(tmp_path_factory.mktemp("ivf2_src"))
-    emb.coalesce(1).write.mode("overwrite").parquet(src)
-    index = str(tmp_path_factory.mktemp("ivf2_idx")) + "/index"
-    cents = str(tmp_path_factory.mktemp("ivf2_cent")) + "/centroids"
-    stats = str(tmp_path_factory.mktemp("ivf2_stats")) + "/stats"
-    ckpt = str(tmp_path_factory.mktemp("ivf2_ckpt"))
-
-    stream = spark.readStream.schema(
-        "vec_id LONG, embedding ARRAY<DOUBLE>, label LONG"
-    ).parquet(src)
-    q = streaming_ivf_maintenance(
-        stream.select("vec_id", "embedding"), index, cents, stats,
-        n_clusters=8, drift_q6_bound=0, checkpoint=ckpt, available_now=True,
-    )
-    q.awaitTermination()
-
-    assert spark.read.parquet(cents).agg(F.max("version")).collect()[0][0] == 1
-
-    # batch twin: seed assign -> DECIMAL member means -> reassign
-    dec = "decimal(38,12)"
-    seeds = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid_vec"),
-    )
-    a0 = assign_to_centroids(emb, seeds).join(emb.select("vec_id", "embedding"), "vec_id")
-    means = (
-        a0.select("centroid_id", F.posexplode("embedding").alias("dim", "x"))
-        .groupBy("centroid_id", "dim")
-        .agg(F.sum(F.col("x").cast("double").cast(dec)).alias("s"),
-             F.count(F.lit(1)).alias("n"))
-        .withColumn("m", F.col("s").cast("double") / F.col("n"))
-        .groupBy("centroid_id")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("p"))
-        .select("centroid_id", F.transform("p", lambda e: e["m"]).alias("centroid_vec"))
-    )
-    got_c = {
-        r["centroid_id"]: r["centroid_vec"]
-        for r in spark.read.parquet(cents).filter(F.col("version") == 1).collect()
-    }
-    exp_c = {r["centroid_id"]: r["centroid_vec"] for r in means.collect()}
-    assert set(got_c) == set(exp_c)
-    for k in exp_c:
-        assert got_c[k] == pytest.approx(exp_c[k], abs=1e-12)
-
-    exp_assign = {
-        r["vec_id"]: r["centroid_id"]
-        for r in assign_to_centroids(emb, means).collect()
-    }
-    got_assign = {
-        r["vec_id"]: r["centroid_id"] for r in spark.read.parquet(index).collect()
-    }
-    assert got_assign == exp_assign

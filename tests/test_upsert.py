@@ -75,13 +75,6 @@ def test_vacuum_keeps_referenced_old_dirs(spark, table):
     assert _rows(table.read()) == {("d1", 1, "A"), ("d2", 2, "b")}
 
 
-def test_delete_where_scoped(spark, table):
-    table.merge(_df(spark, [(1, "d1", "a"), (2, "d1", "b"), (3, "d2", "c")]))
-    table.delete_where("val = 'a'", partitions=["d1"])
-    assert _rows(table.read()) == {("d1", 2, "b"), ("d2", 3, "c")}
-    assert table._manifest()["d2"] == 0  # d2 untouched
-
-
 def test_unpartitioned_merge(spark, tmp_path):
     t = UpsertTable(spark, str(tmp_path), "u", key="id")
     df = lambda rows: spark.createDataFrame(rows, "id INT, val STRING")
@@ -129,17 +122,6 @@ def test_read_changes_null_rows_not_phantom_updates(spark, table):
     table.merge(_df(spark, [(1, "d1", "now-set"), (3, "d1", None)]))
     got = {(r["id"], r["_change_type"]) for r in table.read_changes(1).collect()}
     assert got == {(1, "update_postimage")}
-
-
-def test_delete_where_null_predicate_keeps_rows(spark, table):
-    """SQL DELETE removes only predicate-TRUE rows; NULL predicate keeps.
-
-    Regression: NOT(pred) evaluates NULL for NULL-bearing rows and the
-    filter dropped them — silently deleting rows Delta would keep.
-    """
-    table.merge(_df(spark, [(1, "d1", "a"), (2, "d1", None), (3, "d1", "c")]))
-    table.delete_where("val = 'a'", partitions=["d1"])
-    assert _rows(table.read()) == {("d1", 2, None), ("d1", 3, "c")}
 
 
 def test_schema_evolution_merge(spark, table):

@@ -8,15 +8,12 @@ Semantics preserved:
 - versions are integers; "latest" = max version (registry.py:41)
 - stage promotion: new best model → Staging (training.py:113-119),
   explicit promote → Production (registry.py:31-46)
-- best-run selection: order runs by a metric, take the top
-  (registry.py:23-28)
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import SparkSession
@@ -127,14 +124,6 @@ class LocalRegistry:
             json.dump(asdict(target), f, indent=2)
         return target
 
-    def best_version(self, name: str, metric: str, ascending: bool = True) -> ModelVersion | None:
-        """Best run by metric (registry.py:23-28: lower-is-better for
-        error metrics, higher for accuracy/f1)."""
-        vs = [v for v in self.versions(name) if metric in v.metrics]
-        if not vs:
-            return None
-        return sorted(vs, key=lambda v: v.metrics[metric], reverse=not ascending)[0]
-
     def load(self, spark, mv: ModelVersion):
         """Rehydrate a TrainedModels bundle from a registry entry. The Spark
         ML models are read from disk only when neither ``log`` nor an
@@ -166,8 +155,3 @@ class LocalRegistry:
             metrics=dict(mv.metrics),
             feature_config=dict(mv.feature_config),
         )
-
-    def delete(self, name: str) -> None:
-        base = os.path.join(self.root, name)
-        shutil.rmtree(base, ignore_errors=True)
-        self._models = {p: m for p, m in self._models.items() if os.path.dirname(p) != base}

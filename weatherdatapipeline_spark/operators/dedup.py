@@ -338,33 +338,6 @@ def containment_near_duplicates(
     )
 
 
-def dedup_incremental(
-    new_docs: DataFrame,
-    seen_fingerprints: DataFrame,
-    text_col: str = "text",
-    fp_col: str = "fingerprint",
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental exact dedup for an append-only corpus: returns
-    (novel_rows, updated_fingerprint_index). New docs are dropped if their
-    normalized fingerprint already exists in the index OR duplicates
-    another new doc (kept: the least full-row struct per fingerprint — a
-    sort-aggregate over the INCOMING BATCH only, which is small by
-    construction; the corpus-sized index is touched only by the anti join).
-
-    At scale the index is a bucketed table on `fingerprint`, so the anti
-    join is shuffle-free against each incoming batch.
-    """
-    fp = fingerprint_md5(F.col(text_col)).alias(fp_col)
-    tagged = new_docs.withColumn(fp_col, fp)
-    fresh = tagged.join(seen_fingerprints, fp_col, "left_anti")
-    first_ids = fresh.groupBy(fp_col).agg(
-        F.min(F.struct(*[F.col(c) for c in new_docs.columns])).alias("_row")
-    )
-    novel = first_ids.select("_row.*", F.col(fp_col))
-    updated = seen_fingerprints.select(fp_col).unionByName(novel.select(fp_col))
-    return novel.drop(fp_col), updated
-
-
 def contamination_check(
     corpus: DataFrame,
     eval_docs: DataFrame,
@@ -447,37 +420,6 @@ def decontaminate(
         corpus.join(hits, id_col, "left")
         .withColumn("n_eval_hits", F.coalesce(F.col("n_eval_hits"), F.lit(0)))
         .filter(F.col("n_eval_hits") <= max_hits)
-    )
-
-
-def minhash_signatures(
-    documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-) -> DataFrame:
-    """MinHash signature per document.
-
-    Permutation i is ``xxhash64(shingle, i)``; the signature element is the
-    min over the doc's shingles — one exploded aggregate computing all
-    ``num_perm`` mins in a single shuffle (map-side combined), not
-    ``num_perm`` passes.
-    """
-    # no .distinct() before the aggregate: word_shingles is per-doc
-    # distinct already, and duplicates cannot change a min — skipping it
-    # deletes a full shuffle of the exploded shingle stream. spread()
-    # first: the 64 per-shingle xxhash64 mins run map-side (partial agg)
-    # and would otherwise execute inside a 1-task scan stage.
-    exploded = spread(documents, id_col).select(
-        F.col(id_col), F.explode(word_shingles(text_col, n)).alias("shingle")
-    )
-    mins = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}") for i in range(num_perm)
-    ]
-    sig = exploded.groupBy(id_col).agg(*mins)
-    return sig.select(
-        id_col, F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("signature")
     )
 
 
@@ -841,9 +783,7 @@ def dedup_incremental_neardup(
     Cost per batch: signature pass over the BATCH only + an equi-join
     against the index on (band, bucket) — the corpus-sized index is never
     re-scanned beyond that join (bucketed storage makes it shuffle-free).
-    The exact-fingerprint variant of this contract is
-    ``dedup_incremental``; like LSH candidate generation everywhere, this
-    trades a false-positive rate (tunable via bands x rows) for never
+    Like LSH candidate generation everywhere, this trades a false-positive rate (tunable via bands x rows) for never
     doing exact verification against corpus text.
     """
     if batch_index is not None:
@@ -912,8 +852,7 @@ def simhash(
     """
     if hash_fn is None:
         hash_fn = F.xxhash64
-    # spread() first (r14): same single-file-scan story as
-    # minhash_signatures — the explode + token hash + 63 partial vote
+    # spread() first (r14): the explode + token hash + 63 partial vote
     # sums otherwise all run inside a 1-task scan stage
     toks = spread(documents, id_col).select(
         F.col(id_col),

@@ -221,33 +221,6 @@ def covariance_pairs(
     return agg.select("i", "j", cov.alias("cov"))
 
 
-def pca_projection_matrix(embeddings: DataFrame, n_components: int, vec_col: str = "embedding"):
-    """Top-``n_components`` PCA basis from the distributed covariance:
-    the d x d covariance (corpus-size-independent, via
-    ``covariance_pairs``) is collected — d^2 scalars, NOT data — and
-    eigendecomposed on the driver with numpy. Sign is fixed per
-    component (largest-|coeff| entry made positive) so results are
-    deterministic across BLAS builds. Returns (components, eigvals):
-    components is (n_components, d) row-major.
-    """
-    import numpy as np
-
-    rows = covariance_pairs(embeddings, vec_col, round_digits=None).collect()
-    if not rows:
-        raise ValueError("pca_projection_matrix: embeddings table is empty")
-    d = max(r["j"] for r in rows) + 1
-    C = np.zeros((d, d))
-    for r in rows:
-        C[r["i"], r["j"]] = C[r["j"], r["i"]] = r["cov"]
-    vals, vecs = np.linalg.eigh(C)
-    order = np.argsort(vals)[::-1][:n_components]
-    comps = vecs[:, order].T
-    for c in comps:
-        if c[np.argmax(np.abs(c))] < 0:
-            c *= -1
-    return comps, vals[order]
-
-
 def pca_power_scores(
     embeddings: DataFrame,
     vec_col: str = "embedding",
@@ -257,9 +230,8 @@ def pca_power_scores(
     out_round: int = 6,
 ) -> DataFrame:
     """Top-principal-component score per vector via RELATIONAL power
-    iteration with matrix squaring — the fully engine-portable PCA path
-    that complements ``pca_projection_matrix`` (driver eigh): every
-    step is a DataFrame op, so a SQL engine can replay the identical
+    iteration with matrix squaring — the fully engine-portable PCA path:
+    every step is a DataFrame op, so a SQL engine can replay the identical
     trajectory and differential-check the result (queries.py::
     pca_top_component_scores and its generated DuckDB oracle).
 
@@ -565,7 +537,7 @@ def kmeans_lloyd(
     - UPDATE is one posexplode + one (cluster, dim) aggregate — k*d
       output cells regardless of corpus size, map-side combined — then a
       k*d-scalar collect to the driver for the next round's literals
-      (bounded small state, the same contract as pca_projection_matrix).
+      (bounded small state).
     A cluster that loses all members keeps its previous centroid
     (deterministic; no RNG re-seeding).
 

@@ -4,8 +4,8 @@ iterators (``mapInPandas``).
 
 What is REAL here (and tested): the mapInPandas plumbing (batch
 iteration, output schema, column passthrough), partition sizing guidance,
-the PCM16 audio DSP, the planted PNG/PCM corpora with their dHash and
-audio fingerprints, and the PNG image decode itself: ``operators/png.py``
+the planted PNG/PCM corpora with their dHash and audio fingerprints, and
+the PNG image decode itself: ``operators/png.py``
 is a pure-stdlib PNG codec (zlib inflate + the five spec filters) and the
 only image backend, so the real decode/convert/resize arm executes with
 no imaging library installed. Non-PNG decode raises
@@ -35,7 +35,6 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -109,68 +108,6 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
             )
 
     return media.mapInPandas(fn, FEATURE_SCHEMA)
-
-
-PCM_FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("rms", FloatType(), True),
-        StructField("zcr", FloatType(), True),
-        StructField("peak", FloatType(), True),
-    ]
-)
-
-
-def audio_frame_features(
-    media: DataFrame,
-    sample_rate: int = 16_000,
-    frame_ms: int = 20,
-    blob_col: str = "blob",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """REAL audio DSP over inline PCM16 blobs — no codec library needed,
-    so unlike the image decode path nothing here is stubbed: frame the
-    signal into ``frame_ms`` windows and emit per-frame RMS energy,
-    zero-crossing rate, and peak amplitude (all normalized to [-1, 1]
-    full scale). These three are the standard cheap features for
-    silence/music/speech screening before an expensive model pass.
-
-    mapInPandas keeps it Arrow-batched and shuffle-free; each input row
-    fans out to n_frames output rows (map-side explode, no exchange).
-    The trailing partial frame is dropped (fixed-length frames only) —
-    callers wanting it must pad upstream.
-    """
-    import numpy as np
-
-    frame_len = max(int(sample_rate * frame_ms / 1000), 1)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "media_id": [], "frame_idx": [], "rms": [], "zcr": [], "peak": []
-            }
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                if blob is None:
-                    continue
-                x = np.frombuffer(bytes(blob), dtype="<i2").astype(np.float64)
-                x /= 32768.0
-                n_frames = len(x) // frame_len
-                for i in range(n_frames):
-                    fr = x[i * frame_len : (i + 1) * frame_len]
-                    out["media_id"].append(int(mid))
-                    out["frame_idx"].append(i)
-                    out["rms"].append(float(np.sqrt(np.mean(fr * fr))))
-                    # zero crossings / frame length (sign(0) counts as +)
-                    s = np.where(fr >= 0, 1, -1)
-                    out["zcr"].append(float(np.mean(s[1:] != s[:-1])))
-                    out["peak"].append(float(np.max(np.abs(fr))))
-            yield pd.DataFrame(out)
-
-    return (
-        media.select(id_col, blob_col)
-        .mapInPandas(fn, PCM_FRAME_SCHEMA)
-    )
 
 
 PNG_BLOB_SCHEMA = StructType(
@@ -352,8 +289,7 @@ def planted_pcm_corpus(
     max_doc_id: int = 1024,
 ) -> DataFrame:
     """Pack one REAL PCM16-LE audio blob per document (stdlib ``struct``
-    byte packing — the same wire format ``audio_frame_features``
-    consumes) from the deterministic planted waveform. Map-only
+    byte packing) from the deterministic planted waveform. Map-only
     mapInPandas; participation capped at ``doc_id < max_doc_id`` so the
     planted pair mass stays bounded at any scale factor."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -384,8 +320,7 @@ def audio_fingerprint(
     media: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
 ) -> DataFrame:
     """63-bit acoustic fingerprint per PCM16 clip: decode the raw bytes
-    (numpy ``<i2`` view — REAL byte-level decode, same path as
-    ``audio_frame_features``), frame into 64 windows of 125 samples,
+    (numpy ``<i2`` view — REAL byte-level decode), frame into 64 windows of 125 samples,
     compute INTEGER frame energies sum(x^2), and set bit k when
     energy[k+1] > energy[k] — the energy-delta sign pattern at the heart
     of Haitsma-Kalker/Chromaprint-style audio hashing, reduced to one

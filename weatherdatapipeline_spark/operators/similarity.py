@@ -255,65 +255,6 @@ def lsh_topk(
     )
 
 
-def ivf_index(
-    embeddings: DataFrame,
-    n_clusters: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-):
-    """IVF coarse quantizer: k-means centroids + per-row cluster
-    assignment. Returns (assigned DataFrame with `_cluster`, centroids
-    list). The at-scale analogue writes `_cluster` at ingest and
-    partitions the table by it, making probes partition-pruned scans.
-
-    Unlike sign-LSH, the quantizer adapts to the corpus distribution —
-    the right choice when embeddings are clustered (real-world corpora),
-    while LSH needs no training pass.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    vecs = embeddings.withColumn("_v", array_to_vector(F.col(vec_col)))
-    model = KMeans(k=n_clusters, seed=seed, featuresCol="_v", predictionCol="_cluster").fit(
-        vecs
-    )
-    assigned = model.transform(vecs).drop("_v")
-    centroids = [[float(x) for x in c] for c in model.clusterCenters()]
-    return assigned, centroids
-
-
-def ivf_topk(
-    assigned: DataFrame,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: score only the ``n_probe`` clusters whose
-    centroids are closest to the query (driver-side centroid ranking —
-    centroid count is tiny by construction)."""
-    import math
-
-    def dist(a, b):
-        return math.sqrt(sum((x - y) ** 2 for x, y in zip(a, b)))
-
-    probe = sorted(range(len(centroids)), key=lambda i: dist(centroids[i], query_vec))[
-        :n_probe
-    ]
-    cand = assigned.filter(F.col("_cluster").isin(probe))
-    q = darray(query_vec)
-    return (
-        cand.select(
-            F.col(id_col), F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cosine")
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
 def assign_to_centroids(
     embeddings: DataFrame,
     centroids: DataFrame,
@@ -324,8 +265,7 @@ def assign_to_centroids(
 ) -> DataFrame:
     """Nearest-centroid (max-cosine) assignment: the IVF coarse-quantizer
     assignment step with an EXPLICIT centroid table instead of a trained
-    KMeans model — deterministic, so it joins the oracle-checked surface
-    (``ivf_index`` keeps the trained path).
+    KMeans model — deterministic, so it joins the oracle-checked surface.
 
     Broadcast the centroid table (tiny by construction), score every
     (vector, centroid) pair, keep the argmax per vector via row_number

@@ -10,9 +10,7 @@ while every key still processes in parallel.
 
 Scale: groups are hash-partitioned; each group must fit one task's
 memory (per-city/per-user series do). Arrow moves columnar batches —
-no per-row Python overhead. The streaming twin
-(`streaming.jobs.ewma_stateful`) carries the recurrence across
-micro-batches with applyInPandasWithState.
+no per-row Python overhead.
 """
 
 from __future__ import annotations

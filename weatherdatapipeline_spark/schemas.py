@@ -10,14 +10,12 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 # Flat weather observation — the reference's core record
@@ -70,57 +68,5 @@ WEATHER_SOURCE_JSON = StructType(
         StructField("wind", StructType([StructField("speed", DoubleType())])),
         StructField("sys", StructType([StructField("country", StringType())])),
         StructField("dt", LongType()),
-    ]
-)
-
-# Post-load record shape: WEATHER_RAW + load-time metadata
-# (reference load.py:31-32, :57-58).
-WEATHER_ENRICHED = StructType(
-    WEATHER_RAW.fields
-    + [
-        StructField("event_time", TimestampType(), True),
-        StructField("inserted_at", TimestampType(), False),
-        StructField("batch_id", StringType(), False),
-        StructField("is_current", BooleanType(), True),
-    ]
-)
-
-# Per-batch aggregate summary (reference load.py:93-113; FIXTURES.md A3).
-WEATHER_STATISTICS = StructType(
-    [
-        StructField("batch_id", StringType(), False),
-        StructField("stat_time", TimestampType(), False),
-        StructField("total_records", LongType(), False),
-        StructField("cities_count", LongType(), False),
-        StructField("avg_temperature", DoubleType(), True),
-        StructField("max_temperature", DoubleType(), True),
-        StructField("min_temperature", DoubleType(), True),
-        StructField("avg_humidity", DoubleType(), True),
-        StructField("cities", ArrayType(StringType()), True),
-        StructField(
-            "temperature_distribution",
-            StructType(
-                [
-                    StructField("very_cold", LongType()),
-                    StructField("cold", LongType()),
-                    StructField("cool", LongType()),
-                    StructField("moderate", LongType()),
-                    StructField("warm", LongType()),
-                    StructField("hot", LongType()),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
-# Scored rows (reference main.py:132-141, predict.py:112-115; FIXTURES.md A4).
-PREDICTIONS = StructType(
-    WEATHER_RAW.fields
-    + [
-        StructField("pred_temperature", DoubleType(), True),
-        StructField("pred_condition", StringType(), True),
-        StructField("pred_type", StringType(), False),
-        StructField("inserted_at", TimestampType(), False),
     ]
 )

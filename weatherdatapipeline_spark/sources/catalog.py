@@ -141,24 +141,6 @@ class TableCatalog:
             .parquet(self.path(name))
         )
 
-    def write_bucketed(
-        self, df: DataFrame, name: str, bucket_col: str, n_buckets: int = 32
-    ) -> None:
-        """Bucketed managed table: pre-shuffles rows into ``n_buckets`` by
-        hash(bucket_col) at write time, with per-bucket sort. A join or
-        aggregation on ``bucket_col`` between two tables bucketed the same
-        way runs WITHOUT a shuffle — at 100 TB this deletes the recurring
-        exchange on a fact-fact join key (pay the shuffle once at ingest,
-        never per query). See tests/test_scale_paths.py for the
-        no-Exchange plan assertion."""
-        (
-            df.write.bucketBy(n_buckets, bucket_col)
-            .sortBy(bucket_col)
-            .mode("overwrite")
-            .option("path", self.path(name))
-            .saveAsTable(name)
-        )
-
     def write_range_sorted(
         self, df: DataFrame, name: str, order_col: str, n_ranges: int = 32
     ) -> None:
@@ -176,51 +158,6 @@ class TableCatalog:
         (
             df.repartitionByRange(n_ranges, F.col(order_col))
             .sortWithinPartitions(order_col)
-            .write.mode("overwrite")
-            .parquet(self.path(name))
-        )
-
-    def write_zordered(
-        self, df: DataFrame, name: str, col_a: str, col_b: str,
-        bits: int = 16, n_ranges: int = 32,
-    ) -> None:
-        """Z-order (Morton-curve) layout on TWO columns — the lakehouse
-        data-skipping trick (Delta's Z-ORDER BY) for workloads that
-        filter on either or both of two dimensions: rank each column to
-        a ``bits``-bit integer (percent_rank * 2^bits — rank-based, so
-        arbitrary numeric distributions interleave uniformly), then
-        interleave the bits into one Morton key and range-sort by it.
-        Each file then covers a small RECTANGLE in (a, b) space, so
-        parquet min/max zone maps prune on BOTH columns — a plain sort
-        on one column leaves the other's min/max spanning everything.
-
-        The two percent_rank windows are partition-less by necessity
-        (global ranking) — acceptable as a WRITE-TIME layout job, the
-        same trade `repartitionByRange`'s sampling makes; never use
-        this shape in a query path. At true scale swap the exact ranks
-        for approx-percentile bucket assignment (map-only)."""
-        from pyspark.sql import Window as _W
-
-        ra = F.floor(
-            F.percent_rank().over(_W.orderBy(col_a)) * ((1 << bits) - 1)
-        ).cast("long")
-        rb = F.floor(
-            F.percent_rank().over(_W.orderBy(col_b)) * ((1 << bits) - 1)
-        ).cast("long")
-        # interleave bit i of a into 2i+1, of b into 2i (classic Morton)
-        z = None
-        for i in range(bits):
-            abit = F.shiftright(F.col("_ra"), i) % 2
-            bbit = F.shiftright(F.col("_rb"), i) % 2
-            term = (abit * F.lit(1 << (2 * i + 1))) + (bbit * F.lit(1 << (2 * i)))
-            z = term if z is None else (z + term)
-        (
-            df.withColumn("_ra", ra)
-            .withColumn("_rb", rb)
-            .withColumn("_z", z)
-            .repartitionByRange(n_ranges, F.col("_z"))
-            .sortWithinPartitions("_z")
-            .drop("_ra", "_rb", "_z")
             .write.mode("overwrite")
             .parquet(self.path(name))
         )
@@ -254,19 +191,6 @@ class TableCatalog:
         os.replace(tmp, path)
         return n_files
 
-    def read_table(self, name: str) -> DataFrame:
-        """Read a managed (bucketed) table — bucket metadata lives in the
-        session catalog, so use the table name, not the path."""
-        return self.spark.table(name)
-
-    def write_csv(self, df: DataFrame, name: str) -> None:
-        """S3 CSV sink (reference save_to_csv, load.py:8-20)."""
-        df.write.option("header", True).mode("overwrite").csv(self.path(name))
-
-    def read_csv(self, name: str, schema) -> DataFrame:
-        """S4 CSV scan with declared schema (no inference pass)."""
-        return self.spark.read.schema(schema).option("header", True).csv(self.path(name))
-
     def write_jsonl(self, df: DataFrame, name: str, compression: str | None = "gzip") -> None:
         """JSON-lines sink — the interchange format of training-data lakes
         (one JSON object per line; splittable when uncompressed, so prefer
@@ -276,18 +200,3 @@ class TableCatalog:
         if compression:
             w = w.option("compression", compression)
         w.json(self.path(name))
-
-    def read_jsonl(self, df_schema, name: str) -> DataFrame:
-        """JSONL scan with a declared schema: no inference pass over the
-        data (at 100 TB an inference pass is a full extra scan), malformed
-        lines land in `_corrupt_record` instead of failing the job
-        (PERMISSIVE default)."""
-        return self.spark.read.schema(df_schema).json(self.path(name))
-
-    def write_orc(self, df: DataFrame, name: str) -> None:
-        """ORC sink (built into Spark; zlib default) — columnar alternative
-        when the downstream reader is Hive/Trino-side."""
-        df.write.mode("overwrite").orc(self.path(name))
-
-    def read_orc(self, name: str) -> DataFrame:
-        return self.spark.read.orc(self.path(name))

@@ -243,36 +243,6 @@ class UpsertTable:
         self._commit_meta(meta)
         return version
 
-    def delete_where(self, predicate: str, partitions: list[str] | None = None) -> int:
-        """Delta ``DELETE WHERE``: rewrite the affected partitions without
-        the matching rows. ``partitions`` scopes the rewrite (recommended —
-        an unscoped delete on a partitioned table rewrites every
-        partition)."""
-        meta = self._load_meta()
-        if meta is None:
-            raise FileNotFoundError(f"empty upsert table at {self.table_root}")
-        version = meta["version"] + 1
-        manifest = dict(self._manifest())
-        # SQL DELETE removes only predicate-TRUE rows; a NULL predicate must
-        # KEEP the row. Bare NOT(NULL)=NULL would silently drop it.
-        keep = f"NOT coalesce(({predicate}), false)"
-        if self.partition_col is None:
-            merged = self.read().filter(keep)
-            self._write_version(merged, version)
-            new_manifest = {"__ALL__": version}
-        else:
-            parts = list(manifest) if partitions is None else [str(p) for p in partitions]
-            current = self._read_partitions(manifest, parts)
-            if current is None:
-                return meta["version"]
-            merged = current.filter(keep)
-            self._write_version(merged, version)
-            new_manifest = {**manifest, **{p: version for p in parts if p in manifest}}
-        meta["version"] = version
-        meta["history"][str(version)] = new_manifest
-        self._commit_meta(meta)
-        return version
-
     def read_changes(self, since_version: int, to_version: int | None = None) -> DataFrame:
         """Change-data-feed read: rows inserted or updated after
         ``since_version`` up to ``to_version`` (default current), tagged
@@ -377,8 +347,8 @@ def maintain_daily_rollup(
     - emptiness is probed via ``table.current_version`` — a blanket
       except around read() would turn any transient storage error into
       "first batch" and silently replace accumulated history with
-      batch-only partials (the same pitfall streaming_cms_sketch
-      documents); real read errors now raise and fail the batch.
+      batch-only partials; real read errors now raise and fail the
+      batch.
     - rows with a NULL ``key_col`` are EXCLUDED (a NULL partition value
       round-trips as __HIVE_DEFAULT_PARTITION__ on disk but 'None' in
       the manifest — a corrupting mismatch; route NULLs explicitly

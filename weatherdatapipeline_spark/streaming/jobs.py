@@ -13,10 +13,15 @@ capabilities the reference lacks outright:
   reference appends unconditionally (load.py:42): re-polls duplicate rows
 - ST6 sliding and session windows
 
+Every job is an ordinary DataFrame plan run on a stream — one engine for
+batch and stream, no second hand-written stream-operator surface. The
+scheduled ETL (``streaming_etl``) hands each micro-batch to the batch
+loader ``sources.catalog.load_batch``, so its sinks write through the same
+TableCatalog paths the batch engine reads.
+
 State-at-scale notes: every stateful op here keys its state by a bounded
 domain (city / user_id) and carries a watermark so state is evicted —
-unbounded state is the streaming analogue of a cartesian join. foreachBatch
-upserts write through the same TableCatalog paths the batch engine reads.
+unbounded state is the streaming analogue of a cartesian join.
 """
 
 from __future__ import annotations
@@ -31,29 +36,6 @@ from pyspark.sql.streaming import DataStreamWriter
 def micro_batch_trigger(writer: DataStreamWriter, minutes: int = 5) -> DataStreamWriter:
     """ST1: the reference's 5-minute cadence (scheduler.py:49)."""
     return writer.trigger(processingTime=f"{minutes} minutes")
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def use_rocksdb_state(spark, changelog: bool = True) -> None:
-    """Switch stateful streaming to the RocksDB state store.
-
-    The default HDFS-backed store keeps every key in executor heap — fine
-    for the test corpus, fatal at 100 TB where latest-per-key /
-    session-window state spans hundreds of millions of keys. RocksDB spills
-    state to local SSD (off-heap, bounded memory) and, with changelog
-    checkpointing, uploads only the per-batch delta instead of re-snapshot-
-    ting the full store. State semantics are identical — asserted by the
-    RocksDB/HDFS parity test in tests/test_streaming.py.
-    """
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true" if changelog else "false",
-    )
 
 
 def dedup_late_data(
@@ -176,62 +158,6 @@ def stream_stream_join(
     return l.join(r, cond, "inner")
 
 
-def ewma_stateful(
-    stream: DataFrame,
-    key: str,
-    ts_col: str,
-    value_col: str,
-    alpha: float = 0.3,
-) -> DataFrame:
-    """Custom stateful streaming operator via applyInPandasWithState: the
-    EWMA recurrence carried ACROSS micro-batches — per-key state is one
-    float (the last smoothed value), updated each batch.
-
-    This is the template for any custom sequential operator Structured
-    Streaming lacks (SURVEY §2.9/§2.10): state is explicit, bounded (one
-    struct per key), and the per-batch work is an Arrow-batched pandas fold.
-    Assumes per-key event-time order across batches (true for replayed
-    logs and per-entity ordered sources); out-of-order input would need
-    event buffering in state until the watermark closes.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    out_schema = StructType(
-        [
-            stream.schema[key],
-            StructField(ts_col, TimestampType()),
-            StructField(value_col, DoubleType()),
-            StructField("ewma", DoubleType()),
-        ]
-    )
-    state_schema = StructType([StructField("last", DoubleType())])
-
-    def fn(key_tuple, pdf_iter, state: GroupState):
-        last = state.get[0] if state.exists else None
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(ts_col)
-            out = []
-            for v in pdf[value_col]:
-                last = float(v) if last is None else alpha * float(v) + (1 - alpha) * last
-                out.append(last)
-            pdf = pdf.copy()
-            pdf["ewma"] = out
-            yield pdf[[c.name for c in out_schema.fields[:-1]] + ["ewma"]].assign(
-                **{key: key_tuple[0]}
-            )
-        state.update((last,))
-
-    return stream.groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
 def streaming_etl(
     stream: DataFrame,
     catalog,
@@ -265,280 +191,6 @@ def streaming_etl(
             batch_df.unpersist()
 
     writer = stream.writeStream.foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_minutes:
-        writer = micro_batch_trigger(writer, trigger_minutes)
-    return writer.start()
-
-
-def streaming_corpus_ingest(
-    doc_stream: DataFrame,
-    corpus_path: str,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint: str | None = None,
-    available_now: bool = False,
-    trigger_minutes: int | None = None,
-):
-    """Continuously ingest a document stream into a training corpus with
-    incremental NEAR-dup dedup: each micro-batch probes the persisted
-    MinHash band index (operators/dedup.py), appends only novel docs to
-    ``corpus_path``, and appends the admitted docs' band rows to
-    ``index_path`` — the streaming front door of a training-data lake.
-
-    Scale: per batch, signature cost is linear in the BATCH; the
-    corpus-sized index participates only through the (band, bucket)
-    equi-join (bucket the index table on (band, bucket) in deployment to
-    make that probe shuffle-free). Exactly-once across restarts comes from
-    the checkpointed foreachBatch; re-processed batches re-probe the index
-    their previous run extended, so replayed docs dedup against themselves
-    — idempotent appends without a transaction log.
-    """
-    import os
-
-    from ..operators.dedup import dedup_incremental_neardup, minhash_band_index
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if os.path.isdir(index_path) and any(
-            f.endswith(".parquet") for f in os.listdir(index_path)
-        ):
-            index = spark.read.parquet(index_path)
-        else:
-            index = minhash_band_index(
-                batch_df.limit(0), id_col, text_col
-            )  # empty, right schema
-        # the sink owns the batch's band index: built and persisted here,
-        # released with `novel` once this batch is written, so no cache
-        # outlives its micro-batch
-        batch_index = minhash_band_index(batch_df, id_col, text_col).persist()
-        novel, updated = dedup_incremental_neardup(
-            batch_df, index, id_col, text_col, batch_index=batch_index
-        )
-        novel = novel.persist()
-        try:
-            n = novel.count()
-            if n:
-                novel.write.mode("append").parquet(corpus_path)
-                # append only THIS batch's admitted band rows (updated =
-                # old index ∪ new rows; subtracting by provenance is a
-                # narrow join on the admitted ids)
-                new_rows = updated.join(
-                    novel.select(id_col).distinct(), id_col, "left_semi"
-                )
-                new_rows.write.mode("append").parquet(index_path)
-        finally:
-            novel.unpersist()
-            batch_index.unpersist()
-
-    writer = doc_stream.writeStream.foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_minutes:
-        writer = micro_batch_trigger(writer, trigger_minutes)
-    return writer.start()
-
-
-def streaming_ivf_maintenance(
-    vec_stream: DataFrame,
-    index_path: str,
-    centroids_path: str,
-    stats_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 8,
-    drift_q6_bound: int = 100_000,
-    checkpoint: str | None = None,
-    available_now: bool = False,
-    trigger_minutes: int | None = None,
-):
-    """Streaming ANN-index maintenance (VERDICT r13 item 6): the IVF
-    twin of ``streaming_corpus_ingest``. Each micro-batch assigns new
-    vectors to the CURRENT coarse-quantizer centroids and appends them
-    to the index; when the monitored centroid drift — the L2 distance
-    between each cluster's stored centroid and the running mean of its
-    assigned members — exceeds ``drift_q6_bound`` (units: 1e-6), the
-    job re-seeds the quantizer (one Lloyd step: centroids := member
-    means), REASSIGNS the index, and bumps the version. Without this,
-    continuous ingest silently degrades probe recall as the corpus
-    distribution slides away from the centroids it was bucketed under
-    (the batch `embedding_centroid_drift` query measures the same
-    phenomenon; `ivf_refresh_decision` is this job's strict-oracled
-    decision twin).
-
-    Scale design: per batch the work is batch-linear — assignment is a
-    broadcast of k centroids, and the drift monitor reads the STATS
-    table (per-cluster per-dim component sums, k*d rows per batch,
-    DECIMAL-accumulated), never the corpus-sized index. Only a fired
-    refresh touches the full index (one reassignment pass + one stats
-    rebuild), which is the rare amortized event by construction.
-    Exactly-once across restarts: the checkpointed foreachBatch plus an
-    anti-join on already-indexed ids makes replayed batches no-ops
-    (same idempotence idiom as the corpus ingest).
-    """
-    import os
-
-    from ..operators.similarity import assign_to_centroids
-
-    dec = "decimal(38,12)"
-
-    def _has_parquet(path: str) -> bool:
-        return os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        )
-
-    def _write_stats(spark, assigned_vecs: DataFrame, version: int) -> None:
-        """Append per-cluster per-dim component sums for these rows."""
-        comp = assigned_vecs.select(
-            "centroid_id", F.posexplode(vec_col).alias("dim", "x")
-        )
-        stats = comp.groupBy("centroid_id", "dim").agg(
-            F.sum(F.col("x").cast("double").cast(dec)).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        stats.withColumn("version", F.lit(version).cast("long")).write.mode(
-            "append"
-        ).parquet(stats_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, vec_col)
-
-        if _has_parquet(centroids_path):
-            cents = spark.read.parquet(centroids_path)
-            version = cents.agg(F.max("version")).collect()[0][0]
-            cents = cents.filter(F.col("version") == version).select(
-                "centroid_id", "centroid_vec"
-            )
-        else:
-            # deterministic seed: the n_clusters lowest-id vectors of the
-            # first batch (bounded k-row driver closure, like the batch
-            # twin's vec_id < k seed)
-            from pyspark.sql import Window as _W
-
-            version = 0
-            seed = batch.orderBy(id_col).limit(n_clusters)
-            # global window over <= k rows (the limit already bounds it)
-            cents = seed.select(
-                (F.row_number().over(_W.orderBy(id_col)) - 1)
-                .cast("long")
-                .alias("centroid_id"),
-                F.col(vec_col).alias("centroid_vec"),
-            )
-            cents.withColumn("version", F.lit(0).cast("long")).write.mode(
-                "overwrite"
-            ).parquet(centroids_path)
-            cents = spark.read.parquet(centroids_path).select(
-                "centroid_id", "centroid_vec"
-            )
-
-        # idempotent replay: drop ids the index already holds
-        if _has_parquet(index_path):
-            existing = spark.read.parquet(index_path).select(id_col)
-            novel = batch.join(existing, id_col, "left_anti")
-        else:
-            novel = batch
-        # localCheckpoint, not persist: the plan reads index_path (the
-        # anti-join) and the next action runs AFTER the index append — a
-        # cache miss would lazily recompute novel as EMPTY against the
-        # just-appended files (persist() does not truncate lineage)
-        assigned = (
-            assign_to_centroids(novel, cents, id_col=id_col, vec_col=vec_col)
-            .join(novel, id_col)
-            .localCheckpoint(eager=True)
-        )
-        if assigned.isEmpty():
-            return
-        assigned.select(id_col, vec_col, "centroid_id").withColumn(
-            "version", F.lit(version).cast("long")
-        ).write.mode("append").parquet(index_path)
-        _write_stats(spark, assigned, version)
-
-        # drift monitor over the stats table (k*d-bounded, never the index)
-        stats = (
-            spark.read.parquet(stats_path)
-            .filter(F.col("version") == version)
-            .groupBy("centroid_id", "dim")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-        )
-        cexp = spark.read.parquet(centroids_path).filter(
-            F.col("version") == version
-        ).select("centroid_id", F.posexplode("centroid_vec").alias("dim", "c"))
-        delta = F.col("s").cast("double") / F.col("n") - F.col("c")
-        drift = (
-            stats.join(cexp, ["centroid_id", "dim"])
-            .select("centroid_id", (delta * delta).cast(dec).alias("d2"))
-            .groupBy("centroid_id")
-            .agg(
-                F.round(F.sqrt(F.sum("d2").cast("double")) * 1e6)
-                .cast("long")
-                .alias("drift_q6")
-            )
-        )
-        worst = drift.agg(F.max("drift_q6")).collect()[0][0]
-        if worst is None or worst <= drift_q6_bound:
-            return
-
-        # refresh: one Lloyd step from the stats means, reassign the index
-        new_version = version + 1
-        new_cents = (
-            stats.withColumn("m", F.col("s").cast("double") / F.col("n"))
-            .groupBy("centroid_id")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("p"))
-            .select(
-                "centroid_id",
-                F.transform("p", lambda e: e["m"]).alias("centroid_vec"),
-            )
-        )
-        # same lineage-truncation rationale: new_cents derives from
-        # stats_path, which this branch appends to further down
-        new_cents = new_cents.localCheckpoint(eager=True)
-        try:
-            index = spark.read.parquet(index_path).select(id_col, vec_col)
-            reassigned = assign_to_centroids(
-                index, new_cents, id_col=id_col, vec_col=vec_col
-            ).join(index, id_col)
-            staged = reassigned.select(id_col, vec_col, "centroid_id").withColumn(
-                "version", F.lit(new_version).cast("long")
-            )
-            # localCheckpoint severs the lineage to index_path BEFORE the
-            # overwrite of that same path (an evicted cache partition
-            # would otherwise recompute from the half-overwritten source;
-            # a real lake would write-to-sibling-and-swap instead)
-            staged = staged.localCheckpoint(eager=True)
-            staged.write.mode("overwrite").parquet(index_path)
-            new_cents.withColumn(
-                "version", F.lit(new_version).cast("long")
-            ).write.mode("append").parquet(centroids_path)
-            fresh = spark.read.parquet(index_path).filter(
-                F.col("version") == new_version
-            )
-            # rebuild stats from the reassigned index at the new version
-            comp = fresh.select(
-                "centroid_id", F.posexplode(vec_col).alias("dim", "x")
-            )
-            comp.groupBy("centroid_id", "dim").agg(
-                F.sum(F.col("x").cast("double").cast(dec)).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            ).withColumn("version", F.lit(new_version).cast("long")).write.mode(
-                "append"
-            ).parquet(stats_path)
-        finally:
-            # release the checkpoint blocks (localCheckpoint stores at
-            # the persist layer; unpersist is the matching release)
-            new_cents.unpersist()
-
-    writer = vec_stream.writeStream.foreachBatch(sink)
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
     if available_now:
@@ -598,180 +250,6 @@ def run_available_now_to_memory(
         if ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
     return q
-
-
-def _is_replayed_batch(prior: DataFrame, batch_id: int, checkpoint: str | None) -> bool:
-    """Replay guard for the read-modify-write CMS sketch sink: a batch is
-    a genuine replay — already merged, skip it — only when the stored
-    ``_last_batch_id`` is >= this batch AND the store was written under
-    the SAME checkpoint. A stream restarted
-    with a NEW checkpoint against an existing store resets batch ids to
-    0, and those batches carry fresh data that must merge (ADVICE r9:
-    the old id-only guard silently dropped them). Stores written before
-    ``_run_id`` existed keep the old id-only semantics."""
-    row = prior.agg(
-        F.max("_last_batch_id").alias("last"),
-        *(
-            [F.max("_run_id").alias("run")]
-            if "_run_id" in prior.columns
-            else [F.lit(None).cast("string").alias("run")]
-        ),
-    ).collect()[0]
-    same_run = "_run_id" not in prior.columns or row["run"] == (checkpoint or "")
-    return same_run and row["last"] is not None and row["last"] >= batch_id
-
-
-def streaming_cms_sketch(
-    item_stream: DataFrame,
-    sketch_path: str,
-    checkpoint: str | None = None,
-    item_col: str = "item",
-    depth: int = 4,
-    width: int = 256,
-    available_now: bool = False,
-):
-    """Maintain a Count-Min sketch over a stream: each micro-batch's
-    partial sketch (operators/stats.py::count_min_sketch — depth*width
-    cells, bounded) MERGES into the stored sketch by cell-wise addition,
-    the defining property that makes CMS the standard streaming
-    frequency structure. State is the ~depth*width-row parquet table —
-    constant-size regardless of how much data has streamed through — so
-    a restart resumes from the stored cells plus the checkpointed source
-    offsets.
-
-    foreachBatch because the merge is read-modify-write of the sketch
-    table (overwrite of a bounded table, not an append). Exactly-once
-    per micro-batch: the overwrite is idempotent only across distinct
-    batches, so the sketch table carries ``_last_batch_id`` and a
-    replayed batch (at-least-once delivery after a crash) is skipped
-    rather than double-counted."""
-    from ..operators.stats import count_min_sketch
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        partial = count_min_sketch(batch_df, item_col=item_col, depth=depth, width=width)
-        # existence is probed explicitly: a blanket except around the read
-        # would turn ANY transient storage error into "first batch" and
-        # silently reset every accumulated count. A genuinely unreadable
-        # stored sketch must raise and fail the batch (the checkpoint
-        # retries it), never zero the state.
-        import os
-
-        if os.path.exists(sketch_path):
-            prior = spark.read.parquet(sketch_path)
-            if _is_replayed_batch(prior, batch_id, checkpoint):
-                return  # replayed batch: already merged
-            merged = (
-                prior.select("row", "bucket", "cnt")
-                .unionByName(partial)
-                .groupBy("row", "bucket")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-        else:  # first batch: nothing stored yet
-            merged = partial
-        out = merged.withColumn("_last_batch_id", F.lit(batch_id)).withColumn(
-            "_run_id", F.lit(checkpoint or "")
-        )
-        # bounded table: collect-and-rewrite avoids reading the file being
-        # overwritten (depth*width rows by construction)
-        rows = out.collect()
-        spark.createDataFrame(rows, out.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(sketch_path)
-
-    writer = item_stream.writeStream.foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def token_quota_gate_stateful(
-    stream: DataFrame,
-    key: str,
-    ts_col: str,
-    doc_col: str,
-    tokens_col: str,
-    budget: int,
-) -> DataFrame:
-    """Streaming per-source token-budget gate via the Spark 4
-    StatefulProcessor v2 API (transformWithStateInPandas): per-key
-    ValueState carries the cumulative token count across micro-batches;
-    a document is ADMITTED while the running prefix total (itself
-    included) stays within ``budget`` and flagged rejected after — the
-    PREFIX rule, so the batch twin is exactly `sum(tokens) OVER
-    (PARTITION BY key ORDER BY ts, doc) <= budget` (asserted by the
-    stream==batch equivalence test). The corpus-ingest shape every
-    budgeted pretraining mix needs at the streaming edge: stop taking
-    from a source the moment its quota fills, keep an auditable
-    rejected stream.
-
-    Scale: state is ONE long per source key; rows sort by (ts, doc)
-    inside each batch so admission is schedule-deterministic given the
-    batch sequence. transformWithState requires the RocksDB state store
-    (use_rocksdb_state) — which is also the 100 TB-correct choice.
-
-    Optional-dep gate: EXECUTING the query needs the `protobuf` package
-    (Spark's TransformWithState Python state-server protocol), absent
-    from this sandbox — plan construction and schema are tested
-    unconditionally, the live run is a skip-marked test that activates
-    wherever protobuf is installed (same contract as the PIL image
-    path).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            stream.schema[key],
-            stream.schema[ts_col],
-            stream.schema[doc_col],
-            StructField(tokens_col, LongType()),
-            StructField("cum_tokens", LongType()),
-            StructField("admitted", IntegerType()),
-        ]
-    )
-
-    class _QuotaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._cum = handle.getValueState("cum", "total LONG")
-
-        def handleInputRows(self, key_tuple, rows, timer_values):
-            total = int(self._cum.get()[0]) if self._cum.exists() else 0
-            for pdf in rows:
-                pdf = pdf.sort_values([ts_col, doc_col])
-                toks = pdf[tokens_col].astype("int64")
-                cums = total + toks.cumsum()
-                out = pdf.copy()
-                out[tokens_col] = toks
-                out["cum_tokens"] = cums
-                out["admitted"] = (cums <= budget).astype("int32")
-                out[key] = key_tuple[0]
-                if len(cums):
-                    total = int(cums.iloc[-1])
-                yield out[[f.name for f in out_schema.fields]]
-            self._cum.update((total,))
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=_QuotaProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="None",
-    )
 
 
 def windowed_type_counts(
