@@ -11,7 +11,10 @@ from collections import Counter
 import duckdb
 import pytest
 
-from weatherdatapipeline_spark.queries import ORACLES, QUERIES
+from weatherdatapipeline_spark.queries import _DOW_MON0, ORACLES, QUERIES, _t
+
+# oracle texts made portable: Monday = 0, Sunday = 1 plus BIGINT, DECIMAL -> DOUBLE
+PORTABLE = ["james_stein_type_dow_means", "k_anonymity_audit", "mutual_information_type_value"]
 
 SMOKE = [
     "q1_pricing_summary",
@@ -64,6 +67,7 @@ SMOKE = [
     "capture_recapture_users",
     "mh_common_odds_ratio",
     "diebold_mariano_forecasts",
+    *PORTABLE,
 ]
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -152,6 +156,13 @@ def test_register_sql_binds_each_builds_own_scale(spark, sf_dir):
         assert _strict_problems(QUERIES[name](spark, d), d, name) == []
 
 
+@pytest.mark.parametrize("name", PORTABLE)
+def test_portable_oracle_text_matches_strict(spark, sf_dir, name):
+    """The strict compare sees what the smoke check above cannot: the
+    BIGINT width and the DOUBLE of a rounded DECIMAL."""
+    assert _strict_problems(QUERIES[name](spark, sf_dir), sf_dir, name) == []
+
+
 def test_register_sql_frame_keeps_its_tables_after_a_later_build(spark, sf_dir):
     name = "q1_pricing_summary"
     other = os.path.join(os.path.dirname(sf_dir), "sf0.01")
@@ -159,3 +170,33 @@ def test_register_sql_frame_keeps_its_tables_after_a_later_build(spark, sf_dir):
     QUERIES[name](spark, other)  # re-binds the same view names to other files
     assert not spark.catalog.tableExists("lineitem")  # views dropped after analysis
     assert _strict_problems(first, sf_dir, name) == []
+
+
+def test_dow_mon0_matches_duckdb_dayofweek_on_both_engines(spark, tmp_path):
+    """Seven consecutive days at the first and the last microsecond, plus
+    a NULL: _DOW_MON0 and the weekend flag built on it give DuckDB's
+    Monday = 0 numbering and its Sunday/Saturday weekend on Spark and on
+    DuckDB alike."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    days = [dt.datetime(2024, 1, 1) + dt.timedelta(days=d) for d in range(7)]
+    ts = [t for d in days for t in (d, d + dt.timedelta(days=1, microseconds=-1))]
+    ts.append(None)
+    table = pa.table({"id": pa.array(range(len(ts)), pa.int64()),
+                      "ts": pa.array(ts, pa.timestamp("us"))})
+    pq.write_table(table, str(tmp_path / "events.parquet"))
+    cols = ["id", f"{_DOW_MON0} AS mon0", f"{_DOW_MON0} >= 5 AS weekend"]
+    got = {r["id"]: (r["mon0"], r["weekend"])
+           for r in _t(spark, str(tmp_path), "events").selectExpr(*cols).collect()}
+    rows = duckdb.connect().execute(
+        f"SELECT {', '.join(cols)}, (dayofweek(ts) + 6) % 7, dayofweek(ts) IN (0, 6) "
+        f"FROM '{tmp_path}/events.parquet'"
+    ).fetchall()
+    want = {i: (m, w) for i, _, _, m, w in rows}
+    assert {i: (m, w) for i, m, w, _, _ in rows} == want
+    assert got == want
+    assert [want[i][0] for i in range(0, 14, 2)] == list(range(7))
+    assert want[len(ts) - 1] == (None, None)

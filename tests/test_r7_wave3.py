@@ -127,20 +127,20 @@ def test_t_closeness_uniform_vs_polarized(spark, tmp_path):
     TVD = 0 everywhere. Polarized case: one class entirely in band 0,
     the other entirely in band 9, 50/50 global -> TVD = 0.5 for both
     and the t=0.2 audit flags them."""
-    from weatherdatapipeline_spark.queries import t_closeness_audit
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows = [
         (i, "2024-01-01T00:00:00", 1, 5.0, t)
         for i, t in enumerate(["click", "view", "click", "view"])
     ]
     _write_events(spark, str(tmp_path), rows)
-    for r in t_closeness_audit(spark, str(tmp_path)).collect():
+    for r in QUERIES["t_closeness_audit"](spark, str(tmp_path)).collect():
         assert r["tvd"] == 0.0 and r["violates_t"] == 0
 
     rows = [(i, "2024-01-01T00:00:00", 1, 5.0, "click") for i in range(4)]
     rows += [(10 + i, "2024-01-01T00:00:00", 1, 95.0, "view") for i in range(4)]
     _write_events(spark, str(tmp_path), rows)
-    got = t_closeness_audit(spark, str(tmp_path)).collect()
+    got = QUERIES["t_closeness_audit"](spark, str(tmp_path)).collect()
     assert len(got) == 2
     for r in got:
         assert r["tvd"] == 0.5 and r["violates_t"] == 1
@@ -175,7 +175,7 @@ def test_logistic_newton_zero_signal_and_separation(spark, tmp_path):
     """Balanced symmetric classes: every Newton gradient is 0 so betas
     stay (0,0), p = 0.5 everywhere and log_loss = ln 2. Separated
     classes: 4 steps push b1 strongly positive and accuracy to 1."""
-    from weatherdatapipeline_spark.queries import logistic_newton_purchase
+    from weatherdatapipeline_spark.queries import QUERIES
 
     rows = []
     eid = 0
@@ -183,14 +183,14 @@ def test_logistic_newton_zero_signal_and_separation(spark, tmp_path):
         rows.append((eid, "2024-01-01T00:00:00", 1, v, "purchase")); eid += 1
         rows.append((eid, "2024-01-01T00:00:00", 1, v, "click")); eid += 1
     _write_events(spark, str(tmp_path), rows)
-    got = logistic_newton_purchase(spark, str(tmp_path)).collect()[0]
+    got = QUERIES["logistic_newton_purchase"](spark, str(tmp_path)).collect()[0]
     assert got["b0"] == 0.0 and got["b1"] == 0.0
     assert got["log_loss"] == round(0.6931471805599453, 6)
 
     rows = [(i, "2024-01-01T00:00:00", 1, 100.0 + i, "purchase") for i in range(5)]
     rows += [(10 + i, "2024-01-01T00:00:00", 1, 1.0 + i, "click") for i in range(5)]
     _write_events(spark, str(tmp_path), rows)
-    got = logistic_newton_purchase(spark, str(tmp_path)).collect()[0]
+    got = QUERIES["logistic_newton_purchase"](spark, str(tmp_path)).collect()[0]
     assert got["b1"] > 1.0
     assert got["accuracy"] == 1.0
 

@@ -210,7 +210,7 @@ def test_simpsons_paradox_flags_planted_reversal(spark, tmp_path):
     (drives the pooled sign positive); 'flip' has weekend < weekday."""
     import datetime as _dt
 
-    from weatherdatapipeline_spark.queries import simpsons_paradox_screen
+    from weatherdatapipeline_spark.queries import QUERIES
 
     sat, mon = _dt.datetime(2024, 1, 6), _dt.datetime(2024, 1, 8)
     rows = []
@@ -225,7 +225,7 @@ def test_simpsons_paradox_flags_planted_reversal(spark, tmp_path):
         "event_type STRING, props STRING",
     )
     df.write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    got = {r["event_type"]: r for r in simpsons_paradox_screen(spark, str(tmp_path)).collect()}
+    got = {r["event_type"]: r for r in QUERIES["simpsons_paradox_screen"](spark, str(tmp_path)).collect()}
     assert got["big"]["pooled_q4"] > 0  # pooled: weekends look great
     assert got["big"]["sign_reversed"] == 0
     assert got["flip"]["effect_q4"] == -4 * 10_000  # 1 - 5
